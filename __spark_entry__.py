@@ -44,6 +44,15 @@ from htrc_feature_reader_spark.operators import (
     term_page_freqs,
     tokens_per_page,
 )
+from htrc_feature_reader_spark.operators.hashing import (
+    affine_coeffs,
+    affine_hash_sql,
+    dual_hash_sql,
+    ngram_strings_sql,
+    rolling_hash_sql,
+    simhash_coeffs,
+    token_window_ids_sql,
+)
 from htrc_feature_reader_spark.operators.text import (
     BPE_ISH_PATTERN,
     normalized_fingerprint,
@@ -100,18 +109,20 @@ _SQL_TOKENS = f"""
 
 # deterministic MinHash / SimHash constants (must match
 # operators/dedup.py:minhash_signatures / simhash with seed=42)
-_MH_P = (1 << 31) - 1
 _MH_SEED = 42
 _MH_N = 8
-_MH_COEF = [
-    (2 * ((_MH_SEED * 1_000_003 + i * 7_919) % (_MH_P // 2)) + 1,
-     (_MH_SEED * 104_729 + i * 52_361) % _MH_P)
-    for i in range(_MH_N)
-]
+# per-doc MinHash columns h0..h7 over shingle ids ``sid``
+_SQL_MH_HASHES = ", ".join(
+    f"min({affine_hash_sql('sid', a, b)}) AS h{i}"
+    for i, (a, b) in enumerate(affine_coeffs(_MH_N, _MH_SEED))
+)
+# LSH collision of docs a and b: equal in any of 4 bands of 2 rows
+_SQL_MH_BANDS = " OR ".join(
+    f"(a.h{2*b} = b.h{2*b} AND a.h{2*b+1} = b.h{2*b+1})" for b in range(4)
+)
 _SH_BITS = 16
 _SH_PAIR_BANDS = 4
-_SH_A = 2 * ((_MH_SEED * 2_654_435_761) % (1 << 30)) + 1
-_SH_B = _MH_SEED * 97 + 13
+_SH_A, _SH_B = simhash_coeffs(_MH_SEED)
 
 # one oracle for all three as-of physical variants (union-window, merge
 # strategy, salted) — they must agree cell-for-cell by construction
@@ -139,10 +150,8 @@ _ANN_TOPK_SQL = """
   WHERE rnk <= 5
 """
 
-_SQL_SHINGLES = """
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(range(0, greatest(len(l) - 2, 0)),
-                               i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
+_SQL_SHINGLES = f"""
+  SELECT DISTINCT doc_id, unnest({ngram_strings_sql('l', 3)}) AS shingle
   FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
 """
 
@@ -638,7 +647,7 @@ def q_dedup_clusters(spark, sf_dir):
 def _simhash_sigs(spark, sf_dir):
     """Shared fingerprint pipeline for q_simhash and q_simhash_pairs —
     both must stay bit-identical for the one _simhash_sql oracle."""
-    from htrc_feature_reader_spark.operators.text import rolling_hash
+    from htrc_feature_reader_spark.operators.hashing import rolling_hash
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
@@ -1048,7 +1057,7 @@ def q_take_per_source(spark, sf_dir):
 
 
 def _take_per_source_sql() -> str:
-    from htrc_feature_reader_spark.operators.packing import key_hash_sql
+    from htrc_feature_reader_spark.operators.hashing import key_hash_sql
 
     h = key_hash_sql("doc_id", 13)
     return f"""
@@ -1326,22 +1335,15 @@ def _incremental_neardup_sql() -> str:
     """Oracle for q_incremental_near_dup: the one-shot predecessor rule
     over the SAME integer minhash family (no stop-shingle filter — see
     the query docstring), replayed corpus-wide in DuckDB."""
-    hash_exprs = ", ".join(
-        f"min(({a} * (((sid + 1) * 2654435761) % {_MH_P}) + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_COEF)
-    )
-    band_conds = " OR ".join(
-        f"(a.h{2*b} = b.h{2*b} AND a.h{2*b+1} = b.h{2*b+1})" for b in range(4)
-    )
     match_sum = " + ".join(f"CAST(a.h{i} = b.h{i} AS INT)" for i in range(_MH_N))
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH sh AS ({_SQL_SHINGLES}),
       ds AS (SELECT DISTINCT doc_id, {sid} AS sid FROM sh),
-      mh AS (SELECT doc_id, {hash_exprs} FROM ds GROUP BY doc_id),
+      mh AS (SELECT doc_id, {_SQL_MH_HASHES} FROM ds GROUP BY doc_id),
       dropped AS (
         SELECT DISTINCT b.doc_id
-        FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({band_conds})
+        FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({_SQL_MH_BANDS})
         WHERE ({match_sum}) / {_MH_N}.0 >= 0.25)
       SELECT CAST(d.doc_id AS BIGINT) AS doc_id
       FROM documents d ANTI JOIN dropped USING (doc_id)
@@ -1366,7 +1368,7 @@ def q_decontaminate(spark, sf_dir):
 
 
 def _decontaminate_sql() -> str:
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH tr AS ({_SQL_SHINGLES}),
       ev AS (
@@ -1441,7 +1443,7 @@ def q_boilerplate(spark, sf_dir):
 
 
 def _boilerplate_sql() -> str:
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH sh AS ({_SQL_SHINGLES}),
       ds AS (SELECT DISTINCT doc_id, {sid} AS sid FROM sh),
@@ -1563,13 +1565,6 @@ def q_seq_minhash(spark, sf_dir):
 
 
 def _seq_minhash_sql() -> str:
-    hash_exprs = ", ".join(
-        f"min(({a} * (((sid + 1) * 2654435761) % {_MH_P}) + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_COEF)
-    )
-    band_conds = " OR ".join(
-        f"(a.h{2*b} = b.h{2*b} AND a.h{2*b+1} = b.h{2*b+1})" for b in range(4)
-    )
     return f"""
       WITH seqdocs AS (
         SELECT event_id AS doc_id,
@@ -1579,14 +1574,11 @@ def _seq_minhash_sql() -> str:
         FROM events WHERE event_id < 400),
       sh AS (
         SELECT DISTINCT doc_id,
-               unnest(list_transform(range(0, greatest(len(tokens) - 4, 0)),
-                 i -> list_reduce(
-                        list_prepend(CAST(0 AS BIGINT), tokens[i+1:i+5]),
-                        (a, b) -> (a * 257 + b) % {_MH_P}))) AS sid
+               unnest({token_window_ids_sql('tokens', 5)}) AS sid
         FROM seqdocs),
-      mh AS (SELECT doc_id, {hash_exprs} FROM sh GROUP BY doc_id)
+      mh AS (SELECT doc_id, {_SQL_MH_HASHES} FROM sh GROUP BY doc_id)
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({band_conds})
+      FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({_SQL_MH_BANDS})
     """
 
 
@@ -2269,17 +2261,10 @@ def _pipeline_sql(stop_cap: bool = True, threshold: float = 0.5) -> str:
     dependent; ``stop_cap=False`` keeps every shingle) and the driver
     query runs it at ``threshold=0.25``. Defaults reproduce the
     q_training_pipeline oracle unchanged."""
-    hash_exprs = ", ".join(
-        f"min(({a} * (((sid + 1) * 2654435761) % {_MH_P}) + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_COEF)
-    )
-    band_conds = " OR ".join(
-        f"(a.h{2*b} = b.h{2*b} AND a.h{2*b+1} = b.h{2*b+1})" for b in range(4)
-    )
     match_sum = " + ".join(
         f"CAST(a.h{i} = b.h{i} AS INT)" for i in range(_MH_N)
     )
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return rf"""
       WITH q AS (
         SELECT doc_id, text, lang,
@@ -2307,10 +2292,10 @@ def _pipeline_sql(stop_cap: bool = True, threshold: float = 0.5) -> str:
         FROM (SELECT doc_id, string_split(text, ' ') AS l FROM surv)),
       ds0 AS (SELECT DISTINCT doc_id, {sid} AS sid FROM shs),
       ds AS ({_ds_cte(stop_cap)}),
-      mh AS (SELECT doc_id, {hash_exprs} FROM ds GROUP BY doc_id),
+      mh AS (SELECT doc_id, {_SQL_MH_HASHES} FROM ds GROUP BY doc_id),
       dropped AS (
         SELECT DISTINCT b.doc_id AS doc_id
-        FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({band_conds})
+        FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({_SQL_MH_BANDS})
         WHERE ({match_sum}) / {_MH_N}.0 >= {threshold}),
       final AS (SELECT * FROM surv ANTI JOIN dropped USING (doc_id))
       SELECT doc_id, lang, n_chars, n_tokens,
@@ -2415,7 +2400,7 @@ def q_ngram_novelty(spark, sf_dir):
 
 
 def _ngram_novelty_sql() -> str:
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH sh AS ({_SQL_SHINGLES}),
       ds AS (SELECT DISTINCT doc_id, {sid} AS sid FROM sh),
@@ -2447,7 +2432,7 @@ def q_source_overlap(spark, sf_dir):
 
 
 def _source_overlap_sql() -> str:
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH sh AS (
         SELECT DISTINCT source,
@@ -2784,7 +2769,7 @@ def q_dup_spans(spark, sf_dir):
 
 
 def _dup_spans_sql() -> str:
-    sid = _sql_dual_hash("shingle")
+    sid = dual_hash_sql("shingle")
     return f"""
       WITH d AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
       pos AS (
@@ -2880,7 +2865,7 @@ def q_dup_span_removal(spark, sf_dir):
 
 
 def _dup_span_removal_sql() -> str:
-    sid = _sql_dual_hash("shingle")
+    sid = dual_hash_sql("shingle")
     return f"""
       WITH d AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
       pos AS (
@@ -3330,31 +3315,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-# polynomial rolling hash of a string, seeded 0: fold (h*257 + code) % 2^31-1
-# — identical on both engines (Spark F.aggregate / DuckDB list_reduce);
-# the single definition lives next to text.rolling_hash so the two
-# engines' copies cannot drift (review finding: three copies existed)
-from htrc_feature_reader_spark.operators.text import (  # noqa: E402
-    ROLLING_HASH_SQL as _ROLLHASH_TMPL,
-)
-
-_SQL_ROLLHASH = _ROLLHASH_TMPL.replace("{mod}", "2147483647").replace("{base}", "257")
-# second independent family (base 263) for the dual ~62-bit span-window ids
-_SQL_ROLLHASH263 = _ROLLHASH_TMPL.replace("{mod}", "2147483647").replace("{base}", "263")
-
-
-def _sql_dual_hash(col: str) -> str:
-    """h257 * 2^31 + h263 — replays _staged_shingle_exprs(dual=True)."""
-    return (f"({_SQL_ROLLHASH.format(col=col)} * 2147483648 + "
-            f"{_SQL_ROLLHASH263.format(col=col)})")
-
-
 def _jaccard_sql() -> str:
     """Oracle for q_jaccard_pairs: Jaccard over HASHED shingle ids in the
     engine's hash-then-cap order (same rationale as _minhash_sql — under
     a collision, the merged id's document frequency and per-doc shingle
     sets are what the engine sees, so the oracle replays them)."""
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH sh AS ({_SQL_SHINGLES}),
       ds0 AS (SELECT DISTINCT doc_id, {sid} AS sid FROM sh),
@@ -3386,14 +3352,7 @@ def _minhash_sql() -> str:
     The oracle replays that order (hash, distinct, then cap on sid);
     capping on strings first would diverge exactly when collisions
     straddle the df threshold."""
-    hash_exprs = ", ".join(
-        f"min(({a} * (((sid + 1) * 2654435761) % {_MH_P}) + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_COEF)
-    )
-    band_conds = " OR ".join(
-        f"(a.h{2*b} = b.h{2*b} AND a.h{2*b+1} = b.h{2*b+1})" for b in range(4)
-    )
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH sh AS ({_SQL_SHINGLES}),
       ds0 AS (SELECT DISTINCT doc_id, {sid} AS sid FROM sh),
@@ -3403,9 +3362,9 @@ def _minhash_sql() -> str:
           SELECT sid FROM ds0 GROUP BY sid
           HAVING count(*) > 0.5 * (SELECT count(DISTINCT doc_id) FROM ds0)
         ) stop USING (sid)),
-      mh AS (SELECT doc_id, {hash_exprs} FROM ds GROUP BY doc_id)
+      mh AS (SELECT doc_id, {_SQL_MH_HASHES} FROM ds GROUP BY doc_id)
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({band_conds})
+      FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({_SQL_MH_BANDS})
     """
 
 
@@ -3415,15 +3374,8 @@ def _dedup_clusters_sql() -> str:
     recursive reachability over the undirected pair graph — component =
     least(id, min reachable id). Reachability is O(n * component size),
     fine at oracle scale; the engine uses the O(log^2 n) star algorithm."""
-    hash_exprs = ", ".join(
-        f"min(({a} * (((sid + 1) * 2654435761) % {_MH_P}) + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_COEF)
-    )
-    band_conds = " OR ".join(
-        f"(a.h{2*b} = b.h{2*b} AND a.h{2*b+1} = b.h{2*b+1})" for b in range(4)
-    )
     match_sum = " + ".join(f"CAST(a.h{i} = b.h{i} AS INT)" for i in range(_MH_N))
-    sid = _SQL_ROLLHASH.format(col="shingle")
+    sid = rolling_hash_sql("shingle")
     return f"""
       WITH RECURSIVE
       sh AS ({_SQL_SHINGLES}),
@@ -3434,10 +3386,10 @@ def _dedup_clusters_sql() -> str:
           SELECT sid FROM ds0 GROUP BY sid
           HAVING count(*) > 0.5 * (SELECT count(DISTINCT doc_id) FROM ds0)
         ) stop USING (sid)),
-      mh AS (SELECT doc_id, {hash_exprs} FROM ds GROUP BY doc_id),
+      mh AS (SELECT doc_id, {_SQL_MH_HASHES} FROM ds GROUP BY doc_id),
       pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({band_conds})
+        FROM mh a JOIN mh b ON a.doc_id < b.doc_id AND ({_SQL_MH_BANDS})
         WHERE ({match_sum}) / {_MH_N}.0 >= 0.25),
       und AS (
         SELECT id_a AS u, id_b AS v FROM pairs
@@ -3457,16 +3409,8 @@ def _near_dup_sql() -> str:
     sign-bit signatures (sign taken after round(.,6) on both engines), so
     the candidate set — not just the final cosine — is value-checked."""
     from htrc_feature_reader_spark.operators.similarity import (
-        _NDP_MIX, _NDP_PRIME, ndp_plane_coeffs,
+        ndp_component_sql, ndp_plane_coeffs,
     )
-
-    def comp_sql(a: int, b: int, idx: str = "i") -> str:
-        # the index pre-reduces mod P before (idx+1)*MIX, mirroring
-        # ndp_component: exact (same value mod P) and overflow-safe for
-        # large derived indices (dim + vec_id * stride noise streams)
-        return (f"((({a} * (((({idx}) % {_NDP_PRIME} + 1) * {_NDP_MIX})"
-                f" % {_NDP_PRIME}) + {b})"
-                f" % {_NDP_PRIME}) % 2000001 - 1000000) / 1000000.0")
 
     na, nb = ndp_plane_coeffs(1, 1, seed=_NDP_NOISE_SEED)[0]
     coeffs = ndp_plane_coeffs(_NDP_TABLES, _NDP_BITS, _MH_SEED)
@@ -3476,7 +3420,7 @@ def _near_dup_sql() -> str:
         for p in range(_NDP_BITS):
             a, b = coeffs[t * _NDP_BITS + p]
             proj = ("list_sum(list_transform(range(0, len(embedding)), "
-                    f"i -> embedding[i+1] * ({comp_sql(a, b)})))")
+                    f"i -> embedding[i+1] * ({ndp_component_sql(a, b, 'i')})))")
             bits.append(f"(CASE WHEN round({proj}, 6) > 0 THEN {1 << p} ELSE 0 END)")
         sig_exprs.append("(" + " + ".join(bits) + f") AS s{t}")
     sig_list = ", ".join(f"s{t}" for t in range(_NDP_TABLES))
@@ -3487,7 +3431,7 @@ def _near_dup_sql() -> str:
         SELECT vec_id + {_NDP_ID_OFFSET},
                list_transform(range(0, len(embedding)),
                  i -> CAST(embedding[i+1] AS DOUBLE) +
-                      {_NDP_EPS} * ({comp_sql(na, nb, idx=f"i + vec_id * {_NDP_ID_MIX}")}))
+                      {_NDP_EPS} * ({ndp_component_sql(na, nb, f"i + vec_id * {_NDP_ID_MIX}")}))
         FROM embeddings),
       sigs AS (SELECT vec_id, {", ".join(sig_exprs)} FROM aug),
       banded AS (
@@ -3699,7 +3643,7 @@ def _simhash_sql() -> str:
         f"THEN {1 << j} ELSE 0 END)"
         for j in range(_SH_BITS)
     )
-    tid = _SQL_ROLLHASH.format(col="token")
+    tid = rolling_hash_sql("token")
     return f"""
       WITH toks AS (
         SELECT doc_id AS id, tok AS token, count(*) AS weight

@@ -25,11 +25,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# Mersenne prime 2^61-1: the classic universal-hash modulus — products of
-# two < 2^61 values stay within int64*... careful: a*x can overflow int64.
-# We keep a, x < 2^31 so a*x + b < 2^62 fits signed int64 under ANSI mode.
-_MH_PRIME = (1 << 31) - 1  # 2147483647
-
+from .hashing import (
+    BASE,
+    MOD,
+    affine_coeffs,
+    affine_hash,
+    compose_ngrams,
+    rolling_hash,
+    simhash_coeffs,
+    stage_word_hashes,
+    token_window_ids,
+    window_starts,
+)
 
 def content_digest(col, normalize: bool = False):
     """MD5 digest of a text column (optionally whitespace/case-normalized,
@@ -64,13 +71,8 @@ def word_shingles(
 
     df = ensure_min_parallelism(df)  # CPU-bound explode: spread tiny inputs
     arr = F.split(F.col(text_col), " ")
-    # guard the short-doc case: sequence(0, -1) is DESCENDING ([0, -1]),
-    # not empty, and would index past the end under ANSI mode
-    idx = F.when(
-        F.size(arr) >= n, F.sequence(F.lit(0), F.size(arr) - n)
-    ).otherwise(F.array().cast("array<int>"))
     grams = F.transform(
-        idx,
+        window_starts(arr, n),
         lambda i: F.concat_ws(" ", *[F.element_at(arr, i + j + 1) for j in range(n)]),
     )
     return (
@@ -84,147 +86,29 @@ def word_shingle_ids(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    base: int = 257,
-    mod: int = (1 << 31) - 1,
+    base: int = BASE,
+    mod: int = MOD,
 ) -> DataFrame:
     """Distinct (id, shingle_id) pairs with shingle_id the polynomial
     rolling hash of the word n-gram string — bit-identical to
     ``rolling_hash(concat_ws(' ', w_i..w_{i+n-1}))`` but ~3x cheaper:
-    each word is hashed over its characters ONCE (one pass over the doc),
-    and each shingle's hash is composed from word-level (hash, base^len)
-    pairs via H(a||b) = (H(a)*base^len(b) + H(b)) mod p — no shingle
-    strings are ever materialized and no character is touched n times.
+    each shingle id is composed from per-word folds
+    (:mod:`.hashing`), so no shingle string is materialized and no
+    character is folded n times. Empty words (double spaces) hash as the
+    empty string, exactly as the character hash of the joined string
+    sees only the two spaces.
 
-    Empty words (double spaces) hash as the empty string: the char array
-    is ``array_remove(split(w,''),'')`` so the fold over an empty word is
-    the identity (h=0, pow=1), exactly as the character-level hash of the
-    concatenated string sees only the two spaces.
-
-    Distinctness is ROW-LOCAL: a duplicate (id, shingle_id) pair can only
-    come from the same document when ``id_col`` is unique per row (every
-    caller here passes a primary-key doc id), so ``array_distinct`` over
-    the per-doc id array before the explode yields exactly the global
-    ``.distinct()`` set with ZERO shuffle — the (id, shingle_id) exchange
-    that used to sit under every consumer is gone. Callers feeding a
-    NON-unique id (e.g. a constant) get per-ROW distinctness only and
-    must dedup downstream themselves (``decontaminate`` does).
+    Distinctness is ROW-LOCAL (``array_distinct`` before the explode, no
+    (id, shingle_id) shuffle): it equals the global distinct when
+    ``id_col`` is unique per row, as every caller here passes a primary
+    key. Callers feeding a NON-unique id (e.g. a constant) get per-ROW
+    distinctness only and must dedup downstream (``decontaminate`` does).
     """
-    staged, ids = _staged_shingle_exprs(df, text_col, id_col, n, base, mod)
+    staged = stage_word_hashes(df, text_col, id_col, base=base, mod=mod)
+    ids = compose_ngrams(n, base, mod)
     return staged.select(
         "id", F.explode(F.array_distinct(ids)).alias("shingle_id")
     )
-
-
-def _staged_shingle_exprs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    base: int = 257,
-    mod: int = (1 << 31) - 1,
-    dual: bool = False,
-):
-    """Returns ``(staged, ids)``: ``staged`` is the one-row-per-doc frame
-    ``(id, __wh)`` with the word-hash array materialized as its own
-    projection, and ``ids`` is the POSITIONAL shingle-id array EXPRESSION
-    over it (element i hashes words ``i..i+n-1``; duplicates preserved).
-    Shared staging for :func:`word_shingle_ids` (distinct set semantics)
-    and :func:`duplicated_spans` (position-aware coverage semantics).
-
-    Deliberately an (frame, expression) pair, NOT a frame with the array
-    as a column: consumers must compose ``ids`` directly into their OWN
-    single projection over ``staged`` (``explode(ids)``,
-    ``posexplode(ids)``). Staging the array through an intermediate
-    ``.select(..., ids.alias(...))`` adds a Project between the word-hash
-    projection and the Generate, and that shape measured ~10-30x slower
-    at sf0.01 (the array materializes outside the generator's
-    whole-stage-codegen span) — the same projection-shape trap as the
-    ``__wh`` CollapseProject note below.
-
-    ``dual=True`` composes a SECOND independent polynomial hash (base 263,
-    same modulus) in the same char pass and packs the pair as
-    ``h257 * 2^31 + h263`` — a ~62-bit id. The single 31-bit family is
-    fine where a collision only blurs a similarity signal (LSH banding,
-    Jaccard, novelty counts), but :func:`remove_duplicate_spans` DELETES
-    text on hash equality: at 10^8+ window occurrences the 31-bit
-    birthday bound yields ~10^6 false-duplicate marks, each destroying
-    unique tokens. Two independent folds push the first expected
-    collision past 10^9 windows; both folds replay in SQL (the oracle
-    hashes the shingle string twice with the two bases).
-    """
-    from ..functions import ensure_min_parallelism
-
-    df = ensure_min_parallelism(df)  # CPU-bound folds: spread tiny inputs
-    words = F.split(F.col(text_col), " ")
-    base2 = 263  # second independent family for dual mode
-    # one char pass per word: (h, p) = (polynomial hash, base^len % mod),
-    # PACKED into one long per family — acc = h * 2^31 + p (both < 2^31-1,
-    # so the pack stays < 2^62: ANSI-safe). A packed-long accumulator
-    # avoids allocating a struct row per character in the interpreted
-    # aggregate lambda (measured ~1.5x on the fold-bound shingle stages);
-    # h/p unpack exactly via div/mod since both are non-negative. Dual
-    # mode folds the base-263 family the same way in a second packed limb.
-    lowmask = F.lit((1 << 31) - 1).cast("long")
-
-    def _hi(acc):  # h: the hash limb
-        return F.shiftright(acc, 31)
-
-    def _lo(acc):  # p: the base^len limb
-        return acc.bitwiseAND(lowmask)
-
-    def packed_step(b):
-        def step(acc, ch):
-            return F.shiftleft(
-                (_hi(acc) * b + F.ascii(ch)) % mod, 31
-            ) + (_lo(acc) * b) % mod
-
-        return step
-
-    init = F.lit(1).cast("long")  # h=0, p=1 packed
-    if dual:
-        def word_fold(w):
-            chars = F.array_remove(F.split(w, ""), "")
-            return F.struct(
-                F.aggregate(chars, init, packed_step(base)).alias("hp"),
-                F.aggregate(chars, init, packed_step(base2)).alias("gq"),
-            )
-    else:
-        def word_fold(w):
-            return F.aggregate(
-                F.array_remove(F.split(w, ""), ""), init, packed_step(base)
-            )
-
-    wh = F.transform(words, word_fold)
-    # materialize the word-hash array as its own projection: the compose
-    # step references it n times, and Catalyst would otherwise INLINE the
-    # whole per-word fold into every element_at — O(words^2) per doc
-    # (measured 25x slower). CollapseProject keeps a multiply-referenced
-    # non-cheap alias as a separate projection, so __wh computes once.
-    staged = df.select(F.col(id_col).alias("id"), wh.alias("__wh"))
-    wha = F.col("__wh")
-
-    def shingle_hash(i):
-        first = F.element_at(wha, i + 1)
-        h = _hi(first["hp"]) if dual else _hi(first)
-        g = _hi(first["gq"]) if dual else None
-        for j in range(1, n):
-            e = F.element_at(wha, i + 1 + j)
-            ehp = e["hp"] if dual else e
-            h = (h * base + 32) % mod  # the joining space (ascii 32)
-            h = (h * _lo(ehp) + _hi(ehp)) % mod
-            if dual:
-                g = (g * base2 + 32) % mod
-                g = (g * _lo(e["gq"]) + _hi(e["gq"])) % mod
-        if dual:
-            # pack: h < 2^31-1 so h * 2^31 + g < 2^62 — fits int64 (ANSI-safe)
-            return h * F.lit(1 << 31).cast("long") + g
-        return h
-
-    idx = F.when(
-        F.size(wha) >= n, F.sequence(F.lit(0), F.size(wha) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    ids = F.transform(idx, shingle_hash)
-    return staged, ids
 
 
 def shingle_ids(
@@ -243,8 +127,6 @@ def shingle_ids(
     method='dense': dense_rank over a global sort — exact compact ids, but
     a single-partition window; only for vocabulary-sized data.
     """
-    from .text import rolling_hash
-
     if max_df is not None:
         counts = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
         base = counts.filter(F.col("df_count") <= max_df).select("shingle")
@@ -358,16 +240,11 @@ def minhash_signatures(
     keeps id 0 off the zero fixed point, where every h_i would degenerate
     to its additive constant b_i).
     """
-    coeffs = [
-        (2 * ((seed * 1_000_003 + i * 7_919) % (_MH_PRIME // 2)) + 1,
-         (seed * 104_729 + i * 52_361) % _MH_PRIME)
-        for i in range(n_hashes)
-    ]
     # all math in long: int32 a*x overflows under ANSI mode
-    x = ((F.col(shingle_id_col).cast("long") + 1) * F.lit(2_654_435_761)) % F.lit(_MH_PRIME).cast("long")
+    x = F.col(shingle_id_col).cast("long")
     hashes = [
-        ((F.lit(a).cast("long") * x + F.lit(b).cast("long")) % _MH_PRIME).alias(f"h{i}")
-        for i, (a, b) in enumerate(coeffs)
+        affine_hash(x, a, b).alias(f"h{i}")
+        for i, (a, b) in enumerate(affine_coeffs(n_hashes, seed))
     ]
     per_hash = doc_shingles.select("id", *hashes)
     mins = per_hash.groupBy("id").agg(
@@ -552,8 +429,7 @@ def simhash(
     log2(corpus); 48/4 bands = 12-bit buckets, right for million-doc
     corpora). Small-bit configs are for oracle-scale tests only.
     """
-    A = 2 * ((seed * 2_654_435_761) % (1 << 30)) + 1
-    B = seed * 97 + 13
+    A, B = simhash_coeffs(seed)
     w = F.col(weight_col) if weight_col else F.lit(1)
     mixed = (F.col(token_id_col).cast("long") * F.lit(A) + F.lit(B)) % F.lit(1 << 62)
     contribs = [
@@ -864,7 +740,8 @@ def duplicated_spans(
         raise ValueError(f"n must be >= 1, got {n}")
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    staged, sids = _staged_shingle_exprs(docs, text_col, id_col, n, dual=True)
+    staged = stage_word_hashes(docs, text_col, id_col, dual=True)
+    sids = compose_ngrams(n, dual=True)
     occ = staged.select(
         "id", F.posexplode(sids).alias("pos", "sid")
     )
@@ -927,8 +804,8 @@ def token_shingle_ids(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     n: int = 5,
-    base: int = 257,
-    mod: int = (1 << 31) - 1,
+    base: int = BASE,
+    mod: int = MOD,
 ) -> DataFrame:
     """Distinct (id, shingle_id) pairs over INT TOKEN ARRAYS — the
     pre-tokenized-sequence analog of :func:`word_shingle_ids` (the
@@ -954,24 +831,11 @@ def token_shingle_ids(
     from ..functions import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)  # CPU-bound folds: spread tiny inputs
-    toks = F.col(tokens_col)
-
-    def shingle_hash(i):
-        h = F.lit(0).cast("long")
-        for j in range(n):
-            t = F.pmod(F.element_at(toks, i + 1 + j).cast("long"), F.lit(mod))
-            h = (h * base + t) % mod
-        return h
-
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    # row-local distinct (array_distinct before the explode) — ids are
-    # unique per doc, so this equals the global .distinct() with no
-    # (id, shingle_id) shuffle; same rationale as word_shingle_ids
+    ids = token_window_ids(F.col(tokens_col), n, base, mod)
+    # row-local distinct, same contract as word_shingle_ids
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.transform(idx, shingle_hash))).alias("shingle_id"),
+        F.explode(F.array_distinct(ids)).alias("shingle_id"),
     )
 
 
@@ -1002,7 +866,7 @@ def remove_duplicate_spans(
     document (fully-removed docs get the empty string).
 
     Window identity uses the DUAL ~62-bit hash family (two independent
-    polynomial folds — see ``_staged_shingle_exprs(dual=True)``): this
+    polynomial folds — the dual ids of :mod:`.hashing`): this
     operator deletes text on hash equality, so the 31-bit family's
     corpus-scale birthday collisions would destroy unique tokens.
 
@@ -1018,7 +882,8 @@ def remove_duplicate_spans(
         raise ValueError(f"n must be >= 1, got {n}")
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    staged, sids = _staged_shingle_exprs(docs, text_col, id_col, n, dual=True)
+    staged = stage_word_hashes(docs, text_col, id_col, dual=True)
+    sids = compose_ngrams(n, dual=True)
     occ = staged.select("id", F.posexplode(sids).alias("pos", "sid"))
     w_rank = Window.partitionBy("sid").orderBy("id", "pos")
     w_all = Window.partitionBy("sid")

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_MERSENNE = (1 << 31) - 1
+from .hashing import MOD, key_hash, key_hash_sql, mix, mix_sql
 
 
 def pack_sequences(
@@ -223,86 +223,6 @@ def pack_sequences(
     return seqs
 
 
-def _seed_mult(seed: int) -> int:
-    """Per-seed odd multiplier in ``[2^31, 2^31 + 2^30)``. The seed MUST
-    change the hash's multiplicative slope, not just shift it: with a
-    fixed multiplier every h_seed is the same affine map of the key plus
-    a constant, so any two seeds are perfectly correlated (a rotation of
-    one permutation — e.g. a rate-0.2 sample at seed A would land inside
-    a contiguous 0.2-wide hash interval at seed B, making an
-    'independent' split anything from 0% to 100% train). And the slopes
-    must differ by ~2^31-sized amounts, not by O(seed): a slope delta d
-    only decorrelates keys once d*k wraps the modulus, i.e. key ranges
-    past m/d. Hence a driver-side splitmix scramble of the seed (inlined
-    as a literal into both the Spark expression and the SQL replay — it
-    never needs to be computable in either engine). The high bit keeps
-    products wrapping the Mersenne modulus even for small keys; the
-    30-bit cap keeps ``(k%m + seed) * mult`` under 2^63 (ANSI overflow);
-    OR 1 keeps it odd."""
-    if not (0 <= seed <= (1 << 27)):
-        raise ValueError(f"seed must be in [0, 2^27], got {seed}")
-    x = (int(seed) + 1) * 0x9E3779B97F4A7C15 % (1 << 64)
-    x ^= x >> 31
-    return (1 << 31) | (x % (1 << 30)) | 1
-
-
-def _key_hash(df: DataFrame, key_col: str, seed: int):
-    """The shared per-key decision hash, in ``[0, 2^31-1)``: Knuth-style
-    multiplicative over integral keys, rolling-hash-then-Knuth over string
-    keys (native htids), with a per-seed multiplier (:func:`_seed_mult`)
-    so distinct seeds give decorrelated decisions. Raises on any other
-    dtype — a silent cast of e.g. a struct or double key to NULL would
-    break every downstream decision. NULL keys fold deterministically to
-    0 / ``''`` (both hash alike)."""
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    dt = df.schema[key_col].dataType
-    if isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
-        # reduce mod 2^31-1 BEFORE the multiply: (k % m + seed) * mult
-        # stays under 2^63 (ANSI mode throws on int64 overflow). pmod keeps
-        # negative keys on the same decision as the oracle's double-mod.
-        k = F.coalesce(F.col(key_col).cast("long"), F.lit(0).cast("long"))
-    elif isinstance(dt, StringType):
-        from .text import rolling_hash
-
-        # rolling_hash is already in [0, 2^31-1): the outer pmod-chain is a
-        # no-op reduction but kept so both key kinds share one expression
-        k = rolling_hash(F.coalesce(F.col(key_col), F.lit("")))
-    else:
-        raise TypeError(
-            f"key_col {key_col!r} has type {dt.simpleString()}; "
-            "only integral or string keys are supported (anything else would "
-            "cast to NULL and silently break per-key decisions)"
-        )
-    return F.pmod(
-        (F.pmod(k, F.lit(_MERSENNE)) + F.lit(int(seed)))
-        * F.lit(_seed_mult(seed)),
-        F.lit(_MERSENNE),
-    )
-
-
-def key_hash_sql(key_col: str, seed: int, string_key: bool = False) -> str:
-    """DuckDB replay of :func:`_key_hash` — identical integer arithmetic,
-    identical NULL fold, for oracles and cross-engine sampling replays."""
-    m = _MERSENNE
-    if string_key:
-        key = rolling_hash_sql(f"COALESCE({key_col}, '')")
-    else:
-        key = f"COALESCE({key_col}, 0)"
-    # (key % m + m) % m: plain SQL `%` keeps the dividend's sign, so this
-    # double-mod is the pmod equivalent — negative keys then make the SAME
-    # decision as Spark's F.pmod instead of silently keeping every row
-    return (
-        f"(((({key} % {m}) + {m}) % {m} + {int(seed)}) * {_seed_mult(seed)}) % {m}"
-    )
-
-
 def sample_mixture(
     df: DataFrame,
     rates: dict[str, float],
@@ -372,7 +292,7 @@ def sample_mixture(
         raise ValueError(
             f"output column {epoch_col!r} already exists; pass epoch_col="
         )
-    u = _key_hash(df, key_col, seed).cast("double") / F.lit(float(_MERSENNE))
+    u = key_hash(df, key_col, seed).cast("double") / F.lit(float(MOD))
     if epoch_col is None:
         rate = F.lit(float(default_rate))
         for s, r in sorted(rates.items()):
@@ -422,7 +342,7 @@ def mixture_copies_sql(
     vanish exactly like the Spark explode.)"""
     import math
 
-    u = f"({key_hash_sql(key_col, seed, string_key)}) / CAST({_MERSENNE} AS DOUBLE)"
+    u = f"({key_hash_sql(key_col, seed, string_key)}) / CAST({MOD} AS DOUBLE)"
     whole = str(int(math.floor(float(default_rate))))
     frac = str(float(default_rate) - math.floor(float(default_rate)))
     for s, r in sorted(rates.items()):
@@ -431,10 +351,6 @@ def mixture_copies_sql(
         whole = f"CASE WHEN {source_col} = '{lit}' THEN {q} ELSE {whole} END"
         frac = f"CASE WHEN {source_col} = '{lit}' THEN {fr} ELSE {frac} END"
     return f"(({whole}) + (CASE WHEN ({u}) < ({frac}) THEN 1 ELSE 0 END))"
-
-
-# single-source cross-engine hash replay: defined next to rolling_hash
-from .text import rolling_hash_sql  # noqa: E402
 
 
 
@@ -450,7 +366,7 @@ def mixture_sql_predicate(
     DuckDB oracles and cross-engine replays) — same integer arithmetic,
     same branch order. ``string_key=True`` replays the string-key path
     (rolling hash, NULL -> ``''``); otherwise integral (NULL -> 0)."""
-    u = f"({key_hash_sql(key_col, seed, string_key)}) / CAST({_MERSENNE} AS DOUBLE)"
+    u = f"({key_hash_sql(key_col, seed, string_key)}) / CAST({MOD} AS DOUBLE)"
     rate = str(float(default_rate))
     for s, r in sorted(rates.items()):
         lit = s.replace("'", "''")  # a source name with an apostrophe must
@@ -597,7 +513,7 @@ def take_per_source(
 ) -> DataFrame:
     """Exact stratified sample: the ``n`` rows per source whose decision
     hash is smallest — deterministic across runs, partitionings, and
-    engines (same :func:`_key_hash` family as :func:`sample_mixture`;
+    engines (same :func:`~.hashing.key_hash` family as :func:`sample_mixture`;
     the DuckDB oracle replays it via :func:`key_hash_sql`), no RNG state.
 
     Where :func:`sample_mixture` hits a *rate* (no per-source count
@@ -611,7 +527,7 @@ def take_per_source(
         raise ValueError(f"n must be >= 0, got {n}")
     from pyspark.sql.window import Window
 
-    h = _key_hash(df, key_col, seed)
+    h = key_hash(df, key_col, seed)
     w = Window.partitionBy(source_col).orderBy(h.asc(), F.col(key_col).asc())
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -675,13 +591,13 @@ def _split_thresholds(fractions: dict[str, float]) -> list[tuple[str, int]]:
         if not (0.0 < f <= 1.0):
             raise ValueError(f"fraction for {name!r} must be in (0, 1], got {f}")
         total += f
-        out.append((name, int(total * _MERSENNE)))
+        out.append((name, int(total * MOD)))
     if total > 1.0 + 1e-9:
         raise ValueError(f"fractions sum to {total} > 1")
     if abs(total - 1.0) <= 1e-9:
         # exhaustive recipe: pin the last threshold to the hash range's top
         # so float rounding can never orphan the max-hash keys
-        out[-1] = (out[-1][0], _MERSENNE)
+        out[-1] = (out[-1][0], MOD)
     return out
 
 
@@ -714,7 +630,7 @@ def split_by_hash(
     the split with the sampling decision (e.g. rate-0.1 sampling at seed s
     would land entirely inside a 0.1 'train' fraction at seed s).
     """
-    h = _key_hash(df, key_col, seed)
+    h = key_hash(df, key_col, seed)
     expr = F.lit(None).cast("string")
     for name, t in reversed(_split_thresholds(fractions)):
         expr = F.when(h < F.lit(t), F.lit(name)).otherwise(expr)
@@ -738,29 +654,9 @@ def split_sql_case(
     return f"CASE{arms} ELSE NULL END"
 
 
-def _mix(h, seed: int):
-    """Nonlinear finalizer over a ``[0, 2^31)`` hash: XOR-shift, odd
-    multiply mod the Mersenne, XOR-shift (murmur/splitmix style). Breaks
-    the affine lattice of :func:`_key_hash` for order-sensitive uses
-    (:func:`shuffle_sequences`); interval-membership uses (sampling,
-    splits) don't need it. Exact 64-bit integer ops only — replayed
-    bit-for-bit by :func:`_mix_sql`."""
-    h = h.bitwiseXOR(F.shiftright(h, 15))
-    h = F.pmod(h * F.lit(_seed_mult(seed + 0x5BD1)), F.lit(_MERSENNE))
-    return h.bitwiseXOR(F.shiftright(h, 13))
-
-
-def _mix_sql(h: str, seed: int) -> str:
-    """DuckDB replay of :func:`_mix` (same rounds, same constants)."""
-    m = _MERSENNE
-    h1 = f"xor(({h}), ({h}) >> 15)"
-    h2 = f"(({h1}) * {_seed_mult(seed + 0x5BD1)}) % {m}"
-    return f"xor(({h2}), ({h2}) >> 13)"
-
-
 def shuffle_key_sql(key_col: str, seed: int, string_key: bool = False) -> str:
     """The :func:`shuffle_sequences` ``shuffle_key`` as ANSI SQL."""
-    return _mix_sql(key_hash_sql(key_col, seed, string_key), seed)
+    return mix_sql(key_hash_sql(key_col, seed, string_key), seed)
 
 
 def shuffle_sequences(
@@ -783,15 +679,15 @@ def shuffle_sequences(
     reading shards in file order replays one fixed global permutation —
     re-shuffling per epoch is a seed change, not a new algorithm.
 
-    The shuffle key is :func:`_key_hash` pushed through a murmur-style
-    XOR-shift finalizer (:func:`_mix`): the bare hash is affine in the
-    key, so contiguous key ranges would land on an arithmetic-progression
-    lattice (batch j = a stride pattern over the corpus, not a random
+    The shuffle key is :func:`~.hashing.key_hash` pushed through a
+    murmur-style XOR-shift finalizer (:func:`~.hashing.mix`): the bare
+    hash is affine in the key, so contiguous key ranges would land on an
+    arithmetic-progression lattice (batch j = a stride pattern over the corpus, not a random
     draw). No chain of affine rounds can fix that — affine maps compose
     to affine — hence the nonlinear rounds. Replayed bit-exactly in SQL
     by :func:`shuffle_key_sql`.
     """
-    h = _mix(_key_hash(df, key_col, seed), seed)
+    h = mix(key_hash(df, key_col, seed), seed)
     out = df.withColumn(out_col, h)
     parts = [F.col(out_col), F.col(key_col)]
     if num_partitions is None:

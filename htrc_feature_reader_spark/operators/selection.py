@@ -13,10 +13,10 @@ hashed-feature distribution matches the target. No reference-repo analog
 training-data-pipeline layer, like `operators/dedup.py`.
 
 Everything is declarative Catalyst (split / transform / explode /
-groupBy) and exact-integer hashing — the same rolling-hash family every
-oracle shares (`text.ROLLING_HASH_SQL`), so a DuckDB replay buckets
-bit-identically. Randomness for the resample comes from the shared
-seeded key-hash (`packing._key_hash` + `_mix`), not ``rand()``:
+groupBy) and exact-integer hashing from `operators/hashing.py`, the
+family every oracle replays, so DuckDB buckets bit-identically.
+Randomness for the resample comes from the shared seeded key hash
+(`hashing.key_hash` + `mix`), not ``rand()``:
 seed-pure, partition-independent, replayable.
 
 Scale notes:
@@ -38,25 +38,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .packing import _MERSENNE, _key_hash, _mix, _mix_sql, key_hash_sql
-from .text import rolling_hash, rolling_hash_sql
-
-
-def _ngram_strings(words: Column, n: int) -> Column:
-    """Array of space-joined word n-grams (with multiplicity, in order).
-    Short docs yield an empty array — guarded because sequence(0, -1) is
-    DESCENDING, not empty (same trap `dedup.word_shingles` documents)."""
-    if n == 1:
-        return words
-    idx = F.when(
-        F.size(words) >= n, F.sequence(F.lit(0), F.size(words) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + j + 1) for j in range(n)]
-        ),
-    )
+from .hashing import (
+    MOD,
+    compose_ngrams,
+    key_hash,
+    key_hash_sql,
+    mix,
+    mix_sql,
+    ngram_strings_sql,
+    rolling_hash_sql,
+    stage_word_hashes,
+)
 
 
 def hashed_ngram_buckets(
@@ -74,61 +66,12 @@ def hashed_ngram_buckets(
     Bit-identical to ``rolling_hash(concat_ws(' ', w_i..w_{i+n-1}))`` but
     each word's characters are hashed ONCE and n-gram hashes are composed
     from word-level ``(hash, base^len)`` pairs via
-    ``H(a||b) = (H(a)*base^len(b) + H(b)) mod p`` — the same trick as
-    ``dedup.word_shingle_ids``. For the default ``ngrams=(1, 2)`` that is
-    one char pass instead of three, and no bigram strings are ever
-    materialized (they were ~2x the corpus bytes through the explode).
+    ``H(a||b) = (H(a)*base^len(b) + H(b)) mod p`` (:mod:`.hashing`). For
+    the default ``ngrams=(1, 2)`` that is one char pass instead of three,
+    and no bigram strings are ever materialized.
     """
-    from ..functions import ensure_min_parallelism
-
-    base, mod = 257, (1 << 31) - 1
-    docs = ensure_min_parallelism(docs)  # CPU-bound folds: spread tiny inputs
-    words = F.array_remove(F.split(F.col(text_col), " "), "")
-    # (h, p) packed into one long (h * 2^31 + p, both limbs < 2^31-1 so
-    # the pack stays < 2^62) — no struct row allocated per character in
-    # the interpreted aggregate lambda; same packing as
-    # dedup._staged_shingle_exprs
-    lowmask = F.lit((1 << 31) - 1).cast("long")
-    hi = lambda acc: F.shiftright(acc, 31)  # noqa: E731
-    lo = lambda acc: acc.bitwiseAND(lowmask)  # noqa: E731
-
-    def word_fold(w):
-        return F.aggregate(
-            F.split(w, ""),
-            F.lit(1).cast("long"),  # h=0, p=1 packed
-            lambda acc, ch: F.shiftleft(
-                (hi(acc) * base + F.ascii(ch)) % mod, 31
-            ) + (lo(acc) * base) % mod,
-        )
-
-    # materialize the word-hash array as its own projection: the n-gram
-    # compose step references it n times per element, and Catalyst would
-    # otherwise INLINE the whole per-word fold into every element_at —
-    # O(words^2) per doc (the __wh CollapseProject note in
-    # dedup._staged_shingle_exprs)
-    staged = docs.select(
-        F.col(id_col).alias("id"), F.transform(words, word_fold).alias("__wh")
-    )
-    wha = F.col("__wh")
-
-    def gram_ids(n):
-        if n == 1:
-            return F.transform(wha, lambda e: hi(e))
-
-        def compose(i):
-            h = hi(F.element_at(wha, i + 1))
-            for j in range(1, n):
-                e = F.element_at(wha, i + 1 + j)
-                h = (h * base + 32) % mod  # the joining space (ascii 32)
-                h = (h * lo(e) + hi(e)) % mod
-            return h
-
-        idx = F.when(
-            F.size(wha) >= n, F.sequence(F.lit(0), F.size(wha) - n)
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(idx, compose)
-
-    parts = [gram_ids(n) for n in ngrams]
+    staged = stage_word_hashes(docs, text_col, id_col, drop_empty_words=True)
+    parts = [compose_ngrams(n) for n in ngrams]
     ids = F.concat(*parts) if len(parts) > 1 else parts[0]
     return staged.select("id", F.explode(ids).alias("__gh")).select(
         "id", F.pmod(F.col("__gh"), F.lit(int(n_buckets))).alias("bucket")
@@ -143,21 +86,10 @@ def ngram_buckets_sql(
     """DuckDB replay of :func:`hashed_ngram_buckets`'s gram->bucket map,
     as a ``SELECT``-able expression over a ``l`` word-list column
     (``list_filter(string_split(text, ' '), w -> w <> '')``)."""
-    parts = []
-    for n in ngrams:
-        if n == 1:
-            parts.append("l")
-        else:
-            joined = " || ' ' || ".join(f"l[i+{j + 1}]" for j in range(n))
-            parts.append(
-                f"list_transform(range(0, greatest(len(l) - {n - 1}, 0)), "
-                f"i -> {joined})"
-            )
-    grams = " || ".join(parts) if len(parts) > 1 else parts[0]
+    parts = [ngram_strings_sql("l", n) for n in ngrams]
+    grams = " || ".join(parts)
     rh = rolling_hash_sql("g")
-    return (
-        f"list_transform({grams}, g -> ({rh}) % {int(n_buckets)})"
-    )
+    return f"list_transform({grams}, g -> ({rh}) % {int(n_buckets)})"
 
 
 def dsir_weights(
@@ -236,9 +168,7 @@ def gumbel_key(df: DataFrame, id_col: str, logw_col: str, seed: int) -> Column:
     engines bit-for-bit. Top-k by this key samples k documents WITHOUT
     replacement with probability proportional to ``exp(logw)`` (the
     Gumbel-max trick) — seed-pure, no ``rand()``."""
-    u = (_mix(_key_hash(df, id_col, seed), seed) + F.lit(1)) / F.lit(
-        float(_MERSENNE + 2)
-    )
+    u = (mix(key_hash(df, id_col, seed), seed) + F.lit(1)) / F.lit(float(MOD + 2))
     return F.col(logw_col) - F.log(-F.log(u))
 
 
@@ -246,8 +176,8 @@ def gumbel_key_sql(
     id_col: str, logw_col: str, seed: int, string_key: bool = False
 ) -> str:
     """DuckDB replay of :func:`gumbel_key` (same hash, same constants)."""
-    h = _mix_sql(key_hash_sql(id_col, seed, string_key), seed)
-    u = f"((({h}) + 1) / {float(_MERSENNE + 2)!r})"
+    h = mix_sql(key_hash_sql(id_col, seed, string_key), seed)
+    u = f"((({h}) + 1) / {float(MOD + 2)!r})"
     return f"({logw_col} - ln(-ln({u})))"
 
 
@@ -298,7 +228,7 @@ def sample_per_group(
     """
     from pyspark.sql.window import Window
 
-    key = _mix(_key_hash(df, id_col, seed), seed)
+    key = mix(key_hash(df, id_col, seed), seed)
     w = Window.partitionBy(group_col).orderBy(
         key.desc(), F.col(id_col).desc()
     )

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .hashing import MOD, affine_coeffs, affine_hash, affine_hash_sql
+
 
 def dot(a, b):
     """Exact-order double dot product of two array columns (JVM-side)."""
@@ -108,29 +110,20 @@ def hyperplane_signature(
     return sig
 
 
-_NDP_PRIME = (1 << 31) - 1
-_NDP_MIX = 2_654_435_761
-
-
 def ndp_plane_coeffs(n_tables: int, band_bits: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for each (table, bit) hyperplane —
-    the same integer family the MinHash signatures use, so any engine
-    (including the DuckDB oracle) reproduces identical plane components and
-    therefore identical candidate sets."""
-    p = _NDP_PRIME
-    return [
-        (2 * ((seed * 1_000_003 + idx * 7_919) % (p // 2)) + 1,
-         (seed * 104_729 + idx * 52_361) % p)
-        for idx in range(n_tables * band_bits)
-    ]
+    the affine family the MinHash signatures use (:mod:`.hashing`), so any
+    engine (including the DuckDB oracle) reproduces identical plane
+    components and therefore identical candidate sets."""
+    return affine_coeffs(n_tables * band_bits, seed)
 
 
 def ndp_component(a: int, b: int, i):
     """Deterministic pseudo-uniform value in [-1, 1) for dim index ``i``
     (0-based column) from exact integer arithmetic — the shared component
-    formula for hyperplanes and reproducible perturbations. Any engine
-    reproduces it bit-exactly: comp = (((a * (((i%P+1)*MIX) % P) + b) % P)
-    % 2000001 - 1000000) / 1e6.
+    formula for hyperplanes and reproducible perturbations:
+    ``(affine_hash(i mod P) % 2000001 - 1000000) / 1e6``, replayed by
+    :func:`ndp_component_sql`.
 
     The index is pre-reduced mod P so callers may pass LARGE derived
     indices (e.g. dim + vec_id * stride for per-vector noise streams)
@@ -138,9 +131,15 @@ def ndp_component(a: int, b: int, i):
     < 2^62, and the reduction is exact ((i%P+1)*MIX == (i+1)*MIX mod P) —
     values are unchanged for i < P, i.e. everything computed before the
     guard existed."""
-    x = ((F.pmod(i, F.lit(_NDP_PRIME)) + 1) * F.lit(_NDP_MIX)) % F.lit(_NDP_PRIME)
-    h = (F.lit(a) * x + F.lit(b)) % F.lit(_NDP_PRIME)
+    h = affine_hash(F.pmod(i, F.lit(MOD)), a, b)
     return ((h % F.lit(2_000_001)).cast("double") - 1_000_000.0) / 1_000_000.0
+
+
+def ndp_component_sql(a: int, b: int, idx: str) -> str:
+    """DuckDB replay of :func:`ndp_component` for the index expression
+    ``idx``."""
+    h = affine_hash_sql(f"({idx}) % {MOD}", a, b)
+    return f"(({h}) % 2000001 - 1000000) / 1000000.0"
 
 
 def near_dup_pairs(

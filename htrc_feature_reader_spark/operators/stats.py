@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .hashing import MOD, key_hash, key_hash_sql, mix, mix_sql
+
 
 def corpus_stats(
     docs: DataFrame,
@@ -370,7 +372,7 @@ def distinct_sampled(
     """Per-group approximate distinct count by hash-threshold distinct
     sampling (Gibbons' distinct sampler) — the deterministic alternative
     to HLL: count EXACTLY the distinct values whose shared decision hash
-    (:func:`~.packing._key_hash`, the sample_mixture/split family) lands
+    (:func:`~.hashing.key_hash`, the sample_mixture/split family) lands
     in the lowest ``1/rate_inv`` of the hash space, then scale by
     ``rate_inv``.
 
@@ -393,19 +395,17 @@ def distinct_sampled(
     Returns (group_col, sampled_distinct, est_distinct) — ``est`` is
     ``sampled * rate_inv`` (exact long arithmetic).
     """
-    from .packing import _MERSENNE, _key_hash, _mix
-
     if rate_inv < 1:
         raise ValueError(f"rate_inv={rate_inv}; expected >= 1")
-    # the _mix finalizer matters here: threshold membership over a SMALL
-    # consecutive-id population sees _key_hash's affine lattice (150
+    # the mix finalizer matters here: threshold membership over a SMALL
+    # consecutive-id population sees key_hash's affine lattice (150
     # consecutive ids can ALL miss a 1/8 threshold window); the xorshift
     # rounds decorrelate neighbors, same as shuffle_sequences
-    h = _mix(_key_hash(df, value_col, seed), seed)
+    h = mix(key_hash(df, value_col, seed), seed)
     # rate_inv == 1 is the exact-count identity: skip the threshold test
-    # entirely (h < _MERSENNE would still drop values whose mixed hash
-    # equals _MERSENNE — reachable after the xorshift finalizer; ADVICE r5)
-    kept = df if rate_inv == 1 else df.filter(h < F.lit(_MERSENNE // rate_inv))
+    # entirely (h < MOD would still drop values whose mixed hash equals
+    # MOD — reachable after the xorshift finalizer)
+    kept = df if rate_inv == 1 else df.filter(h < F.lit(MOD // rate_inv))
     return kept.groupBy(group_col).agg(
         F.count_distinct(F.col(value_col)).alias("sampled_distinct"),
         (F.count_distinct(F.col(value_col)) * F.lit(int(rate_inv))).alias(
@@ -424,15 +424,13 @@ def distinct_sampled_sql(
 ) -> str:
     """DuckDB replay of :func:`distinct_sampled` — same integer hash,
     same threshold, same scaling; bit-exact including boundary values."""
-    from .packing import _MERSENNE, _mix_sql, key_hash_sql
-
-    h = _mix_sql(key_hash_sql(value_col, seed, string_key), seed)
+    h = mix_sql(key_hash_sql(value_col, seed, string_key), seed)
     return f"""
       SELECT {group_col},
              CAST(count(DISTINCT {value_col}) AS BIGINT) AS sampled_distinct,
              CAST(count(DISTINCT {value_col}) * {int(rate_inv)} AS BIGINT)
                AS est_distinct
       FROM {table}
-      WHERE ({h}) < {_MERSENNE // int(rate_inv)}
+      WHERE ({h}) < {MOD // int(rate_inv)}
       GROUP BY {group_col}
     """

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .hashing import MOD, rolling_hash, rolling_hash_sql, window_starts
+
 # Tiny per-language stopword marker sets (drawn from public stopword
 # lists) — enough signal for a coarse heuristic language id on natural
 # text. Deliberately small: each probe is one array_intersect over the
@@ -179,26 +181,8 @@ def tokenize(
     return df.mapInPandas(run, schema=out_schema)
 
 
-ROLLING_HASH_SQL = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split({col}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-    "(a, b) -> (a * {base} + b) % {mod})"
-)
-"""DuckDB replay template of :func:`rolling_hash` (base 257, mod 2^31-1
-by default) — THE cross-engine string-hash family every oracle shares.
-One definition: an edit here changes Spark-side parity consumers and
-every SQL replay together (see :func:`rolling_hash_sql`)."""
-
-
-def rolling_hash_sql(col: str, mod: int = (1 << 31) - 1, base: int = 257) -> str:
-    """Format :data:`ROLLING_HASH_SQL` for a DuckDB expression/column.
-    ``base`` selects the hash family (257 default; 263 is the second
-    family of the dual ~62-bit span-window ids)."""
-    return ROLLING_HASH_SQL.format(col=col, mod=int(mod), base=int(base))
-
-
 def tokenize_sql(
-    text_expr: str, vocab_size: int | None = None, mod: int = (1 << 31) - 1
+    text_expr: str, vocab_size: int | None = None, mod: int = MOD
 ) -> str:
     """The ``tokenize(method='hash')`` expression as DuckDB SQL — same
     pretokenizer regex, same rolling-hash family, bit-identical ids (for
@@ -410,8 +394,15 @@ def tf_idf(
     actual post-aggregation size — small corpora still get the broadcast
     plan (pinned by ``test_tf_idf_no_forced_vocab_broadcast``); only the
     1-row corpus-constants funnel keeps an explicit hint.
+
+    Rows with a NULL ``doc_col`` belong to no document: they are dropped
+    before any count, so they inflate neither ``df`` nor N.
     """
-    per = token_counts.groupBy(doc_col, token_col).agg(F.sum(count_col).alias("tc"))
+    per = (
+        token_counts.filter(F.col(doc_col).isNotNull())
+        .groupBy(doc_col, token_col)
+        .agg(F.sum(count_col).alias("tc"))
+    )
     doc_totals = per.groupBy(doc_col).agg(F.sum("tc").alias("doc_total"))
     # per is unique on (doc, token) by construction, so the document
     # frequency is a plain count — countDistinct compiled to an extra
@@ -517,11 +508,8 @@ def bigram_logprob(
     combinable.
     """
     words = F.array_remove(F.split(F.col(text_col), " "), "")
-    idx = F.when(
-        F.size(words) >= 2, F.sequence(F.lit(0), F.size(words) - 2)
-    ).otherwise(F.array().cast("array<int>"))
     pairs = F.transform(
-        idx,
+        window_starts(words, 2),
         lambda i: F.struct(
             F.element_at(words, i + 1).alias("prev"),
             F.element_at(words, i + 2).alias("cur"),
@@ -583,19 +571,6 @@ def normalized_fingerprint(text) -> Column:
     formatting noise."""
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(F.lower(F.regexp_replace(c, r"\s+", " ")).cast("binary"))
-
-
-def rolling_hash(text, base: int = 257, mod: int = (1 << 31) - 1) -> Column:
-    """Polynomial rolling hash over character codes — exact integer
-    arithmetic (reproducible on any engine), the building block for
-    content-defined chunk fingerprints."""
-    c = F.col(text) if isinstance(text, str) else text
-    chars = F.split(c, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
-    )
 
 
 def remove_duplicate_lines(
@@ -667,10 +642,13 @@ def bm25(
     As in :func:`tf_idf`, ONLY the 1-row corpus-constants funnel is
     broadcast-hinted; the vocabulary-sized doc-frequency join is left to
     AQE (an unbounded token vocabulary must never be force-broadcast at
-    the 100 TB tier).
+    the 100 TB tier). NULL ``doc_col`` rows are dropped first, as in
+    :func:`tf_idf`.
     """
-    per = token_counts.groupBy(doc_col, token_col).agg(
-        F.sum(count_col).alias("tc")
+    per = (
+        token_counts.filter(F.col(doc_col).isNotNull())
+        .groupBy(doc_col, token_col)
+        .agg(F.sum(count_col).alias("tc"))
     )
     doc_totals = per.groupBy(doc_col).agg(F.sum("tc").alias("doc_total"))
     corpus = doc_totals.agg(

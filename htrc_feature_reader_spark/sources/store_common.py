@@ -20,7 +20,7 @@ def require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
     one-row-per-id rule would collapse the entire history to ONE row:
     silent permanent loss of dedup history. With ANSI on, the cast errors
     only mid-job, after data may already have landed at ``out_path``.
-    Same dtype contract as the packing layer's ``_key_hash`` integral
+    Same dtype contract as ``hashing.key_hash``'s integral
     branch (byte/short/int/long); string-keyed corpora should derive a
     stable integral id first (a 31-bit rolling hash is NOT enough at
     10^9 docs — use e.g. ``xxhash64(id)`` and keep the string id as an

@@ -45,6 +45,7 @@ from htrc_feature_reader_spark.operators import (
     pack_sequences,
     sample_mixture,
 )
+from htrc_feature_reader_spark.operators.hashing import MOD
 from htrc_feature_reader_spark.operators.packing import (
     mixture_rates_from_counts,
     shuffle_sequences,
@@ -55,7 +56,6 @@ from htrc_feature_reader_spark.plans import resume_write
 
 N_BUCKETS = 64
 SPLITS = {"train": 0.96, "val": 0.02, "test": 0.02}
-_MERSENNE = (1 << 31) - 1
 
 
 def main() -> None:
@@ -95,7 +95,7 @@ def main() -> None:
         "bucket",
         F.lpad(
             (
-                F.col("shuffle_key") / F.lit(_MERSENNE // N_BUCKETS + 1)
+                F.col("shuffle_key") / F.lit(MOD // N_BUCKETS + 1)
             ).cast("int").cast("string"),
             3,
             "0",

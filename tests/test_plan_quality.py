@@ -268,3 +268,57 @@ def test_bm25_no_corpus_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert plan.count(") BroadcastNestedLoopJoin") == 1  # the 1-row funnel
+
+
+# ------------------------------------------- hash-consumer plan budgets
+# Structural budgets of the declared hash-consumer queries, read from the
+# FINAL adaptive plan after execution (the shape that actually ran, with
+# stage reuse applied), over a small seeded corpus in the documents schema.
+
+@pytest.fixture(scope="module")
+def docs_dir(spark, tmp_path_factory):
+    import random
+
+    rnd = random.Random(7)
+    vocab = "the of and data spark hash fold join scan merge window batch row".split()
+    rows = []
+    for i in range(120):
+        text = " ".join(rnd.choice(vocab) for _ in range(rnd.randint(0, 30)))
+        rows.append((i, text, rnd.choice(["en", "de", "fr"]), f"src{i % 3}", len(text)))
+    d = str(tmp_path_factory.mktemp("hashdocs"))
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
+    return d
+
+
+def _final_plan(df):
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "== Final Plan ==" in plan
+    return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
+def test_minhash_lsh_folds_words_once(spark, docs_dir):
+    """The per-word char fold is the query's dominant CPU: the LSH
+    self-join's second side and the stop-shingle count must reuse the one
+    folded exchange instead of re-running it."""
+    from __spark_entry__ import queries
+
+    plan = _final_plan(queries()["minhash_lsh"](spark, docs_dir))
+    assert plan.count("lambdafunction(aggregate(") == 1
+    assert "ReusedExchange" in plan
+
+
+def test_nb_classify_scan_and_featurization_budget(spark, docs_dir):
+    """Featurization (split, word fold, n-gram explode) runs exactly twice,
+    over the training half and over the scored corpus; every other
+    documents scan reads only ids and labels."""
+    from __spark_entry__ import queries
+
+    plan = _final_plan(queries()["nb_classify"](spark, docs_dir))
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) <= 7
+    assert sum("text#" in ln for ln in scans) == 2
+    assert plan.count(" Generate ") == 2
+    assert plan.count("lambdafunction(aggregate(") == 2

@@ -4,21 +4,33 @@ near-dup mining (recall + no-cartesian plan), exact integer-microsecond
 time arithmetic at threshold boundaries, and tf_idf plan laziness."""
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from htrc_feature_reader_spark.operators import hashing
 from htrc_feature_reader_spark.operators.dedup import (
     remove_stop_shingles,
+    token_shingle_ids,
     word_shingle_ids,
     word_shingles,
+)
+from htrc_feature_reader_spark.operators.selection import (
+    hashed_ngram_buckets,
+    ngram_buckets_sql,
 )
 from htrc_feature_reader_spark.operators.similarity import (
     near_dup_pairs,
     ndp_component,
     ndp_plane_coeffs,
 )
-from htrc_feature_reader_spark.operators.text import rolling_hash, tf_idf
+from htrc_feature_reader_spark.operators.text import (
+    BPE_ISH_PATTERN,
+    tf_idf,
+    tokenize,
+    tokenize_sql,
+)
 from htrc_feature_reader_spark.operators.windows import sessionize
 from htrc_feature_reader_spark.operators import asof_join
 
@@ -45,17 +57,101 @@ def shingle_docs(spark):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
-def test_word_shingle_ids_bit_parity(shingle_docs):
-    """Composed word-level hashing == rolling_hash of the shingle string,
-    including unicode, double spaces, and short docs."""
-    new = set(map(tuple, word_shingle_ids(shingle_docs, "text", "doc_id", n=3).collect()))
-    old = set(map(tuple, (
-        word_shingles(shingle_docs, "text", "doc_id", n=3)
-        .select("id", rolling_hash("shingle").alias("shingle_id"))
-        .collect()
-    )))
-    assert new == old
-    assert len(new) > 0
+def _grams(text, n, drop_empty=False):
+    words = [w for w in text.split(" ") if w or not drop_empty]
+    return [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+
+
+def _token_ids(text):
+    # short words map to negative token ids
+    return [len(w) * 37 - 150 for w in text.split(" ")]
+
+
+def _token_fold(toks, base=257, mod=hashing.MOD):
+    h = 0
+    for t in toks:
+        h = (h * base + t % mod) % mod
+    return h
+
+
+_TOKENS_SQL = "list_transform(string_split(text, ' '), w -> length(w) * 37 - 150)"
+
+
+def _consumer_ids(name, docs):
+    """(engine ids, reference ids, DuckDB replay SQL) of one hash consumer:
+    rows are (doc_id, id) for the distinct set consumers and
+    (doc_id, position, id) for the positional ones."""
+    spark = docs.sparkSession
+    texts = [(r["doc_id"], r["text"]) for r in docs.collect()]
+
+    def ref_rows(grams_of, hash_col):
+        rows = [(d, i, g) for d, t in texts for i, g in enumerate(grams_of(t))]
+        ref = spark.createDataFrame(rows, "doc_id string, pos int, gram string")
+        return [tuple(r) for r in ref.select("doc_id", "pos", hash_col).collect()]
+
+    rh = hashing.rolling_hash("gram")
+    if name == "word_shingle_ids":
+        eng = word_shingle_ids(docs, n=3).collect()
+        ref = {(d, h) for d, _, h in ref_rows(lambda t: _grams(t, 3), rh)}
+        sql = (f"SELECT DISTINCT doc_id, unnest(list_transform("
+               f"{hashing.ngram_strings_sql('l', 3)}, g -> {hashing.rolling_hash_sql('g')})) "
+               "FROM (SELECT doc_id, string_split(text, ' ') AS l FROM docs)")
+        return set(map(tuple, eng)), ref, sql, set
+    if name == "word_shingle_ids_dual":
+        staged = hashing.stage_word_hashes(docs, "text", "doc_id", dual=True)
+        eng = staged.select("id", F.posexplode(hashing.compose_ngrams(3, dual=True))).collect()
+        dual = rh * F.lit(1 << 31) + hashing.rolling_hash("gram", base=hashing.BASE2)
+        ref = ref_rows(lambda t: _grams(t, 3), dual)
+        sql = (f"SELECT doc_id, i - 1, {hashing.dual_hash_sql('g')} FROM (SELECT doc_id, "
+               f"unnest({hashing.ngram_strings_sql('l', 3)}) AS g, "
+               f"generate_subscripts({hashing.ngram_strings_sql('l', 3)}, 1) AS i "
+               "FROM (SELECT doc_id, string_split(text, ' ') AS l FROM docs))")
+        return sorted(map(tuple, eng)), sorted(ref), sql, sorted
+    if name in ("hashed_ngram_buckets_1", "hashed_ngram_buckets_2"):
+        n = int(name[-1])
+        eng = hashed_ngram_buckets(docs, n_buckets=hashing.MOD, ngrams=(n,)).collect()
+        ref = [(d, h) for d, _, h in ref_rows(lambda t: _grams(t, n, drop_empty=True), rh)]
+        sql = (f"SELECT doc_id, unnest({ngram_buckets_sql(n_buckets=hashing.MOD, ngrams=(n,))}) "
+               "FROM (SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS l "
+               "FROM docs)")
+        return sorted(map(tuple, eng)), sorted(ref), sql, sorted
+    if name == "token_shingle_ids":
+        toks = docs.select(
+            "doc_id",
+            F.transform(F.split("text", " "), lambda w: F.length(w) * 37 - 150).alias("tokens"),
+        )
+        eng = token_shingle_ids(toks, n=3).collect()
+        ref = {(d, _token_fold(tk[i:i + 3]))
+               for d, t in texts for tk in [_token_ids(t)] for i in range(len(tk) - 2)}
+        sql = (f"SELECT DISTINCT doc_id, unnest({hashing.token_window_ids_sql('tokens', 3)}) "
+               f"FROM (SELECT doc_id, {_TOKENS_SQL} AS tokens FROM docs)")
+        return set(map(tuple, eng)), ref, sql, set
+    assert name == "tokenize_hash"
+    eng = tokenize(docs).select("doc_id", F.posexplode("tokens")).collect()
+    ref = ref_rows(lambda t: re.findall(BPE_ISH_PATTERN, t), rh)
+    sql = (f"SELECT doc_id, i - 1, t FROM (SELECT doc_id, unnest(toks) AS t, "
+           "generate_subscripts(toks, 1) AS i "
+           f"FROM (SELECT doc_id, {tokenize_sql('text')} AS toks FROM docs))")
+    return sorted(map(tuple, eng)), sorted(ref), sql, sorted
+
+
+@pytest.mark.parametrize("consumer", [
+    "word_shingle_ids", "word_shingle_ids_dual", "hashed_ngram_buckets_1",
+    "hashed_ngram_buckets_2", "token_shingle_ids", "tokenize_hash",
+])
+def test_word_shingle_ids_bit_parity(shingle_docs, consumer):
+    """Every consumer of the hash kernel equals the character hash of its
+    gram string (the direct fold, for int tokens) and its DuckDB replay,
+    including unicode, double spaces, trailing spaces and short docs."""
+    import duckdb
+
+    eng, ref, sql, shape = _consumer_ids(consumer, shingle_docs)
+    con = duckdb.connect()
+    con.register("docs", shingle_docs.toPandas())
+    replay = shape(tuple(r) for r in con.execute(sql).fetchall())
+    assert eng == ref
+    assert replay == ref
+    assert len(ref) > 0
 
 
 def test_word_shingles_short_docs_empty_not_error(shingle_docs):

@@ -181,8 +181,8 @@ def test_temporal_split_is_map_only(ts_frame):
 
 def test_distinct_sampled_rate_inv_1_is_exact_identity(id_frame):
     # rate_inv=1 must count every distinct value (no threshold filter:
-    # h == _MERSENNE is reachable after the xorshift finalizer and
-    # 'h < _MERSENNE' would drop it — ADVICE r5)
+    # h == MOD is reachable after the xorshift finalizer and
+    # 'h < MOD' would drop it)
     out = {
         r["grp"]: (r["sampled_distinct"], r["est_distinct"])
         for r in distinct_sampled(id_frame, "val", group_col="grp",

@@ -17,9 +17,11 @@ def test_tf_idf_values(spark):
     rows = [
         ("d1", "x", 2), ("d1", "y", 2),   # d1: 4 tokens
         ("d2", "x", 1), ("d2", "z", 3),   # d2: 4 tokens
+        (None, "x", 5),                   # no document: counts toward neither df nor N
     ]
     tl = spark.createDataFrame(rows, "htid string, token string, count long")
     out = {(r["htid"], r["token"]): r for r in tf_idf(tl).collect()}
+    assert {h for h, _ in out} == {"d1", "d2"}
     # tf
     assert out[("d1", "x")]["tf"] == 0.5
     assert out[("d2", "z")]["tf"] == 0.75

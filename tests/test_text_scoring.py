@@ -15,9 +15,10 @@ from htrc_feature_reader_spark.operators.text import (
 
 
 def test_bm25_hand_computed(spark):
-    # 2 docs: d1 = {a:2, b:1} (dl 3), d2 = {a:1} (dl 1); N=2, avgdl=2
+    # 2 docs: d1 = {a:2, b:1} (dl 3), d2 = {a:1} (dl 1); N=2, avgdl=2; the
+    # NULL-doc row belongs to no document and must not move df, N or avgdl
     tc = spark.createDataFrame(
-        [("d1", "a", 2), ("d1", "b", 1), ("d2", "a", 1)],
+        [("d1", "a", 2), ("d1", "b", 1), ("d2", "a", 1), (None, "a", 4)],
         "htid string, token string, count long",
     )
     rows = {(r["htid"], r["token"]): r for r in bm25(tc, k1=1.2, b=0.75).collect()}
