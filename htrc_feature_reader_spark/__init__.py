@@ -17,11 +17,11 @@ Layout
 - ``synth``      : deterministic, seed-pure synthetic data (hash-arithmetic,
                    no driver-side RNG — generates distributed at any scale)
 - ``sources``    : EF-JSON ingest (pure explode), parquet quad read/write,
-                   id/path utilities
+                   id/path utilities, incremental dedup stores
 - ``operators``  : tokenlist folds, line-chars/section folds, chunking,
                    as-of join, window ops, sessionization, feature build,
                    dedup (exact/minhash/simhash/jaccard), similarity search,
-                   text analysis, multimodal plumbing
+                   text analysis, training-data cleaning and sampling
 - ``plans``      : checkpoint/lineage manifests + resumable writes
 - ``streaming``  : Structured Streaming variants (sessionization)
 """

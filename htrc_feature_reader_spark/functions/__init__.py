@@ -36,7 +36,6 @@ def ts_micros(c: Column | str) -> Column:
 
 def ensure_min_parallelism(
     df: "DataFrame",
-    min_partitions: int | None = None,
     size_threshold: int = 256 << 20,
 ) -> "DataFrame":
     """Round-robin spread for CPU-bound narrow stages over tiny inputs.
@@ -62,9 +61,7 @@ def ensure_min_parallelism(
     """
     if df.isStreaming:  # no static stats to inspect
         return df
-    spark = df.sparkSession
-    want = int(min_partitions or spark.sparkContext.defaultParallelism)
     size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     if 0 <= size < size_threshold:
-        return df.repartition(want)
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return df

@@ -53,7 +53,7 @@ from .pipeline import (  # noqa: F401
 from .text import lang_id, quality_features, repetition_features, tokenize  # noqa: F401
 from .vocab import remove_stopwords, restrict_to_vocab  # noqa: F401
 from .embeddings import weighted_embedding_average  # noqa: F401
-from .layout import layout_timeline, write_timeline  # noqa: F401
+from .layout import layout_timeline  # noqa: F401
 from .packing import (  # noqa: F401
     pack_documents_padded,
     pack_sequences,

@@ -20,8 +20,10 @@ Two physical strategies, same semantics:
   ``salt=<int>`` applies a fixed factor to every key; ``salt='auto'`` is
   LAZY per-key salting (see ``_salted_adaptive``) — key row counts ride
   along as an in-plan aggregate, so construction runs no driver job and
-  only actually-hot keys pay replication. ``choose_salt`` remains as an
-  explicit eager pre-pass for callers who want one global factor.
+  only actually-hot keys pay replication. Salting is not free — the build
+  timeline is replicated x salt — so it only pays when one key's window
+  work dominates a stage (at ~150k hot rows unsalted wins; the crossover
+  is millions of rows per key).
 
 - ``merge`` (grouped-map Arrow UDF): per-key ``pandas.merge_asof``. Kept
   for parity testing. Per-group state is one doc's rows — small and
@@ -45,33 +47,8 @@ from pyspark.sql.window import Window
 from ..functions import ts_micros
 
 
-def choose_salt(
-    probe: DataFrame,
-    keys: list[str],
-    target_rows_per_task: int = 500_000,
-    max_salt: int = 32,
-    sample_fraction: float = 0.01,
-) -> int:
-    """EXPLICIT PRE-PASS: pick a global salt factor from the probe's
-    hot-key mass (runs one sampled Spark job when called — call it once
-    and pass the result as ``salt=<int>``; ``asof_join(salt='auto')`` is
-    the lazy alternative and runs no job at plan-construction time).
-
-    Salting is not free — the build timeline is replicated x salt — so it
-    only pays when one key's window work dominates a stage (measured on
-    this host: at ~150k hot rows, unsalted wins; the crossover is millions
-    of rows per key). This estimates the hottest key's row count from a
-    sample and salts just enough to bring it under ``target_rows_per_task``.
-    Returns 1 (no salting) for balanced inputs.
-    """
-    sampled = probe.sample(fraction=sample_fraction, seed=7)
-    top = sampled.groupBy(*keys).count().orderBy(F.desc("count")).first()
-    if top is None:
-        return 1
-    est_hot = int(top["count"] / max(sample_fraction, 1e-9))
-    import math
-
-    return max(1, min(max_salt, math.ceil(est_hot / target_rows_per_task)))
+# per-key salt factors from salt='auto' are clamped to this
+_MAX_SALT = 32
 
 
 def _salted_adaptive(
@@ -79,10 +56,9 @@ def _salted_adaptive(
     build: DataFrame,
     keys: list[str],
     target_rows_per_task: int,
-    max_salt: int,
 ):
     """Per-key lazy salting (``salt='auto'``): each key's salt factor is
-    ceil(its probe row count / target), clamped to ``max_salt`` — computed
+    ceil(its probe row count / target), clamped to ``_MAX_SALT`` — computed
     INSIDE the plan (one extra map-side-combinable aggregate + two key
     joins), so plan construction runs no driver job and cold keys pay no
     replication at all. Build rows replicate into exactly their key's
@@ -94,7 +70,7 @@ def _salted_adaptive(
     dim = counts.select(
         *keys,
         F.least(
-            F.lit(max_salt),
+            F.lit(_MAX_SALT),
             F.greatest(
                 F.lit(1).cast("long"),
                 F.ceil(F.col("__key_rows") / F.lit(target_rows_per_task)),
@@ -151,22 +127,20 @@ def asof_join(
     tolerance_s: float | None = None,
     strategy: str = "union",
     salt: int | str | None = None,
-    matched_ts: bool = False,
     allow_exact_matches: bool = True,
     salt_target_rows: int = 500_000,
-    max_salt: int = 32,
 ) -> DataFrame:
     """As-of join ``build``'s latest values onto ``probe`` rows.
 
     Returns probe columns + one column per build value column (named as in
-    build; rename upstream on clashes) + optionally ``__matched_ts``.
+    build; rename upstream on clashes).
 
     Contract (union strategy): build-side VALUE cells must be non-null —
     the probe/build discrimination inside the window rides on
     ``last(value, ignorenulls)``, so a build row with a NULL value cell is
     invisible to the fill and an older non-null row wins for that column
-    (``__matched_ts``, tag-driven, still reports the newer row). Encode
-    "present but unknown" upstream (sentinel or coalesce) or use
+    (the tag-driven tolerance check still measures from the newer row).
+    Encode "present but unknown" upstream (sentinel or coalesce) or use
     ``strategy='merge'``, which propagates NULLs like ``pandas.merge_asof``.
     """
     keys = [on] if isinstance(on, str) else list(on)
@@ -180,14 +154,14 @@ def asof_join(
 
     if strategy == "merge":
         return _asof_merge(probe, build, keys, ts, value_cols, direction,
-                           tolerance_s, matched_ts, allow_exact_matches)
+                           tolerance_s, allow_exact_matches)
     if strategy != "union":
         raise ValueError(f"unknown strategy {strategy!r}")
 
     if salt == "auto":
         # lazy per-key salting: no driver job at plan-construction time
         probe, build, keys = _salted_adaptive(
-            probe, build, keys, salt_target_rows, max_salt
+            probe, build, keys, salt_target_rows
         )
     elif salt and salt > 1:
         probe, build, keys = _salted(probe, build, keys, salt)
@@ -281,21 +255,18 @@ def asof_join(
                 F.when(in_tol, F.col(f"__f_{c}")).alias(f"__t_{c}")
                 for c in value_cols
             ],
-            F.when(in_tol, F.col("__matched_ts")).alias("__matched_ts_tol"),
         )
-        fill_src, mts = "__t_", "__matched_ts_tol"
+        fill_src = "__t_"
     else:
-        fill_src, mts = "__f_", "__matched_ts"
+        fill_src = "__f_"
 
     out_cols = [F.col(f"__p_{c}").alias(c) for c in probe_cols]
     out_cols += [F.col(f"{fill_src}{c}").alias(c) for c in value_cols]
-    if matched_ts:
-        out_cols.append(F.col(mts).alias("__matched_ts"))
     return filled.select(*out_cols)
 
 
 def _asof_merge(probe, build, keys, ts, value_cols, direction, tolerance_s,
-                matched_ts, allow_exact_matches):
+                allow_exact_matches):
     """Grouped-map formulation: per-key pandas.merge_asof (Arrow batches)."""
     probe_cols = probe.columns
     p = probe.select(*probe_cols, F.lit(1).alias("__side"))
@@ -311,18 +282,17 @@ def _asof_merge(probe, build, keys, ts, value_cols, direction, tolerance_s,
     )
     both = p.unionByName(b, allowMissingColumns=True)
 
-    out_fields = [probe.schema[c] for c in probe_cols] + [build.schema[c] for c in value_cols]
-    from pyspark.sql.types import StructType, StructField, TimestampType
+    from pyspark.sql.types import StructType
 
-    out_schema = StructType(list(out_fields) + ([StructField("__matched_ts", TimestampType())] if matched_ts else []))
+    out_schema = StructType(
+        [probe.schema[c] for c in probe_cols] + [build.schema[c] for c in value_cols]
+    )
 
     tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         left = pdf[pdf["__side"] == 1].sort_values(ts, kind="mergesort")
         right = pdf[pdf["__side"] == 0][keys + [ts] + value_cols].sort_values(ts, kind="mergesort")
-        if matched_ts:
-            right = right.assign(__matched_ts=right[ts])
         merged = pd.merge_asof(
             left[probe_cols],
             right.drop(columns=keys),

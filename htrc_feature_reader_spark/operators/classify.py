@@ -64,7 +64,10 @@ def nb_train(
     docs, ``n_l`` their total, ``d_l`` the label's doc count. Exactly
     ``n_labels * n_buckets`` rows — bounded by construction (see module
     docstring), safe to broadcast. Rows with a NULL label are excluded
-    from training (unlabeled data).
+    from training (unlabeled data). A label whose documents yield no
+    features (e.g. all empty text) is kept: ``c_lb = n_l = 0``, so its
+    smoothed likelihoods are uniform, ``log_cond = ln(1 / n_buckets)``,
+    and its prior still counts its documents.
     """
     labeled = docs.filter(F.col(label_col).isNotNull())
     feats = hashed_ngram_buckets(labeled, text_col, id_col, n_buckets, ngrams)

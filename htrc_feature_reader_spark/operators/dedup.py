@@ -111,33 +111,19 @@ def word_shingle_ids(
     )
 
 
-def shingle_ids(
-    shingles: DataFrame, max_df: int | None = None, method: str = "hash"
-) -> DataFrame:
-    """Map shingles to integer ids; optionally drop stop-shingles present
-    in more than ``max_df`` docs (they produce degenerate LSH buckets and
-    carry no similarity signal).
-
-    method='hash' (default): polynomial rolling hash of the shingle string
-    mod 2^31-1 — computed map-side with NO shuffle, reproducible on any
-    engine (the DuckDB oracle runs the same fold). Collisions are shared by
-    construction, so results stay engine-identical; at ~n^2/2^32 odds they
-    only marginally blur similarity.
-
-    method='dense': dense_rank over a global sort — exact compact ids, but
-    a single-partition window; only for vocabulary-sized data.
+def shingle_ids(shingles: DataFrame) -> DataFrame:
+    """Map distinct shingles to integer ids: the polynomial rolling hash
+    of the shingle string mod 2^31-1 — computed map-side with NO shuffle,
+    reproducible on any engine (the DuckDB oracle runs the same fold).
+    Collisions are shared by construction, so results stay
+    engine-identical; at ~n^2/2^32 odds they only marginally blur
+    similarity. Stop-shingles are dropped upstream by
+    :func:`remove_stop_shingles`.
     """
-    if max_df is not None:
-        counts = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
-        base = counts.filter(F.col("df_count") <= max_df).select("shingle")
-    else:
-        base = shingles.select("shingle").distinct()
-    if method == "hash":
-        return base.select("shingle", rolling_hash("shingle").alias("shingle_id"))
-    if method == "dense":
-        w = Window.orderBy("shingle")
-        return base.select("shingle", (F.dense_rank().over(w) - 1).alias("shingle_id"))
-    raise ValueError(f"unknown shingle id method {method!r}")
+    return (
+        shingles.select("shingle").distinct()
+        .select("shingle", rolling_hash("shingle").alias("shingle_id"))
+    )
 
 
 def remove_stop_shingles(

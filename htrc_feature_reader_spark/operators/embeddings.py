@@ -27,16 +27,15 @@ def weighted_embedding_average(
     count_col: str = "count",
     emb_token_col: str = "token",
     emb_vec_col: str = "vector",
-    log_weight: bool = True,
 ) -> DataFrame:
     """Per-group weighted mean embedding: (group_cols..., vector, n_terms).
 
-    ``log_weight=True`` uses log1p(count) weights (the reference's choice:
+    Weights are log1p(count) (the reference's choice:
     transformations.py:36-40); tokens absent from ``embeddings`` are
     dropped (vocab intersection comes free from the inner join).
     """
     group_cols = group_cols or ["htid"]
-    w = F.log1p(F.col(count_col)) if log_weight else F.col(count_col).cast("double")
+    w = F.log1p(F.col(count_col))
 
     emb = embeddings.select(
         F.col(emb_token_col).alias(token_col),

@@ -38,17 +38,3 @@ def layout_timeline(
     )
     return out.sortWithinPartitions(*keys)
 
-
-def write_timeline(
-    df: DataFrame,
-    path: str,
-    entity_col: str = "doc_id",
-    ts_col: str = "ts",
-    n_partitions: int | None = None,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-) -> None:
-    """Write the range-partitioned, secondary-sorted timeline table."""
-    layout_timeline(df, entity_col, ts_col, n_partitions).write.mode(mode).option(
-        "compression", compression
-    ).parquet(path)

@@ -48,7 +48,6 @@ def cosine_topk(
     corpus_id: str = "vec_id",
     query_vec: str = "q_embedding",
     corpus_vec: str = "embedding",
-    broadcast_queries: bool = True,
     tie_round: int | None = None,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (query_id, vec_id, cos) per query.
@@ -60,8 +59,7 @@ def cosine_topk(
     scores (e.g. a cross-engine oracle) — raw-cos ordering can cut a row
     the rounded ordering keeps when near-ties straddle the boundary.
     """
-    q = F.broadcast(queries) if broadcast_queries else queries
-    scored = q.crossJoin(corpus).select(
+    scored = F.broadcast(queries).crossJoin(corpus).select(
         query_id,
         corpus_id,
         cosine(F.col(query_vec), F.col(corpus_vec)).alias("cos"),
@@ -321,7 +319,9 @@ def semantic_dedup(
       "keep one representative" does, at the cost of the iterative CC rounds.
 
     Returns every input row as ``(id_col, cluster_col, is_dup, dup_of)``
-    with ``dup_of`` null on survivors. Cosine comparisons use
+    with ``dup_of`` null on survivors. A vector without a positive norm
+    (empty, all zeros, or holding a NULL) has no direction: it is never a
+    duplicate and never a ``dup_of``. Cosine comparisons use
     ``round(cos, tie_round)`` so a cross-engine replay (or a rerun under
     different reduction order) cannot flip a boundary pair.
 
@@ -353,19 +353,21 @@ def semantic_dedup(
     # same result. The per-pair expression dot/(na*nb) keeps the exact
     # arithmetic shape the SQL oracle evaluates (unit-normalizing the
     # vectors instead would perturb the last float bit and could flip a
-    # round-6 boundary pair across engines).
+    # round-6 boundary pair across engines). Rows without a positive norm
+    # leave before the join: their cosine is undefined (a 0/0 that aborts
+    # under ANSI mode).
     a = df.select(
         F.col(cluster_col).alias("__c"),
         F.col(id_col).alias("__ida"),
         F.col(vec_col).alias("__va"),
         norm(F.col(vec_col)).alias("__na"),
-    )
+    ).filter(F.col("__na") > 0)
     b = df.select(
         F.col(cluster_col).alias("__c"),
         F.col(id_col).alias("__idb"),
         F.col(vec_col).alias("__vb"),
         norm(F.col(vec_col)).alias("__nb"),
-    )
+    ).filter(F.col("__nb") > 0)
     # per-pair dot via posexplode + codegen hash-agg instead of the
     # interpreted fold — bit-identical float result (one pair's elements
     # explode consecutively in one task, so the map-side partial sum runs

@@ -36,11 +36,6 @@ _LANG_MARKERS = {
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def whitespace_token_count(text) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(F.split(c, r"\s+"))
-
-
 def bpe_ish_token_count(text) -> Column:
     """Count of BPE-ish pretokenizer matches (letter runs / digit runs /
     single punctuation) — a cheap proxy for LLM token counts."""
@@ -85,7 +80,7 @@ def detect_language(
     scan -> one Python stage -> downstream JVM ops. The classifier
     libraries themselves are not bundled here — this is the documented
     plumbing seam, exercised by a deterministic fake model in tests
-    (tests/test_text_extra.py), same contract as multimodal's decoders.
+    (tests/test_text_extra.py).
     """
     # same contract on BOTH paths: withColumn would silently overwrite an
     # existing column (e.g. a stored ground-truth `lang`)

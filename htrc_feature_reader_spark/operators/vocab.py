@@ -3,8 +3,8 @@
 Reference: chunk_to_wem intersects the document vocabulary with a model's
 vocabulary and subtracts stopwords (/root/reference/htrc_features/
 transformations.py:18-27, via pandas index ops). Corpus-scale analog:
-left-semi / left-anti joins against vocabulary DataFrames — broadcast when
-the vocab is model-sized (always, in practice)."""
+left-semi / left-anti joins against vocabulary DataFrames, always broadcast:
+the vocab is model-sized."""
 
 from __future__ import annotations
 
@@ -17,13 +17,10 @@ def restrict_to_vocab(
     vocab: DataFrame,
     token_col: str = "token",
     vocab_col: str = "token",
-    broadcast: bool = True,
 ) -> DataFrame:
-    """Keep only rows whose token is in ``vocab`` (left-semi join)."""
+    """Keep only rows whose token is in ``vocab`` (broadcast left-semi join)."""
     v = vocab.select(F.col(vocab_col).alias(token_col)).distinct()
-    if broadcast:
-        v = F.broadcast(v)
-    return df.join(v, on=token_col, how="left_semi")
+    return df.join(F.broadcast(v), on=token_col, how="left_semi")
 
 
 def remove_stopwords(
@@ -31,10 +28,7 @@ def remove_stopwords(
     stopwords: DataFrame,
     token_col: str = "token",
     stop_col: str = "token",
-    broadcast: bool = True,
 ) -> DataFrame:
-    """Drop rows whose token is in ``stopwords`` (left-anti join)."""
+    """Drop rows whose token is in ``stopwords`` (broadcast left-anti join)."""
     s = stopwords.select(F.col(stop_col).alias(token_col)).distinct()
-    if broadcast:
-        s = F.broadcast(s)
-    return df.join(s, on=token_col, how="left_anti")
+    return df.join(F.broadcast(s), on=token_col, how="left_anti")

@@ -4,7 +4,7 @@ win (tight parquet min/max -> fewer files read)."""
 
 from pyspark.sql import functions as F
 
-from htrc_feature_reader_spark.operators.layout import layout_timeline, write_timeline
+from htrc_feature_reader_spark.operators.layout import layout_timeline
 from htrc_feature_reader_spark.synth import generate_sequences
 
 
@@ -30,7 +30,7 @@ def test_layout_partitions_are_disjoint_and_sorted(spark, sequences_df):
 
 def test_layout_roundtrip_and_counts(spark, sequences_df, tmp_path):
     p = str(tmp_path / "laid")
-    write_timeline(sequences_df, p, n_partitions=8)
+    layout_timeline(sequences_df, n_partitions=8).write.parquet(p)
     back = spark.read.parquet(p)
     assert back.count() == sequences_df.count()
     assert back.agg(F.sum("n_tok")).first()[0] == sequences_df.agg(F.sum("n_tok")).first()[0]
@@ -41,7 +41,7 @@ def test_layout_enables_file_pruning(spark, tmp_path):
     files than the table has (min/max pruning)."""
     seqs = generate_sequences(spark, 5000, n_docs=50, seed=9)
     p = str(tmp_path / "pruned")
-    write_timeline(seqs, p, n_partitions=10)
+    layout_timeline(seqs, n_partitions=10).write.parquet(p)
     q = spark.read.parquet(p).filter(F.col("doc_id") == "doc000049")
     plan = q._jdf.queryExecution().executedPlan().toString()
     # the filter is pushed to the scan

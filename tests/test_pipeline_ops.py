@@ -1,5 +1,5 @@
 """Training-data pipeline operators: dedup family, similarity search,
-text analysis, multimodal plumbing."""
+text analysis."""
 
 import math
 
@@ -22,7 +22,6 @@ from htrc_feature_reader_spark.operators.similarity import (
     lsh_cosine_topk,
 )
 from htrc_feature_reader_spark.operators.text import lang_id, quality_features
-from htrc_feature_reader_spark.operators import multimodal
 
 
 @pytest.fixture(scope="module")
@@ -162,68 +161,6 @@ def test_quality_features(spark):
     assert r["distinct_ratio"] == 4 / 5
     assert r["digit_ratio"] == 3 / 22
     assert r["upper_ratio"] == 1 / 22
-
-
-def test_multimodal_fake_decode(spark):
-    rows = [("m1", "image", bytearray(b"\x01\x02\x03"), ("image/png", 2, 2, None)),
-            ("m2", "audio", bytearray(b"\xff" * 10), ("audio/wav", None, None, 1000))]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    stats = multimodal.payload_stats(df).select("media_id", "n_bytes").collect()
-    assert {r["media_id"]: r["n_bytes"] for r in stats} == {"m1": 3, "m2": 10}
-    feats = multimodal.extract_features(df, decoder=multimodal.fake_decoder).collect()
-    assert all(len(r["feature"]) == 8 for r in feats)
-    # deterministic: same payload -> same features
-    again = multimodal.extract_features(df, decoder=multimodal.fake_decoder).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, again))
-
-
-def test_multimodal_stub_raises(spark):
-    rows = [("m1", "image", bytearray(b"\x01"), (None, None, None, None))]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    with pytest.raises(Exception, match="decoder|NotImplemented"):
-        multimodal.extract_features(df, decoder=None).collect()
-
-
-def test_frame_sample_plan(spark):
-    rows = [("v1", "video", None, (None, None, None, 3500))]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    frames = multimodal.frame_sample_plan(df, every_ms=1000).collect()
-    assert [r["frame_ms"] for r in frames] == [0, 1000, 2000]
-
-
-def test_resize_images_plumbing(spark):
-    """Resize runs over real Arrow batches with the schema/shape a PIL
-    resizer would ride on; the pixel step is the injected callable."""
-    import pyspark.sql.functions as F
-
-    from htrc_feature_reader_spark.operators.multimodal import (
-        fake_resizer,
-        resize_images,
-    )
-
-    media = spark.range(6).select(
-        F.col("id").alias("media_id"),
-        F.encode(F.concat(F.lit("img"), F.col("id").cast("string")), "utf-8").alias("payload"),
-    )
-    out = resize_images(media, 32, 16, resizer=fake_resizer).collect()
-    assert len(out) == 6
-    assert all(r["height"] == 32 and r["width"] == 16 for r in out)
-    expect = fake_resizer(b"img0", 32, 16)
-    got = next(r["resized"] for r in out if r["media_id"] == 0)
-    assert bytes(got) == expect
-    # stub contract: no resizer -> NotImplementedError at EXECUTOR time
-    import pytest as _pytest
-
-    with _pytest.raises(Exception) as ei:
-        resize_images(media, 8, 8).collect()
-    assert "NotImplementedError" in str(ei.value)
-    # schema derives media_id's type from the input (MEDIA_SCHEMA uses string)
-    media_s = media.select(
-        F.concat(F.lit("m"), F.col("media_id").cast("string")).alias("media_id"),
-        "payload",
-    )
-    out_s = resize_images(media_s, 4, 4, resizer=fake_resizer).collect()
-    assert {r["media_id"] for r in out_s} == {f"m{i}" for i in range(6)}
 
 
 class TestDecontaminate:

@@ -235,6 +235,8 @@ def test_tf_idf_no_forced_vocab_broadcast(spark):
         "htid string, token string, count long")
     out = tf_idf(tc)
     assert _analyzed(out).count("ResolvedHint") == 1  # the 1-row N funnel only
+    # df is a single-phase count over distinct (doc, token) rows
+    assert "count(distinct" not in _analyzed(out).lower()
     out.collect()
     final = _formatted(out)
     assert "isFinalPlan=true" in final
@@ -251,6 +253,7 @@ def test_bm25_no_forced_vocab_broadcast(spark):
         "htid string, token string, count long")
     out = bm25(tc)
     assert _analyzed(out).count("ResolvedHint") == 1
+    assert "count(distinct" not in _analyzed(out).lower()
     out.collect()
     final = _formatted(out)
     assert "isFinalPlan=true" in final

@@ -1,10 +1,11 @@
 """semantic_dedup: hand-checked drop sets, dominated-vs-components
 contracts, a union-find reference over randomized clustered vectors,
-IVF-assignment composition, and the plan shape (cluster equi-join, no
-cartesian)."""
+IVF-assignment composition, degenerate vectors, and the plan shape
+(cluster equi-join, no cartesian)."""
 
 import math
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,6 +135,32 @@ def test_plan_cluster_equijoin_no_cartesian(spark):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # the only interpreted folds are the per-row norms (a vector folded
+    # with itself); the pair dot is the codegen posexplode sum
+    folds = re.findall(r"aggregate\(zip_with\(([^,]+), ([^,]+),", plan)
+    assert folds
+    assert all(x == y for x, y in folds), folds
+    assert not any("__va" in x + y or "__vb" in x + y for x, y in folds)
+
+
+@pytest.mark.parametrize("mode", ["dominated", "components"])
+def test_degenerate_vectors_are_never_duplicates(spark, mode):
+    # zero-norm, empty and NULL-holding vectors have no direction: they
+    # neither lose to nor absorb any row (a 0/0 cosine must not abort the
+    # job under ANSI)
+    rows = [
+        (0, 0, [1.0, 0.0]),
+        (1, 0, [1.0, 0.0]),
+        (2, 0, [0.0, 0.0]),
+        (3, 0, [0.0, 0.0]),
+        (4, 0, []),
+        (5, 0, []),
+        (6, 0, [1.0, None]),
+    ]
+    got = _result(semantic_dedup(_df(spark, rows), "label", threshold=0.9, mode=mode))
+    assert got == {0: (False, None), 1: (True, 0), 2: (False, None),
+                   3: (False, None), 4: (False, None), 5: (False, None),
+                   6: (False, None)}
 
 
 def test_mode_validation(spark):

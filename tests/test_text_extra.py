@@ -1,4 +1,4 @@
-"""TF-IDF operator + Iceberg-gated source fallback."""
+"""TF-IDF operator and text-cleaning helpers."""
 
 import math
 
@@ -6,11 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from htrc_feature_reader_spark.operators.text import tf_idf
-from htrc_feature_reader_spark.sources.iceberg import (
-    current_snapshot_id,
-    iceberg_available,
-    read_sequences,
-)
 
 
 def test_tf_idf_values(spark):
@@ -31,18 +26,6 @@ def test_tf_idf_values(spark):
     assert abs(out[("d1", "y")]["idf"] - (math.log(3 / 2) + 1)) < 1e-12
     # shared token scores below unique token at equal tf
     assert out[("d1", "x")]["tf_idf"] < out[("d1", "y")]["tf_idf"]
-
-
-def test_iceberg_fallback_reads_parquet(spark, sequences_df, tmp_path):
-    assert not iceberg_available(spark)  # no runtime jars in this image
-    p = str(tmp_path / "seqs")
-    sequences_df.write.parquet(p)
-    back = read_sequences(spark, p, snapshot_id=123)  # snapshot ignored on parquet
-    assert back.count() == sequences_df.count()
-    sid = current_snapshot_id(spark, p)
-    assert sid.startswith("parquet-")
-    # content fingerprint is stable and changes with the data
-    assert sid == current_snapshot_id(spark, p)
 
 
 def test_remove_duplicate_lines(spark):
