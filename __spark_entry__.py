@@ -53,11 +53,7 @@ from htrc_feature_reader_spark.operators.hashing import (
     simhash_coeffs,
     token_window_ids_sql,
 )
-from htrc_feature_reader_spark.operators.text import (
-    BPE_ISH_PATTERN,
-    normalized_fingerprint,
-    quality_features,
-)
+from htrc_feature_reader_spark.operators.text import BPE_ISH_PATTERN, quality_features
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -836,8 +832,10 @@ def q_line_dedup(spark, sf_dir):
 
 
 def q_fingerprint(spark, sf_dir):
+    from htrc_feature_reader_spark.operators.dedup import content_digest
+
     docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", normalized_fingerprint("text").alias("fp"))
+    return docs.select("doc_id", content_digest("text", normalize=True).alias("fp"))
 
 
 def q_bpe_token_count(spark, sf_dir):

@@ -35,7 +35,8 @@ The family
   seed; ``h_i(x) = (a_i * ((x + 1) * PREMIX mod p) + b_i) mod p``. The
   multiplicative pre-mix spreads small dense ids over the ring; the +1
   keeps id 0 off the zero fixed point. MinHash signatures and the
-  embedding near-dup hyperplanes share it.
+  embedding LSH hyperplanes (``similarity.near_dup_pairs`` and
+  ``similarity.lsh_cosine_topk``) share it.
 - Mixers: :func:`key_hash` (a per-seed multiplicative hash of an integral
   or string key, :func:`seed_mult` decorrelating seeds) and :func:`mix`
   (an xorshift finalizer that breaks its affine lattice).
@@ -244,9 +245,10 @@ def affine_coeffs(n: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def affine_hash(x, a: int, b: int) -> Column:
+def affine_hash(x, a: int | Column, b: int | Column) -> Column:
     """``(a * ((x + 1) * PREMIX mod p) + b) mod p`` for a long ``x`` in
-    ``[0, p)`` (larger ``x`` would overflow the pre-mix product)."""
+    ``[0, p)`` (larger ``x`` would overflow the pre-mix product); ``a`` and
+    ``b`` are ints or long columns."""
     premixed = ((x + 1) * F.lit(PREMIX)) % F.lit(MOD)
     return (F.lit(a) * premixed + F.lit(b)) % F.lit(MOD)
 

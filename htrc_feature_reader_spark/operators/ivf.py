@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .similarity import cosine
+from .similarity import cosine, norm
 
 
 def _sq_dist(a, b):
@@ -113,12 +113,13 @@ def ivf_topk(
     to shuffle join for large serving batches — no forced hint), exact
     cosine inside the probed buckets, per-query window top-k.
     ``tie_round``: rank the k-cut by ``round(cos, tie_round)`` (id
-    tiebreak) so it agrees with consumers comparing rounded scores."""
+    tiebreak) so it agrees with consumers comparing rounded scores.
+    Vectors without a positive norm are dropped on both sides."""
     dists = [
         (cid, _sq_dist(F.col(query_vec), F.array(*[F.lit(x) for x in c])))
         for cid, c in centroids
     ]
-    ranked = queries.select(
+    ranked = queries.filter(norm(F.col(query_vec)) > 0).select(
         query_id, query_vec,
         F.array_sort(
             F.array(*[F.struct(d.alias("d"), F.lit(cid).alias("b")) for cid, d in dists])
@@ -128,7 +129,7 @@ def ivf_topk(
         F.explode(F.slice("__ranked", 1, nprobe)).alias("__p"),
     ).select(query_id, query_vec, F.col("__p.b").alias("__bucket"))
 
-    cand = ranked.join(assigned, on="__bucket")
+    cand = ranked.join(assigned.filter(norm(F.col(corpus_vec)) > 0), on="__bucket")
     scored = cand.select(
         query_id,
         F.col(corpus_id),

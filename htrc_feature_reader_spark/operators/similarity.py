@@ -9,9 +9,10 @@ path.
 Scale shape: brute force is queries x corpus — fine when the query side is
 small and broadcast (the common "probe a candidate set" case). The LSH
 variant buckets both sides by hyperplane sign bits so each query only
-scores its bucket's collisions; planes are derived deterministically from
-(seed, plane, dim) hash arithmetic, so signatures are reproducible across
-runs and engines.
+scores its bucket's collisions; both LSH operators take their planes from
+the affine family of :mod:`.hashing`, so signatures are reproducible across
+runs and engines. A vector without a positive norm (empty, all zeros, or
+holding a NULL) has no direction: no scorer here pairs or ranks it.
 """
 
 from __future__ import annotations
@@ -59,6 +60,8 @@ def cosine_topk(
     scores (e.g. a cross-engine oracle) — raw-cos ordering can cut a row
     the rounded ordering keeps when near-ties straddle the boundary.
     """
+    queries = queries.filter(norm(F.col(query_vec)) > 0)
+    corpus = corpus.filter(norm(F.col(corpus_vec)) > 0)
     scored = F.broadcast(queries).crossJoin(corpus).select(
         query_id,
         corpus_id,
@@ -73,12 +76,6 @@ def cosine_topk(
     )
 
 
-def _plane_component(seed: int, plane: int, dim_idx):
-    """Deterministic pseudo-gaussian-ish plane component in [-1, 1)."""
-    h = F.xxhash64(F.lit(seed), F.lit(plane), dim_idx)
-    return (F.pmod(h, F.lit(2_000_001)).cast("double") - 1_000_000.0) / 1_000_000.0
-
-
 def dim_indices(vec):
     """0-based dim-index array of ``vec`` — empty-safe: sequence(0, -1) is
     DESCENDING ([0, -1]), not empty, so a bare sequence over an empty
@@ -86,26 +83,6 @@ def dim_indices(vec):
     return F.when(
         F.size(vec) > 0, F.sequence(F.lit(0), F.size(vec) - 1)
     ).otherwise(F.array().cast("array<int>"))
-
-
-def hyperplane_signature(
-    vec, n_planes: int = 16, seed: int = 42
-):
-    """Sign-bit LSH signature (long) of an embedding column."""
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.transform(dim_indices(vec),
-                            lambda i: _plane_component(seed, p, i)),
-                lambda x, c: x.cast("double") * c,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig
 
 
 def ndp_plane_coeffs(n_tables: int, band_bits: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -116,12 +93,13 @@ def ndp_plane_coeffs(n_tables: int, band_bits: int, seed: int = 42) -> list[tupl
     return affine_coeffs(n_tables * band_bits, seed)
 
 
-def ndp_component(a: int, b: int, i):
+def ndp_component(a, b, i):
     """Deterministic pseudo-uniform value in [-1, 1) for dim index ``i``
     (0-based column) from exact integer arithmetic — the shared component
     formula for hyperplanes and reproducible perturbations:
     ``(affine_hash(i mod P) % 2000001 - 1000000) / 1e6``, replayed by
-    :func:`ndp_component_sql`.
+    :func:`ndp_component_sql`. The coefficients ``a``, ``b`` are ints or
+    long columns (one expression serving a whole table of planes).
 
     The index is pre-reduced mod P so callers may pass LARGE derived
     indices (e.g. dim + vec_id * stride for per-vector noise streams)
@@ -138,6 +116,38 @@ def ndp_component_sql(a: int, b: int, idx: str) -> str:
     ``idx``."""
     h = affine_hash_sql(f"({idx}) % {MOD}", a, b)
     return f"(({h}) % 2000001 - 1000000) / 1000000.0"
+
+
+def _band_signatures(ex: DataFrame, n_tables: int, band_bits: int, seed: int) -> DataFrame:
+    """``(id, band, sig)``: each vector's ``band_bits``-bit sign signature
+    in each of ``n_tables`` bands, from its exploded elements
+    ``(id, __i, __x)``. Bit ``bit`` of band ``band`` is set when plane
+    ``band * band_bits + bit``'s projection ``sum(x * ndp_component(a, b,
+    i))`` is positive after round(., 6), so a borderline-zero projection
+    cannot flip across engines' float summation.
+
+    The coefficients are data: one literal array of (band, bit, a, b)
+    structs fans every element out over the planes, so the plan holds one
+    component expression, not one per plane. Sums run in codegen hash
+    aggregation, not interpreted higher-order folds; one vector's elements
+    explode inside one task, so each (id, band, bit) partial sum runs in
+    index order and equals the sequential fold bit for bit.
+    """
+    planes = ", ".join(
+        f"named_struct('band', {p // band_bits}, 'bit', {p % band_bits}, "
+        f"'a', {a}L, 'b', {b}L)"
+        for p, (a, b) in enumerate(ndp_plane_coeffs(n_tables, band_bits, seed))
+    )
+    comp = ndp_component(F.col("a"), F.col("b"), F.col("__i").cast("long"))
+    projs = (
+        ex.select("id", "__i", "__x", F.inline(F.expr(f"array({planes})")))
+        .groupBy("id", "band", "bit")
+        .agg(F.sum(F.col("__x").cast("double") * comp).alias("__p"))
+    )
+    bit = F.expr("shiftleft(1L, bit)")
+    return projs.groupBy("id", "band").agg(
+        F.sum(F.when(F.round("__p", 6) > 0, bit).otherwise(0)).alias("sig")
+    )
 
 
 def near_dup_pairs(
@@ -165,8 +175,6 @@ def near_dup_pairs(
     Signatures use exact integer plane derivation (``ndp_plane_coeffs``),
     so the candidate set is engine-reproducible — the DuckDB oracle runs
     the same banding, making even the approximate variant value-checkable.
-    The projection sign is taken after round(., 6) so a borderline-zero
-    projection cannot flip across engines' float summation.
 
     ``exact=True`` is the brute-force all-pairs baseline (CartesianProduct;
     small inputs / recall-measurement only).
@@ -174,47 +182,21 @@ def near_dup_pairs(
     a_ = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__ea"))
     b_ = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__eb"))
     if exact:
-        cand = a_.crossJoin(b_).filter(F.col("id_a") < F.col("id_b"))
+        cand = a_.crossJoin(b_).filter(
+            (F.col("id_a") < F.col("id_b"))
+            & (norm(F.col("__ea")) > 0)
+            & (norm(F.col("__eb")) > 0)
+        )
         scored = cand.select(
             "id_a", "id_b", cosine(F.col("__ea"), F.col("__eb")).alias("cos")
         )
         return scored.filter(F.round("cos", 6) >= threshold)
 
-    coeffs = ndp_plane_coeffs(n_tables, band_bits, seed)
-    # projections via posexplode + codegen hash-agg, NOT nested higher-order
-    # functions: HOF expressions (transform/zip_with/aggregate) are
-    # interpreted per element, and n_tables*band_bits folds per row cost
-    # ~100ns/op in the expression walker (measured 17 s for 4k x 64-dim
-    # rows). Exploding to (id, i, x) and summing x * comp(i) per plane runs
-    # in whole-stage codegen — and since one row's elements explode inside
-    # one task, the partial-agg order IS the sequential index order, so the
-    # float sums match the fold formulation exactly.
     ex = emb.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.col(vec_col)).alias("__i", "__x"),
     )
-    projs = ex.groupBy("id").agg(
-        *[
-            F.sum(
-                F.col("__x").cast("double")
-                * ndp_component(a, b, F.col("__i").cast("long"))
-            ).alias(f"__p_{t}_{p}")
-            for t in range(n_tables)
-            for p in range(band_bits)
-            for a, b in [coeffs[t * band_bits + p]]
-        ]
-    )
-    sigs = []
-    for t in range(n_tables):
-        sig = F.lit(0).cast("long")
-        for p in range(band_bits):
-            proj = F.col(f"__p_{t}_{p}")
-            sig = sig + F.when(F.round(proj, 6) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        sigs.append(sig)
-    banded = projs.select(
-        "id",
-        F.posexplode(F.array(*sigs)).alias("band", "sig"),
-    )
+    banded = _band_signatures(ex, n_tables, band_bits, seed)
     ca = banded.select(F.col("id").alias("id_a"), "band", "sig")
     cb = banded.select(F.col("id").alias("id_b"), "band", "sig")
     cand = (
@@ -225,10 +207,11 @@ def near_dup_pairs(
     )
     # norms once per VECTOR (codegen agg over the exploded table), not per
     # pair — cosine per candidate is then a single interpreted dot fold
-    # instead of three (dot + 2 norms)
+    # instead of three (dot + 2 norms). Vectors without a positive norm
+    # leave here, so no candidate divides by zero.
     norms = ex.groupBy("id").agg(
         F.sqrt(F.sum(F.col("__x").cast("double") * F.col("__x").cast("double"))).alias("__n")
-    )
+    ).filter(F.col("__n") > 0)
     na = norms.select(F.col("id").alias("id_a"), F.col("__n").alias("__na"))
     nb = norms.select(F.col("id").alias("id_b"), F.col("__n").alias("__nb"))
     # per-pair score: one interpreted dot fold per candidate. Candidates
@@ -267,13 +250,26 @@ def lsh_cosine_topk(
 
     Recall is tunable via n_planes (fewer planes = bigger buckets = higher
     recall/cost). Use cosine_topk for exactness; this is the 100 TB path
-    where the corpus cannot be brute-forced per query.
+    where the corpus cannot be brute-forced per query. The buckets are
+    ``near_dup_pairs``' signatures with one band of ``n_planes`` bits;
+    ``query_id`` and ``corpus_id`` are unique keys of their sides.
     """
-    qb = queries.withColumn("_sig", hyperplane_signature(F.col(query_vec), n_planes, seed))
-    cb = corpus.withColumn("_sig", hyperplane_signature(F.col(corpus_vec), n_planes, seed))
+    q = queries.select(query_id, query_vec).filter(norm(F.col(query_vec)) > 0)
+    c = corpus.select(corpus_id, corpus_vec).filter(norm(F.col(corpus_vec)) > 0)
+
+    def sigs(df, id_col, vec_col):
+        ex = df.select(
+            F.col(id_col).alias("id"), F.posexplode(vec_col).alias("__i", "__x")
+        )
+        return _band_signatures(ex, 1, n_planes, seed).select(
+            F.col("id").alias(id_col), "sig"
+        )
+
     scored = (
-        F.broadcast(qb)
-        .join(cb, on="_sig")
+        F.broadcast(sigs(q, query_id, query_vec))
+        .join(sigs(c, corpus_id, corpus_vec), on="sig")
+        .join(F.broadcast(q), on=query_id)
+        .join(c, on=corpus_id)
         .select(query_id, corpus_id, cosine(F.col(query_vec), F.col(corpus_vec)).alias("cos"))
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col(corpus_id))
@@ -300,10 +296,11 @@ def semantic_dedup(
     corpus size — the global O(n^2) never materializes).
 
     ``cluster_col`` is any partition of the corpus: an IVF assignment
-    (:func:`~htrc_feature_reader_spark.operators.ivf.assign_ivf` bucket), an
-    LSH signature (:func:`hyperplane_signature`), or an existing category
-    column. Finer clustering = cheaper and stricter (cross-cluster dups are
-    never compared — that is the approximation being bought).
+    (the ``__bucket`` of
+    :func:`~htrc_feature_reader_spark.operators.ivf.ivf_index`), an LSH
+    bucket key, or an existing category column. Finer clustering = cheaper
+    and stricter (cross-cluster dups are never compared — that is the
+    approximation being bought).
 
     Two survivorship contracts, both deterministic under any partitioning:
 

@@ -561,13 +561,6 @@ def bigram_logprob(
     )
 
 
-def normalized_fingerprint(text) -> Column:
-    """Whitespace/case-normalized MD5 — near-dup fingerprint robust to
-    formatting noise."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.md5(F.lower(F.regexp_replace(c, r"\s+", " ")).cast("binary"))
-
-
 def remove_duplicate_lines(
     docs: DataFrame,
     min_df: int = 3,

@@ -17,9 +17,11 @@ from htrc_feature_reader_spark.operators.dedup import (
     hamming_distance,
     word_shingles,
 )
+from htrc_feature_reader_spark.operators.ivf import ivf_topk
 from htrc_feature_reader_spark.operators.similarity import (
     cosine_topk,
     lsh_cosine_topk,
+    near_dup_pairs,
 )
 from htrc_feature_reader_spark.operators.text import lang_id, quality_features
 
@@ -132,12 +134,52 @@ def test_lsh_topk_recovers_near_dup(vectors):
     q = vectors.filter("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    out = lsh_cosine_topk(q, vectors, k=3, n_planes=4)
-    got = [r["vec_id"] for r in out.collect()]
+    out = lsh_cosine_topk(q, vectors, k=3, n_planes=4).collect()
+    got = [r["vec_id"] for r in out]
+    assert len(got) <= 3
+    assert len(set(got)) == len(got)
     assert 0 in got  # identical vector always collides with itself
-    assert got == sorted(got, key=lambda v: -1 if v == 0 else v or 0)[: len(got)] or True
     # near-dup has hamming-0 signature with high probability at 4 planes
     assert 1 in got
+    # every returned score is the exact cosine of its pair
+    pdf = vectors.toPandas()
+    m = dict(zip(pdf["vec_id"], pdf["embedding"].map(np.asarray)))
+    for r in out:
+        a, b = m[0], m[r["vec_id"]]
+        want = a @ b / (np.linalg.norm(a) * np.linalg.norm(b))
+        assert math.isclose(r["cos"], want, abs_tol=1e-6)
+
+
+_DEGENERATE_SHAPES = {
+    "near_dup_banded": lambda emb, q: near_dup_pairs(emb, threshold=0.9),
+    "near_dup_exact": lambda emb, q: near_dup_pairs(emb, threshold=0.9, exact=True),
+    "cosine_topk": lambda emb, q: cosine_topk(q, emb, k=3),
+    "lsh_cosine_topk": lambda emb, q: lsh_cosine_topk(q, emb, k=3),
+    "ivf_topk": lambda emb, q: ivf_topk(
+        emb.withColumn("__bucket", F.lit(0)), [(0, [1.0, 0.0])], q, k=3, nprobe=1
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", list(_DEGENERATE_SHAPES))
+def test_zero_norm_vectors_never_scored(spark, shape):
+    """A vector without a positive norm (all zeros, empty) has no
+    direction: it is never a pair or a neighbour, and scoring it must not
+    abort the job with DIVIDE_BY_ZERO under ANSI mode."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.001]), (3, [0.0, 0.0]), (4, [0.0, 0.0]), (5, [])],
+        "vec_id long, embedding array<float>",
+    )
+    q = emb.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
+    )
+    rows = _DEGENERATE_SHAPES[shape](emb, q).collect()
+    got = {(r[0], r[1]) for r in rows}
+    if shape.startswith("near_dup"):
+        assert got == {(1, 2)}
+    else:
+        assert got == {(1, 1), (1, 2), (2, 1), (2, 2)}
+    assert all(math.isclose(r[2], 1.0, abs_tol=1e-6) for r in rows)
 
 
 def test_lang_id(spark):

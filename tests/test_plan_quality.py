@@ -86,6 +86,16 @@ def test_chunk_labels_default_unhinted_aqe_broadcasts(tl_parquet):
     hinted = chunked_tokenlist(tl_parquet, chunk_target=300, section="all",
                                broadcast_labels=True)
     assert "ResolvedHint" in _analyzed(hinted)
+    # the default derives page counts from a second evaluation of the
+    # fold; with page_counts= supplied the final plan scans the tokens once
+    assert _final_plan(out).count("FileScan parquet") == 2
+    counts = tl_parquet.sparkSession.createDataFrame(
+        tl_parquet.groupBy("htid", "page").agg(F.sum("count").alias("count")).collect()
+    )
+    seamed = chunked_tokenlist(tl_parquet, chunk_target=300, section="all",
+                               page_ref=True, page_counts=counts)
+    assert _final_plan(seamed).count("FileScan parquet") == 1
+    assert sorted(seamed.collect()) == sorted(out.collect())
 
 
 def test_jaccard_pairs_no_forced_broadcast(tl_parquet):

@@ -225,6 +225,14 @@ def test_near_dup_plan_no_cartesian(planted_vectors):
     # the exact baseline IS the cartesian product (sanity: flag works)
     plan_exact = _formatted(near_dup_pairs(planted_vectors, threshold=0.9, exact=True))
     assert "CartesianProduct" in plan_exact or "BroadcastNestedLoopJoin" in plan_exact
+    # plane coefficients are data: the 64 planes of an 8x8 banding share
+    # one component expression (its 2000001 literal), printed once under
+    # each side of the signature self-join, instead of one per plane
+    local = planted_vectors.sparkSession.createDataFrame(
+        planted_vectors.collect(), planted_vectors.schema
+    )
+    banded = near_dup_pairs(local, threshold=0.9, n_tables=8, band_bits=8)
+    assert banded._jdf.queryExecution().analyzed().toString().count("2000001") == 2
 
 
 # ------------------------------------------------------ integer-time edges
