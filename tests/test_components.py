@@ -129,6 +129,18 @@ def test_clean_corpus_cluster_survivorship(spark):
                                        survivorship="wat")).collect()
 
 
+# A pair whose only overlap is its first 7 words (5 of 18 word 3-shingles
+# each): found once by searching shared-word counts and seeds of this
+# "shared{i} ... w{seed}n{i}" shape. The hash family is deterministic, so
+# the pair stays an LSH candidate with a low signature agreement.
+LOW_AGREEMENT_PAIR = (
+    "shared0 shared1 shared2 shared3 shared4 shared5 shared6 w82n7 w82n8 "
+    "w82n9 w82n10 w82n11 w82n12 w82n13 w82n14 w82n15 w82n16 w82n17 w82n18 w82n19",
+    "shared0 shared1 shared2 shared3 shared4 shared5 shared6 w83n7 w83n8 "
+    "w83n9 w83n10 w83n11 w83n12 w83n13 w83n14 w83n15 w83n16 w83n17 w83n18 w83n19",
+)
+
+
 def test_clean_corpus_verification_spares_non_dups(spark):
     """A pair that collides in an LSH band but has LOW signature agreement
     must survive with the default threshold and be dropped only when
@@ -141,40 +153,27 @@ def test_clean_corpus_verification_spares_non_dups(spark):
         CleanConfig, clean_corpus,
     )
 
-    rng = random.Random(123)
+    docs = spark.createDataFrame(
+        list(enumerate(LOW_AGREEMENT_PAIR, start=1)), "doc_id long, text string"
+    )
+    # the fixture checks itself: an LSH candidate that fails the 0.5
+    # signature-agreement bar
+    sigs = minhash_signatures(word_shingle_ids(docs, "text", "doc_id", n=3))
+    pairs = lsh_candidate_pairs(sigs).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
+    est = verify_pairs_by_signature(
+        spark.createDataFrame(pairs, "id_a long, id_b long"), sigs, 0.0
+    ).collect()[0]["est_jaccard"]
+    assert est < 0.5
 
-    def doc(seed, share):
-        words = [f"w{seed}n{i}" for i in range(150)]
-        for i in range(share):
-            words[i] = f"shared{i}"
-        return " ".join(words)
-
-    # search for a seeded pair that IS an LSH candidate but fails the
-    # 0.5 signature-agreement bar (low true overlap)
-    found = None
-    for trial in range(40):
-        a, b = doc(2 * trial, 18), doc(2 * trial + 1, 18)
-        docs = spark.createDataFrame(
-            [(1, a), (2, b)], "doc_id long, text string"
-        )
-        sh = word_shingle_ids(docs, "text", "doc_id", n=3)
-        sigs = minhash_signatures(sh)
-        pairs = lsh_candidate_pairs(sigs).collect()
-        if not pairs:
-            continue
-        est = verify_pairs_by_signature(
-            spark.createDataFrame(pairs, "id_a long, id_b long"), sigs, 0.0
-        ).collect()[0]["est_jaccard"]
-        if est < 0.5:
-            found = docs
-            break
-    if found is None:
-        pytest.skip("no low-agreement LSH collision found in 40 seeds")
-
-    cfg = CleanConfig(min_distinct_ratio=0.05)
-    kept_verified = {r["doc_id"] for r in clean_corpus(found, cfg).collect()}
+    # no stop-shingle cap: in a two-doc corpus every shared shingle is in
+    # more than half the docs, so the 0.5 default would strip the whole
+    # overlap and no pair could collide
+    cfg = CleanConfig(min_distinct_ratio=0.05, stop_shingle_frac=None)
+    kept_verified = {r["doc_id"] for r in clean_corpus(docs, cfg).collect()}
     assert kept_verified == {1, 2}  # candidate, but NOT a verified dup
 
-    cfg_raw = CleanConfig(min_distinct_ratio=0.05, near_dup_threshold=None)
-    kept_raw = {r["doc_id"] for r in clean_corpus(found, cfg_raw).collect()}
+    cfg_raw = CleanConfig(min_distinct_ratio=0.05, stop_shingle_frac=None,
+                          near_dup_threshold=None)
+    kept_raw = {r["doc_id"] for r in clean_corpus(docs, cfg_raw).collect()}
     assert kept_raw == {1}  # old behavior: bare candidacy deletes doc 2
