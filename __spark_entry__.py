@@ -37,10 +37,9 @@ from htrc_feature_reader_spark.operators import (
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
-    remove_stop_shingles,
     sessionize,
-    shingle_ids,
     simhash,
+    stop_capped_shingle_ids,
     term_page_freqs,
     tokens_per_page,
 )
@@ -63,17 +62,6 @@ PAGE_SIZE = 40  # tokens per synthetic "page" of a document
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _shingled_doc_count(docs: DataFrame, n: int, text_col: str = "text") -> DataFrame:
-    """Lazy 1-row count of docs that yield >= 1 word ``n``-shingle — a doc
-    does iff it has >= n space-split words, so this equals (bit-exactly)
-    the distinct-id count of ``word_shingle_ids(docs, n=n)`` without
-    re-running the word-hash fold (the ``n_docs`` seam on
-    ``remove_stop_shingles``)."""
-    return docs.filter(
-        F.size(F.split(F.col(text_col), " ")) >= int(n)
-    ).agg(F.count(F.lit(1)).alias("__n_docs"))
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,14 +571,9 @@ def q_jaccard_pairs(spark, sf_dir):
     char pass per doc). Jaccard over hashed ids can merge colliding
     shingles; the oracle replays the identical hash family, so even
     collisions agree (the repo's standard exact-integer oracle trick)."""
-    from htrc_feature_reader_spark.operators.dedup import word_shingle_ids
-
-    docs = _t(spark, sf_dir, "documents")
-    sh = word_shingle_ids(docs, "text", "doc_id", n=3).withColumnRenamed(
-        "shingle_id", "shingle"
-    )
-    sh = remove_stop_shingles(sh, max_df_frac=0.5, assume_distinct=True,
-                              n_docs=_shingled_doc_count(docs, n=3))
+    sh = stop_capped_shingle_ids(
+        _t(spark, sf_dir, "documents"), n=3
+    ).withColumnRenamed("shingle_id", "shingle")
     return jaccard_pairs(sh, threshold=0.2).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jacc"
     )
@@ -604,13 +587,7 @@ def q_minhash_lsh(spark, sf_dir):
     Shingle ids come from the shuffle-free word-composed rolling hash
     (map-side, engine-portable, one char pass per doc) — no shingle
     strings materialized, no vocabulary build, no global sort."""
-    from htrc_feature_reader_spark.operators.dedup import word_shingle_ids
-
-    docs = _t(spark, sf_dir, "documents")
-    ds = word_shingle_ids(docs, "text", "doc_id", n=3)
-    ds = remove_stop_shingles(ds, max_df_frac=0.5, shingle_col="shingle_id",
-                              assume_distinct=True,
-                              n_docs=_shingled_doc_count(docs, n=3))
+    ds = stop_capped_shingle_ids(_t(spark, sf_dir, "documents"), n=3)
     sigs = minhash_signatures(ds, n_hashes=_MH_N, seed=_MH_SEED)
     return lsh_candidate_pairs(sigs, n_bands=4, rows_per_band=2).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
@@ -626,13 +603,8 @@ def q_dedup_clusters(spark, sf_dir):
     The oracle replays the identical pair set and resolves components by
     recursive reachability + min."""
     from htrc_feature_reader_spark.operators.components import connected_components
-    from htrc_feature_reader_spark.operators.dedup import word_shingle_ids
 
-    docs = _t(spark, sf_dir, "documents")
-    ds = word_shingle_ids(docs, "text", "doc_id", n=3)
-    ds = remove_stop_shingles(ds, max_df_frac=0.5, shingle_col="shingle_id",
-                              assume_distinct=True,
-                              n_docs=_shingled_doc_count(docs, n=3))
+    ds = stop_capped_shingle_ids(_t(spark, sf_dir, "documents"), n=3)
     sigs = minhash_signatures(ds, n_hashes=_MH_N, seed=_MH_SEED)
     ver = lsh_candidate_pairs(sigs, n_bands=4, rows_per_band=2,
                               verify_threshold=0.25)

@@ -22,12 +22,10 @@ from .dedup import (  # noqa: F401
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
-    remove_stop_shingles,
-    shingle_ids,
+    signature_agreement,
     simhash,
-    verify_pairs_by_signature,
+    stop_capped_shingle_ids,
     word_shingle_ids,
-    word_shingles,
 )
 from .components import connected_components  # noqa: F401
 from .stats import (  # noqa: F401

@@ -15,7 +15,8 @@ Scale notes: every operator is groupBy/join-shaped (AQE-splittable). The
 MinHash signature build aggregates per (doc, hash_i) with min() — a partial
 agg — then packs; LSH pairs come from a self-join on (band, bucket), which
 is bounded by bucket size, not corpus size. A stop-shingle filter (drop
-shingles appearing in > max_df docs) keeps degenerate buckets from
+shingles appearing in > max_df_frac of all docs,
+:func:`stop_capped_shingle_ids`) keeps degenerate buckets from
 exploding — the standard trick for web-scale MinHash.
 """
 
@@ -31,11 +32,9 @@ from .hashing import (
     affine_coeffs,
     affine_hash,
     compose_ngrams,
-    rolling_hash,
     simhash_coeffs,
     stage_word_hashes,
     token_window_ids,
-    window_starts,
 )
 
 def content_digest(col, normalize: bool = False):
@@ -59,25 +58,6 @@ def exact_duplicates(
         df.select(content_digest(text_col, normalize).alias("digest"), F.col(id_col))
         .groupBy("digest")
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
-    )
-
-
-def word_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle). Pure Catalyst:
-    split + transform over index sequence + explode + distinct."""
-    from ..functions import ensure_min_parallelism
-
-    df = ensure_min_parallelism(df)  # CPU-bound explode: spread tiny inputs
-    arr = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        window_starts(arr, n),
-        lambda i: F.concat_ws(" ", *[F.element_at(arr, i + j + 1) for j in range(n)]),
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(grams).alias("shingle"))
-        .distinct()
     )
 
 
@@ -111,32 +91,18 @@ def word_shingle_ids(
     )
 
 
-def shingle_ids(shingles: DataFrame) -> DataFrame:
-    """Map distinct shingles to integer ids: the polynomial rolling hash
-    of the shingle string mod 2^31-1 — computed map-side with NO shuffle,
-    reproducible on any engine (the DuckDB oracle runs the same fold).
-    Collisions are shared by construction, so results stay
-    engine-identical; at ~n^2/2^32 odds they only marginally blur
-    similarity. Stop-shingles are dropped upstream by
-    :func:`remove_stop_shingles`.
-    """
-    return (
-        shingles.select("shingle").distinct()
-        .select("shingle", rolling_hash("shingle").alias("shingle_id"))
-    )
-
-
-def remove_stop_shingles(
-    doc_shingles: DataFrame,
-    max_df: int | None = None,
+def stop_capped_shingle_ids(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
     max_df_frac: float | None = 0.5,
-    id_col: str = "id",
-    shingle_col: str = "shingle",
-    assume_distinct: bool = False,
-    n_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Drop stop-shingles — shingles present in more than ``max_df`` docs
-    (or ``max_df_frac`` of all docs) — before MinHash/LSH or Jaccard.
+    """:func:`word_shingle_ids` with stop-shingles dropped: a shingle whose
+    document frequency exceeds ``max_df_frac`` of the corpus size N is
+    removed before MinHash/LSH or Jaccard. ``max_df_frac=None`` returns
+    ``word_shingle_ids(docs, ...)`` unchanged; 1.0 runs the stage but
+    drops nothing.
 
     This is the guard that keeps web-scale near-dup mining non-quadratic:
     one viral shingle ("of the and", a boilerplate footer) puts every doc
@@ -145,67 +111,38 @@ def remove_stop_shingles(
     signal (they match everything), so dropping them barely moves Jaccard
     while bounding every bucket.
 
-    Plan shape: one aggregate over the shingle table (map-side combinable)
-    produces the stop set, which anti-joins back. Never a join against the
-    keep set (that's vocabulary-sized). The corpus size for the fractional
-    form rides in as a broadcast 1-row aggregate — no driver action at
-    plan-construction time.
+    Counting contract: df and N both count INPUT ROWS, so each row of
+    ``docs`` is one document for the cap. df is the number of (id,
+    shingle_id) rows per shingle, which ``word_shingle_ids`` makes
+    distinct per row. N is the number of rows with at least ``n`` words
+    after ``split(text, ' ')``, exactly the rows that yield a shingle. A
+    ``doc_id`` spanning two rows counts twice in both; with a unique id
+    per row (every caller here) the row counts are the distinct-doc
+    counts. N comes from that cheap predicate over ``docs``, so the
+    word-hash fold runs once.
 
-    Broadcast policy: the stop set is forced-broadcast ONLY for the
-    fractional form, where it is bounded by construction independent of
-    corpus size: sum(df) = n_docs * avg_shingles_per_doc, so at most
-    avg_shingles_per_doc / max_df_frac shingles can each exceed
-    max_df_frac * n_docs (~2x a document's shingle count at the 0.5
-    default — kilobytes). An absolute ``max_df`` gives no such bound —
-    max_df=5 on a web corpus stops most of the VOCABULARY — so that form
-    stays unhinted and AQE picks broadcast vs shuffle from the stop set's
-    actual size.
-
-    ``n_docs``: optional lazy 1-row ``__n_docs`` aggregate for the
-    fractional threshold. The default derivation (count of distinct ids
-    in ``doc_shingles``) re-evaluates the whole shingle subplan — for
-    shingle streams that is a full extra pass of the expensive word-hash
-    fold over the corpus. Callers that can state the same number from a
-    cheap predicate (a doc yields >= 1 n-shingle iff it has >= n
-    space-split words, so ``docs.filter(size(split(text, ' ')) >=
-    n).agg(count(*))`` is bit-identical) should pass it here.
-
-    Fold-once plan shape: with ``assume_distinct=True`` the input is
-    repartitioned by ``shingle_col`` FIRST and both consumers (the df
-    aggregation and the anti join's left side) hang off that single
-    exchange, which AQE's ReuseExchange materializes once — the upstream
-    fold runs one time instead of twice. The df aggregation then needs no
-    exchange of its own (partitioning already satisfied). The cost is one
-    shuffle of the narrow (id, shingle_id) pair table; the saved fold is
-    a full interpreted char pass over the corpus, which measures several
-    times the shuffle.
+    Plan shape: the shingles are repartitioned on ``shingle_id`` and both
+    the df aggregate and the anti join's left side read that one
+    exchange, which AQE's ReuseExchange materializes once. The stop set
+    is force-broadcast: it is bounded by construction, independent of
+    corpus size (sum(df) = N * avg_shingles_per_doc, so at most
+    avg_shingles_per_doc / max_df_frac shingles can exceed
+    max_df_frac * N, ~2x a document's shingle count at the 0.5 default).
+    N rides in as a broadcast 1-row aggregate, so building the plan runs
+    no driver action.
     """
-    if max_df is None and max_df_frac is None:
-        return doc_shingles
-    # document frequency = DISTINCT docs per shingle: inputs with repeated
-    # (doc, shingle) rows (non-deduped shingle streams) must not inflate df.
-    # assume_distinct=True skips the dedup shuffle — pass it when the input
-    # is already distinct per (doc, shingle) (word_shingles /
-    # word_shingle_ids guarantee it for unique doc ids), keeping the hot
-    # paths at one map-side-combinable aggregate over the shingle table.
-    if assume_distinct:
-        doc_shingles = doc_shingles.repartition(F.col(shingle_col))
-        pairs = doc_shingles.select(id_col, shingle_col)
-    else:
-        pairs = doc_shingles.select(id_col, shingle_col).distinct()
-    counts = pairs.groupBy(shingle_col).agg(F.count(F.lit(1)).alias("__df"))
-    if max_df is not None:
-        stop = counts.filter(F.col("__df") > max_df).select(shingle_col)
-    else:
-        if n_docs is None:
-            n_docs = doc_shingles.select(id_col).distinct().agg(
-                F.count(F.lit(1)).alias("__n_docs")
-            )
-        stop = counts.join(F.broadcast(n_docs)).filter(
-            F.col("__df") > F.col("__n_docs") * F.lit(float(max_df_frac))
-        ).select(shingle_col)
-        stop = F.broadcast(stop)  # bounded by construction (see docstring)
-    return doc_shingles.join(stop, on=shingle_col, how="left_anti")
+    sh = word_shingle_ids(docs, text_col, id_col, n=n)
+    if max_df_frac is None:
+        return sh
+    n_docs = docs.filter(
+        F.size(F.split(F.col(text_col), " ")) >= int(n)
+    ).agg(F.count(F.lit(1)).alias("__n_docs"))
+    sh = sh.repartition(F.col("shingle_id"))
+    counts = sh.groupBy("shingle_id").agg(F.count(F.lit(1)).alias("__df"))
+    stop = counts.join(F.broadcast(n_docs)).filter(
+        F.col("__df") > F.col("__n_docs") * F.lit(float(max_df_frac))
+    ).select("shingle_id")
+    return sh.join(F.broadcast(stop), on="shingle_id", how="left_anti")
 
 
 def minhash_signatures(
@@ -264,7 +201,12 @@ def band_rows(
     signature store (:mod:`..sources.signature_store`): the store's
     batch-vs-history collision join is only equivalent to the one-shot
     self-join if both sides band identically, so the slice expression
-    must not drift between them."""
+    must not drift between them.
+
+    Requires ``n_bands * rows_per_band <= size(sig)``: a band past the end
+    of the signature slices to ``[]`` for every doc, and that one shared
+    empty bucket makes every pair a candidate (:class:`..pipeline.CleanConfig`
+    rejects such configs)."""
     return signatures.select(
         "id",
         "sig",
@@ -275,6 +217,18 @@ def band_rows(
             ])
         ).alias("band", "bucket"),
     )
+
+
+def signature_agreement(a, b):
+    """Fraction of equal positions between two MinHash signature columns
+    (names or Columns): the estimated Jaccard of the two shingle sets.
+    One zip_with fold over the pair's row, divided by ``size(a)``."""
+    matches = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return matches / F.size(a)
 
 
 def lsh_candidate_pairs(
@@ -294,12 +248,9 @@ def lsh_candidate_pairs(
 
     ``verify_threshold`` FUSES signature verification into the miner: the
     self-join already carries both sides' full signatures, so the
-    estimated Jaccard (fraction of agreeing positions — see
-    ``verify_pairs_by_signature``) is one zip_with on the joined row,
-    filtered BEFORE the distinct's shuffle. Zero extra joins and no
-    re-evaluation of the signature subplan — the standalone verifier
-    costs two key joins against ``signatures`` (re-running MinHash when
-    the plan isn't materialized); use it only for pairs from elsewhere.
+    estimated Jaccard (:func:`signature_agreement`) is one zip_with on the
+    joined row, filtered BEFORE the distinct's shuffle. Zero extra joins
+    and no re-evaluation of the signature subplan.
     """
     bands = band_rows(signatures, n_bands, rows_per_band)
     if max_bucket is not None:
@@ -313,53 +264,10 @@ def lsh_candidate_pairs(
                      "band", "bucket")
     joined = a.join(b, on=["band", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
     if verify_threshold is not None:
-        matches = F.aggregate(
-            F.zip_with("__sig_a", "__sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
         joined = joined.filter(
-            matches / F.size("__sig_a") >= verify_threshold
+            signature_agreement("__sig_a", "__sig_b") >= verify_threshold
         )
     return joined.select("id_a", "id_b").distinct()
-
-
-def verify_pairs_by_signature(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    threshold: float = 0.5,
-    keep_estimate: bool = True,
-) -> DataFrame:
-    """Filter LSH candidate pairs by the MinHash-estimated Jaccard — the
-    fraction of agreeing signature positions — keeping pairs with estimate
-    >= ``threshold``.
-
-    Raw LSH banding has a significant false-positive floor at web scale
-    (with 4 bands x 2 rows the collision odds are ~1-(1-s^2)^4 — ~15% at
-    true Jaccard 0.2), so dropping documents on bare candidacy silently
-    deletes non-duplicates. This check is LAZY and cheap: two key joins
-    against the signature table (already computed for banding) and one
-    fixed-width zip_with — no re-scan of shingles, no extra shuffle beyond
-    the joins. For exact verification on the survivors, feed the result to
-    :func:`jaccard_pairs` instead.
-
-    Returns (id_a, id_b[, est_jaccard]).
-    """
-    sa = signatures.select(F.col("id").alias("id_a"), F.col("sig").alias("__sa"))
-    sb = signatures.select(F.col("id").alias("id_b"), F.col("sig").alias("__sb"))
-    matches = F.aggregate(
-        F.zip_with("__sa", "__sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    est = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", matches / F.size("__sa"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    cols = ["id_a", "id_b"] + (["est_jaccard"] if keep_estimate else [])
-    return est.select(*cols)
 
 
 def jaccard_pairs(
@@ -800,8 +708,7 @@ def token_shingle_ids(
     values, ``fold (h*base + pmod(tok, mod)) % mod`` — the same hash
     family as the word path, so every downstream consumer
     (:func:`minhash_signatures`, :func:`lsh_candidate_pairs`,
-    :func:`shingle_ids` caps, :func:`boilerplate_fraction`-style counts)
-    composes unchanged.
+    :func:`boilerplate_fraction`-style counts) composes unchanged.
 
     Unlike the word path there is no per-word inner hash to amortize, so
     the direct per-index fold is O(n) per shingle (O(len * n) per doc,

@@ -34,7 +34,7 @@ from .components import connected_components
 from .dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
-    remove_stop_shingles,
+    stop_capped_shingle_ids,
     word_shingle_ids,
 )
 from .text import bpe_ish_token_count, lang_id, quality_features
@@ -56,10 +56,11 @@ class CleanConfig:
     lsh_bands: int = 4
     lsh_rows: int = 2
     shingle_n: int = 3
-    # corpus-frequency stop-shingle cap for the ONE-SHOT near-dup miner;
-    # None (or 1.0) skips the cap entirely. Incremental ingest IGNORES this
-    # field (corpus frequencies are batch-dependent) and warns unless it is
-    # neutralized — pass ingest_clean_batch(stop_shingles=...) there instead.
+    # corpus-frequency stop-shingle cap for the ONE-SHOT near-dup miner
+    # (dedup.stop_capped_shingle_ids); None skips the stage, and 1.0 runs
+    # it but drops nothing. Incremental ingest IGNORES this field (corpus
+    # frequencies are batch-dependent) and warns unless it is neutralized
+    # — pass ingest_clean_batch(stop_shingles=...) there instead.
     stop_shingle_frac: float | None = 0.5
     # minimum MinHash-estimated Jaccard (fraction of agreeing signature
     # positions) for a candidate pair to count as a duplicate; None skips
@@ -74,6 +75,16 @@ class CleanConfig:
     # (armed by clean_corpus(eval_df=...)); 13 is the standard rule
     decontaminate_n: int = 13
     extra_filters: list = field(default_factory=list)  # extra Column predicates
+
+    def __post_init__(self):
+        # a band past the end of the signature slices to [] for every doc,
+        # and that one shared empty bucket makes every pair a candidate
+        if self.lsh_bands * self.lsh_rows > self.minhash_hashes:
+            raise ValueError(
+                f"lsh_bands * lsh_rows ({self.lsh_bands} * {self.lsh_rows}) "
+                f"exceeds minhash_hashes ({self.minhash_hashes}): the bands "
+                "past the signature's end would pair every document"
+            )
 
 
 def _quality_lang(docs: DataFrame, cfg: CleanConfig, text_col: str) -> DataFrame:
@@ -143,18 +154,8 @@ def clean_corpus(
     )
 
     if cfg.near_dup:
-        sh = word_shingle_ids(q, text_col, id_col, n=cfg.shingle_n)
-        if cfg.stop_shingle_frac is not None:
-            # n_docs from the cheap >=n-words predicate over the survivor
-            # frame — bit-identical to the distinct-id count of sh, no
-            # second evaluation of the shingle fold
-            n_docs = q.filter(
-                F.size(F.split(F.col(text_col), " ")) >= int(cfg.shingle_n)
-            ).agg(F.count(F.lit(1)).alias("__n_docs"))
-            sh = remove_stop_shingles(
-                sh, max_df_frac=cfg.stop_shingle_frac, shingle_col="shingle_id",
-                assume_distinct=True, n_docs=n_docs,
-            )
+        sh = stop_capped_shingle_ids(q, text_col, id_col, n=cfg.shingle_n,
+                                     max_df_frac=cfg.stop_shingle_frac)
         sigs = minhash_signatures(sh, n_hashes=cfg.minhash_hashes)
         # never drop on bare candidacy: the signature-estimated Jaccard must
         # clear the threshold. Verification is FUSED into the band self-join
@@ -289,9 +290,9 @@ def ingest_clean_batch(
       batch boundaries. A non-neutralized value (anything but ``None`` /
       ``1.0``) draws a ``UserWarning`` unless ``stop_shingles`` is given.
       Pass ``stop_shingles`` (a fixed DataFrame with a ``shingle_id``
-      column, e.g. mined once from a reference corpus via
-      ``remove_stop_shingles``'s complement) for the same protection with
-      batch-independent semantics.
+      column, e.g. the shingle ids of a reference corpus that
+      :func:`..dedup.stop_capped_shingle_ids` drops) for the same
+      protection with batch-independent semantics.
 
     Crash ordering (same contract as both stores): survivors' DATA lands
     at ``out_path`` BEFORE either store is appended, and between the two

@@ -63,7 +63,6 @@ def detect_language(
     out_col: str = "lang",
     method: str = "heuristic",
     model_fn=None,
-    batch_hint: str = "pandas.Series[str] -> pandas.Series[str]",
 ) -> DataFrame:
     """Attach a language column.
 
@@ -92,7 +91,8 @@ def detect_language(
         raise ValueError(f"unknown language-id method {method!r}")
     if model_fn is None:
         raise ValueError(
-            f"method='model' needs model_fn ({batch_hint}); "
+            "method='model' needs model_fn "
+            "(pandas.Series[str] -> pandas.Series[str]); "
             "pass e.g. a fastText predict wrapper"
         )
     import pandas as pd  # local: keep module import light
@@ -116,7 +116,6 @@ def tokenize(
     method: str = "hash",
     tokenizer_fn=None,
     vocab_size: int | None = None,
-    batch_hint: str = "pandas.Series[str] -> iterable of list[int]",
 ) -> DataFrame:
     """Attach a token-id array column — the input :func:`..packing.pack_sequences`
     consumes, making tokenize -> pack -> train-shards one lazy plan.
@@ -156,7 +155,8 @@ def tokenize(
         raise ValueError(f"unknown tokenize method {method!r}")
     if tokenizer_fn is None:
         raise ValueError(
-            f"method='model' needs tokenizer_fn ({batch_hint}); "
+            "method='model' needs tokenizer_fn "
+            "(pandas.Series[str] -> iterable of list[int]); "
             "pass e.g. a tiktoken encode_batch wrapper"
         )
     import pandas as pd  # local: keep module import light

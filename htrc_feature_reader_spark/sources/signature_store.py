@@ -38,7 +38,7 @@ shuffle-free — indexing 10^9 documents costs each ingest one map-side
 probe of the store, not a corpus shuffle. Store-side banding is a
 map-side ``posexplode`` over the shard scan (no shuffle). Degenerate
 buckets are the caller's concern at mining time: corpus-frequency-based
-stop-shingle capping (``remove_stop_shingles``) is batch-dependent and
+stop-shingle capping (``stop_capped_shingle_ids``) is batch-dependent and
 would BREAK the equivalence contract — for incremental use, filter
 shingles against a FIXED stop list (or cap with ``max_bucket`` at a
 documented recall cost) instead.
@@ -67,6 +67,7 @@ from ..operators.dedup import (
     band_rows,
     lsh_candidate_pairs,
     minhash_signatures,
+    signature_agreement,
     word_shingle_ids,
 )
 from .store_common import (
@@ -143,14 +144,9 @@ def neardup_against_store(
     sb = band_rows(store, n_bands, rows_per_band).select(
         F.col("sig").alias("__ssig"), "band", "bucket"
     )
-    agree = F.aggregate(
-        F.zip_with("__bsig", "__ssig", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
     # fail CLOSED on signature-length drift (n_hashes changed between the
     # recorded history and this batch): zip_with pads the shorter side
-    # with nulls, (x == y) on null is null, agree goes null, and
+    # with nulls, (x == y) on null is null, the agreement goes null, and
     # 'null >= threshold' would silently evaluate every collision to
     # no-drop — re-admitting all historical near-dups with zero errors.
     # assert_true errors the job on the first colliding mismatched pair
@@ -167,7 +163,8 @@ def neardup_against_store(
     ).isNull()
     cross = (
         bb.join(sb, on=["band", "bucket"])
-        .filter(len_guard & (agree / F.size("__bsig") >= threshold))
+        .filter(len_guard
+                & (signature_agreement("__bsig", "__ssig") >= threshold))
         .select(F.col("__bid").alias("__drop_id"))
     )
 

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from htrc_feature_reader_spark.operators.components import connected_components
-from htrc_feature_reader_spark.operators.dedup import verify_pairs_by_signature
+from htrc_feature_reader_spark.operators.dedup import signature_agreement
 
 
 def _cc(spark, edges):
@@ -79,7 +79,17 @@ def test_random_graphs_match_union_find(spark):
         assert _cc(spark, edges) == expect, f"trial {trial}"
 
 
-def test_verify_pairs_by_signature_exact_fractions(spark):
+def _agreement(sigs, pairs):
+    """{(id_a, id_b): signature_agreement} over the given id pairs."""
+    a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sa"))
+    b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sb"))
+    est = pairs.join(a, "id_a").join(b, "id_b").select(
+        "id_a", "id_b", signature_agreement("sa", "sb").alias("est")
+    )
+    return {(r["id_a"], r["id_b"]): r["est"] for r in est.collect()}
+
+
+def test_signature_agreement_exact_fractions(spark):
     sigs = spark.createDataFrame(
         [(1, [10, 20, 30, 40]), (2, [10, 20, 30, 41]),
          (3, [10, 99, 98, 97]), (4, [1, 2, 3, 4])],
@@ -88,14 +98,7 @@ def test_verify_pairs_by_signature_exact_fractions(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "id_a long, id_b long"
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in verify_pairs_by_signature(pairs, sigs, threshold=0.25).collect()
-    }
-    assert got == {(1, 2): 0.75, (1, 3): 0.25}  # (1,4): 0 filtered
-    kept = verify_pairs_by_signature(pairs, sigs, 0.5, keep_estimate=False)
-    assert kept.columns == ["id_a", "id_b"]
-    assert [tuple(r) for r in kept.collect()] == [(1, 2)]
+    assert _agreement(sigs, pairs) == {(1, 2): 0.75, (1, 3): 0.25, (1, 4): 0.0}
 
 
 def test_clean_corpus_cluster_survivorship(spark):
@@ -161,10 +164,8 @@ def test_clean_corpus_verification_spares_non_dups(spark):
     sigs = minhash_signatures(word_shingle_ids(docs, "text", "doc_id", n=3))
     pairs = lsh_candidate_pairs(sigs).collect()
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
-    est = verify_pairs_by_signature(
-        spark.createDataFrame(pairs, "id_a long, id_b long"), sigs, 0.0
-    ).collect()[0]["est_jaccard"]
-    assert est < 0.5
+    est = _agreement(sigs, spark.createDataFrame(pairs, "id_a long, id_b long"))
+    assert est[(1, 2)] < 0.5
 
     # no stop-shingle cap: in a two-doc corpus every shared shingle is in
     # more than half the docs, so the 0.5 default would strip the whole

@@ -1,6 +1,7 @@
 """clean_corpus end-to-end: quality filter, language filter, exact dedup
 keep-min, near-dup keep-min, token counts, survivorship report."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from htrc_feature_reader_spark.operators.pipeline import (
@@ -125,3 +126,11 @@ def test_stop_shingle_frac_none_skips_cap(spark):
         docs, CleanConfig(stop_shingle_frac=1.0, near_dup_threshold=0.25))
     assert (sorted(r["doc_id"] for r in kept_none.collect())
             == sorted(r["doc_id"] for r in kept_one.collect()))
+
+
+def test_clean_config_rejects_bands_past_signature():
+    """A band past the end of the signature slices to [] for every doc, and
+    that shared empty bucket would make every pair a candidate."""
+    with pytest.raises(ValueError, match="exceeds minhash_hashes"):
+        CleanConfig(lsh_bands=5)  # 5 * 2 > 8 hashes
+    CleanConfig(lsh_bands=4)  # 4 * 2 == 8: every band is full

@@ -12,10 +12,9 @@ from htrc_feature_reader_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
-    shingle_ids,
     simhash,
     hamming_distance,
-    word_shingles,
+    word_shingle_ids,
 )
 from htrc_feature_reader_spark.operators.ivf import ivf_topk
 from htrc_feature_reader_spark.operators.similarity import (
@@ -46,8 +45,12 @@ def test_exact_duplicates(docs):
     assert len(out) == 5
 
 
+def _hashed_shingles(docs, n):
+    return word_shingle_ids(docs, n=n).withColumnRenamed("shingle_id", "shingle")
+
+
 def test_jaccard_pairs(docs):
-    sh = word_shingles(docs, n=3)
+    sh = _hashed_shingles(docs, n=3)
     pairs = {(r["id_a"], r["id_b"]): r["jacc"] for r in jaccard_pairs(sh, 0.2).collect()}
     assert pairs[(1, 2)] == 1.0  # identical docs
     assert (1, 3) in pairs and 0.5 < pairs[(1, 3)] < 1.0
@@ -55,10 +58,7 @@ def test_jaccard_pairs(docs):
 
 
 def test_minhash_lsh_finds_near_dups(docs):
-    sh = word_shingles(docs, n=3)
-    ids = shingle_ids(sh)
-    ds = sh.join(ids, on="shingle").select("id", "shingle_id")
-    sigs = minhash_signatures(ds, n_hashes=8)
+    sigs = minhash_signatures(word_shingle_ids(docs, n=3), n_hashes=8)
     # identical docs have identical signatures
     by_id = {r["id"]: r["sig"] for r in sigs.collect()}
     assert by_id[1] == by_id[2]
@@ -73,10 +73,8 @@ def test_minhash_estimates_jaccard(spark):
     rows = [(1, " ".join(f"w{i}" for i in range(50))),
             (2, " ".join(f"w{i}" for i in range(25, 75)))]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = word_shingles(docs, n=1)
-    true_j = jaccard_pairs(sh, 0.0).first()["jacc"]
-    ids = shingle_ids(sh)
-    ds = sh.join(ids, on="shingle").select("id", "shingle_id")
+    true_j = jaccard_pairs(_hashed_shingles(docs, n=1), 0.0).first()["jacc"]
+    ds = word_shingle_ids(docs, n=1)
     sigs = {r["id"]: r["sig"] for r in minhash_signatures(ds, n_hashes=64).collect()}
     est = sum(a == b for a, b in zip(sigs[1], sigs[2])) / 64
     assert abs(est - true_j) < 0.2

@@ -102,21 +102,16 @@ def test_jaccard_pairs_no_forced_broadcast(tl_parquet):
     # the per-doc shingle-size table is corpus-sized: never hint it
     from htrc_feature_reader_spark.operators.dedup import (
         jaccard_pairs,
-        remove_stop_shingles,
+        stop_capped_shingle_ids,
     )
 
     sh = tl_parquet.select(
         F.col("htid").alias("id"), F.col("token").alias("shingle")
     ).distinct()
     assert "ResolvedHint" not in _analyzed(jaccard_pairs(sh, threshold=0.1))
-    # absolute max_df gives no size bound on the stop set -> unhinted too
-    assert "ResolvedHint" not in _analyzed(
-        remove_stop_shingles(sh, max_df=5, max_df_frac=None, assume_distinct=True)
-    )
-    # fractional form's stop set is bounded by construction -> hint kept
-    assert "ResolvedHint" in _analyzed(
-        remove_stop_shingles(sh, max_df_frac=0.5, assume_distinct=True)
-    )
+    # the stop set is bounded by construction -> hinted, as is the 1-row N
+    docs = tl_parquet.select(F.col("htid").alias("doc_id"), F.col("token").alias("text"))
+    assert _analyzed(stop_capped_shingle_ids(docs)).count("ResolvedHint") == 2
 
 
 def test_salted_asof_replicates_build_not_probe(spark):

@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 
 from htrc_feature_reader_spark.operators import hashing
 from htrc_feature_reader_spark.operators.dedup import (
-    remove_stop_shingles,
+    stop_capped_shingle_ids,
     token_shingle_ids,
     word_shingle_ids,
-    word_shingles,
 )
 from htrc_feature_reader_spark.operators.selection import (
     hashed_ngram_buckets,
@@ -154,25 +153,47 @@ def test_word_shingle_ids_bit_parity(shingle_docs, consumer):
     assert len(ref) > 0
 
 
-def test_word_shingles_short_docs_empty_not_error(shingle_docs):
-    out = word_shingles(shingle_docs, "text", "doc_id", n=3)
-    ids = {r["id"] for r in out.collect()}
-    assert "c" not in ids and "d" not in ids  # too short: zero rows, no crash
-    one = out.filter(F.col("id") == "f").collect()
-    assert len(one) == 1 and one[0]["shingle"] == "a b c"
+def _shingle_rows(df):
+    return sorted((r["id"], r["shingle_id"]) for r in df.collect())
 
 
-def test_remove_stop_shingles(spark):
-    # 'viral' appears in 4 of 5 docs (> 50%), 'rare' in 1
-    rows = [(f"d{i}", "viral") for i in range(4)] + [("d4", "rare"), ("d0", "rare2")]
-    sh = spark.createDataFrame(rows, "id string, shingle string")
-    kept = {r["shingle"] for r in remove_stop_shingles(sh, max_df_frac=0.5).collect()}
-    assert kept == {"rare", "rare2"}
-    # absolute cap form
-    kept2 = {r["shingle"] for r in remove_stop_shingles(sh, max_df=3, max_df_frac=None).collect()}
-    assert kept2 == {"rare", "rare2"}
-    # cap off -> passthrough
-    assert remove_stop_shingles(sh, max_df=None, max_df_frac=None) is sh
+def test_stop_capped_shingle_ids_drops_hot_shingle(spark):
+    # 'viral' appears in 4 of 5 docs (> 50%), 'rare' and 'rare2' in 1 each
+    docs = spark.createDataFrame(
+        [("d0", "viral rare2"), ("d1", "viral"), ("d2", "viral"),
+         ("d3", "viral"), ("d4", "rare")],
+        "doc_id string, text string",
+    )
+    everything = _shingle_rows(word_shingle_ids(docs, n=1))
+    viral = word_shingle_ids(docs.filter("doc_id = 'd1'"), n=1).first()["shingle_id"]
+    kept = _shingle_rows(stop_capped_shingle_ids(docs, n=1))
+    assert kept == [r for r in everything if r[1] != viral]
+    assert [r[0] for r in kept] == ["d0", "d4"]
+    # 1.0 runs the stage but drops nothing; None skips it
+    assert _shingle_rows(stop_capped_shingle_ids(docs, n=1, max_df_frac=1.0)) == everything
+    assert _shingle_rows(stop_capped_shingle_ids(docs, n=1, max_df_frac=None)) == everything
+
+
+def test_stop_capped_shingle_ids_counts_rows_as_documents(spark):
+    """df and N both count input rows: a doc_id spanning two rows is two
+    documents for the cap. The two rows with id 1 share the shingle
+    "a b c"; the short row yields no shingle and is not counted in N."""
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (1, "a b c"), (2, "d e f"), (3, "g h i"), (4, "a b")],
+        "doc_id long, text string",
+    )
+    abc = word_shingle_ids(docs.filter("doc_id = 1"), n=3).first()["shingle_id"]
+
+    def kept_abc(frac):
+        out = stop_capped_shingle_ids(docs, n=3, max_df_frac=frac)
+        return [r for r in _shingle_rows(out) if r[1] == abc]
+
+    # df(abc) = 2 rows, N = 4 rows: 2 > 0.4 * 4 drops it (with df counted
+    # as distinct ids it would be 1, and kept)
+    assert kept_abc(0.4) == []
+    # 2 > 0.5 * 4 is false: kept (with N counted as distinct ids, 3, it
+    # would be 2 > 1.5 and dropped); both rows survive
+    assert kept_abc(0.5) == [(1, abc), (1, abc)]
 
 
 # ---------------------------------------------------------- near-dup pairs
@@ -292,17 +313,6 @@ def test_session_timezone_pinned_utc(spark):
     session timezone; the integer-microsecond arithmetic is only DST-safe
     because get_spark pins UTC — guard the pin."""
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-
-
-def test_remove_stop_shingles_assume_distinct_equivalent(spark):
-    """assume_distinct=True must give identical results on already-distinct
-    input (it only skips the redundant dedup shuffle)."""
-    rows = [(d, s) for d in range(8) for s in ("x", "y", f"u{d}")]
-    df = spark.createDataFrame(rows, "id long, shingle string")
-    a = sorted(map(tuple, remove_stop_shingles(df, max_df=4).collect()))
-    b = sorted(map(tuple, remove_stop_shingles(
-        df, max_df=4, assume_distinct=True).collect()))
-    assert a == b and len(a) == 8  # x, y (df=8) dropped; u<d> kept
 
 
 def test_simhash_candidate_pairs_exact_recall(spark):
