@@ -203,11 +203,20 @@ def band_rows(
     self-join if both sides band identically, so the slice expression
     must not drift between them.
 
-    Requires ``n_bands * rows_per_band <= size(sig)``: a band past the end
-    of the signature slices to ``[]`` for every doc, and that one shared
-    empty bucket makes every pair a candidate (:class:`..pipeline.CleanConfig`
-    rejects such configs)."""
-    return signatures.select(
+    Fails closed at run time unless ``n_bands * rows_per_band <= size(sig)``:
+    a band past the end of the signature slices to ``[]`` for every doc,
+    and that one shared empty bucket would make every pair a candidate
+    (:class:`..pipeline.CleanConfig` also rejects such configs eagerly)."""
+    # assert_true is NULL (isNull() True) on every healthy row, so the
+    # filter keeps them all; a short signature errors the job
+    need = n_bands * rows_per_band
+    fits = F.assert_true(
+        F.size("sig") >= need,
+        F.lit(f"signature length mismatch with the band layout: {n_bands} bands "
+              f"x {rows_per_band} rows need {need} positions and a signature "
+              f"has fewer; raise n_hashes or band fewer positions"),
+    ).isNull()
+    return signatures.where(fits).select(
         "id",
         "sig",
         F.posexplode(

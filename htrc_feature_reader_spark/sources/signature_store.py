@@ -40,8 +40,8 @@ map-side ``posexplode`` over the shard scan (no shuffle). Degenerate
 buckets are the caller's concern at mining time: corpus-frequency-based
 stop-shingle capping (``stop_capped_shingle_ids``) is batch-dependent and
 would BREAK the equivalence contract — for incremental use, filter
-shingles against a FIXED stop list (or cap with ``max_bucket`` at a
-documented recall cost) instead.
+shingles against a FIXED stop list (``ingest_clean_batch(stop_shingles=)``)
+instead.
 
 Crash/concurrency story mirrors the digest store: survivors' DATA is
 appended to ``out_path`` BEFORE signatures are recorded, so a crash

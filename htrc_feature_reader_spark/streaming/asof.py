@@ -1,29 +1,26 @@
-"""Streaming as-of join: serve point-in-time features to a probe stream.
+"""Streaming as-of join and forward fill on one per-key state machine.
 
-The north star's serving face: a build stream (feature timeline) and a
-probe stream (query timestamps) are union-tagged and fed through ONE
-``applyInPandasWithState`` — per-key state is the latest build row
-(last_ts, last values), every probe row is enriched with the most recent
-build values at-or-before its timestamp. Semantics match the batch
-``operators/asof.py:asof_join`` (backward direction, exact matches
-allowed, optional tolerance) for in-order replays; out-of-order rows
-ACROSS micro-batches see last-known state — the same documented streaming
-relaxation as ``stateful.stream_forward_fill``, with the batch operator as
-the exact oracle (tested in tests/test_streaming_asof.py). The relaxation
-is one-sided: a late PROBE (ts earlier than the state's newest build row)
-is never served a future build value — it falls back to the strictly-
-earlier state row or null-fills (zero temporal leakage, matching the
-batch operator's guarantee); what is relaxed is only that build rows
-older than the retained two-row state are forgotten.
+A build stream (feature timeline) and a probe stream (query timestamps)
+are union-tagged and fed through ONE ``applyInPandasWithState``: per-key
+state is the latest build row (and the one before it), and every probe
+row gets the most recent build values at-or-before its timestamp. For
+in-order replays this matches the batch ``operators/asof.py:asof_join``
+(backward, exact matches allowed, optional tolerance). Out-of-order rows
+ACROSS micro-batches see last-known state, a one-sided relaxation: a late
+probe is never served a future build value (it falls back to the earlier
+state row or null-fills), and a late build row is dropped rather than
+rolling state back. ``stream_forward_fill`` runs the same machine on one
+stream, each row with a value tagged as both a build and a probe row.
+Oracles: the batch operators (tests/test_streaming_asof.py,
+tests/test_streaming_stateful.py).
 
-Scale shape (what the north rule cares about):
-- one shuffle (the groupBy key hash) shared by both streams — identical
-  to the batch union-window strategy's single-shuffle plan;
-- state is O(1) per key (latest build row only, never a buffer), so a
-  1000-executor cluster shards keys and state memory scales out;
-- within a micro-batch the group is sorted by (ts, side) so build rows at
-  timestamp T are visible to probe rows at T (allow_exact_matches) — the
-  same tie rule as the batch operator.
+Scale shape:
+- one shuffle (the groupBy key hash) shared by both sides, as in the
+  batch union-window strategy's single-shuffle plan;
+- state is O(1) per key, so sharding keys scales state memory out;
+- within a micro-batch the group is sorted by (ts, side), so build rows
+  at timestamp T are visible to probe rows at T (allow_exact_matches),
+  the batch operator's tie rule.
 """
 
 from __future__ import annotations
@@ -79,23 +76,67 @@ def stream_asof_join(
         )
     )
 
-    key_t = probe.schema[on].dataType
-    ts_t = probe.schema[ts].dataType
+    return _state_join(
+        tagged, on, ts, value_cols, probe_payload, tolerance_s, allow_exact_matches
+    )
+
+
+def stream_forward_fill(
+    events: DataFrame, key: str = "key", ts: str = "ts", value: str = "value"
+) -> DataFrame:
+    """(key, ts, value, filled) of the streaming DataFrame ``events``:
+    ``filled`` is the last non-null value at or before the row, the row
+    itself included (batch ``forward_fill``'s rule, so a late row reports
+    its own value). NULL keys fill within their own group."""
+    # one select, not a self-union of two filtered reads, so each
+    # micro-batch is scanned once
+    tagged = events.select(
+        F.col(key).alias("__k"),
+        F.col(ts).alias("__ts"),
+        F.explode(
+            F.when(F.col(value).isNull(), F.array(F.lit(1)))
+            .otherwise(F.array(F.lit(0), F.lit(1)))
+        ).alias("__side"),
+        F.col(value).alias("__fill"),
+        F.col(value),
+    )
+    return _state_join(tagged, key, ts, ["__fill"], [value], None, True).select(
+        key, ts, value, F.coalesce(F.col(value), F.col("__fill")).alias("filled")
+    )
+
+
+def _state_join(
+    tagged: DataFrame,
+    on: str,
+    ts: str,
+    value_cols: list[str],
+    probe_payload: list[str],
+    tolerance_s: float | None,
+    allow_exact_matches: bool,
+) -> DataFrame:
+    """The per-key as-of state machine over a union-tagged stream
+    (``__k``, ``__ts``, ``__side`` 0 = build / 1 = probe, value columns
+    read on build rows, payload columns on probe rows). Emits one row per
+    probe row: (on, ts, *probe_payload, *value_cols), typed as in
+    ``tagged``."""
+    schema = tagged.schema
+    key_t = schema["__k"].dataType
+    ts_t = schema["__ts"].dataType
     if not isinstance(ts_t, (TimestampType, TimestampNTZType)):
         raise TypeError(f"ts column {ts!r} must be a timestamp, got {ts_t}")
     out_schema = StructType(
         [StructField(on, key_t), StructField(ts, ts_t)]
-        + [StructField(c, probe.schema[c].dataType) for c in probe_payload]
-        + [StructField(c, build.schema[c].dataType, True) for c in value_cols]
+        + [StructField(c, schema[c].dataType) for c in probe_payload]
+        + [StructField(c, schema[c].dataType, True) for c in value_cols]
     )
     # state = latest build row AND the latest strictly-earlier one: when
     # allow_exact_matches=False and the newest build row coincides with the
     # probe ts, the join must fall back to the previous row — still O(1)
     state_schema = StructType(
         [StructField("last_ts", ts_t)]
-        + [StructField(c, build.schema[c].dataType, True) for c in value_cols]
+        + [StructField(c, schema[c].dataType, True) for c in value_cols]
         + [StructField("prev_ts", ts_t)]
-        + [StructField(f"__prev_{c}", build.schema[c].dataType, True) for c in value_cols]
+        + [StructField(f"__prev_{c}", schema[c].dataType, True) for c in value_cols]
     )
     n_vals = len(value_cols)
 

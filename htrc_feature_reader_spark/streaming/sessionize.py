@@ -1,37 +1,30 @@
-"""Structured Streaming sessionization (streaming surface of the batch
-operator in operators/windows.py).
-
-The reference is fully batch (SURVEY.md §2.9); this is the engine's
-streaming analog for the north-rule sessionization semantics: event-time
-``session_window`` aggregation with a watermark for late data. The batch
-and streaming results agree for gap/window semantics (tested with the
-file source + availableNow trigger, which drains a static directory as a
-stream).
+"""Structured Streaming faces of the batch windowing operators
+(operators/windows.py; the reference is fully batch, SURVEY.md §2.9):
+event-time session and tumbling-window counts, with a watermark for late
+data. The batch operators are the oracles (tested by draining a static
+directory as a stream with the availableNow trigger).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def stream_session_counts(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
+    events: DataFrame,
     key: str = "user_id",
     ts: str = "ts",
     gap: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming per-(key, session-window) event counts.
+    """Streaming per-(key, session-window) event counts over the streaming
+    DataFrame ``events``.
 
     Watermark bounds state: sessions close once event time passes
     window end + watermark — the knob that keeps state finite on an
     unbounded stream (at 100 TB/day the watermark IS the memory budget).
     """
-    events = spark.readStream.schema(schema).parquet(path)
     return (
         events.withWatermark(ts, watermark)
         .groupBy(F.col(key), F.session_window(F.col(ts), gap))
@@ -45,23 +38,8 @@ def stream_session_counts(
     )
 
 
-def run_stream_to_memory(sdf: DataFrame, name: str = "sessions") -> None:
-    """Drain a bounded stream synchronously into an in-memory table (test
-    helper; production would write to a real sink with checkpointing)."""
-    q = (
-        sdf.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_windowed_rollup(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
+    events: DataFrame,
     key: str = "user_id",
     ts: str = "ts",
     window: str = "1 day",
@@ -69,7 +47,8 @@ def stream_windowed_rollup(
     value: str | None = None,
 ) -> DataFrame:
     """Streaming tumbling-window rollup (streaming face of the batch
-    daily_rollup): per-(key, window) event counts and optional value sum.
+    daily_rollup): per-(key, window) event counts and optional value sum
+    over the streaming DataFrame ``events``.
 
     With append output mode a window only emits once the watermark passes
     its end — and events arriving LATER than the watermark are dropped,
@@ -78,7 +57,6 @@ def stream_windowed_rollup(
     contract; the batch operator over the same files is the exact oracle
     for everything inside the watermark.
     """
-    events = spark.readStream.schema(schema).parquet(path)
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value is not None:
         aggs.append(F.sum(value).alias("total_value"))

@@ -229,6 +229,37 @@ def test_signature_length_drift_fails_closed(spark):
         neardup_against_store(docs, store, short, threshold=0.5).collect()
 
 
+def test_signature_length_drift_fails_closed_when_bands_fit(spark):
+    """A batch signature LONGER than history's fits the band layout, so
+    only the batch-vs-store length guard can catch the drift."""
+    docs = spark.createDataFrame([(1, "ignored text")], _SCHEMA)
+    store = spark.createDataFrame(
+        [(100, [1, 2, 3, 4, 5, 6, 7, 8])], "id long, sig array<long>")
+    longer = spark.createDataFrame(
+        [(1, [1, 2, 9, 9, 9, 9, 9, 9, 9, 9])], "id long, sig array<long>")
+    with pytest.raises(Exception, match="between batch and store"):
+        neardup_against_store(docs, store, longer, threshold=0.5).collect()
+
+
+def test_band_layout_past_signature_fails_closed(spark, tmp_path):
+    """5 bands x 2 rows over 8-hash signatures: the fifth band would slice
+    to [] for every doc, and that shared empty bucket would pair all 6
+    unrelated docs (15 pairs) and drop 5 of them against an empty store.
+    Both banding paths error instead; at 4 bands nothing pairs."""
+    rng = random.Random(3)
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"d{i}w{rng.randrange(10**6)}" for _ in range(60)))
+         for i in range(6)], _SCHEMA)
+    sigs = word_minhash_signatures(docs)
+    store = read_signature_store(spark, str(tmp_path / "empty"))
+    assert lsh_candidate_pairs(sigs, n_bands=4).count() == 0
+    assert neardup_against_store(docs, store, sigs, n_bands=4, threshold=0.0).count() == 6
+    with pytest.raises(Exception, match="band layout"):
+        lsh_candidate_pairs(sigs, n_bands=5).collect()
+    with pytest.raises(Exception, match="band layout"):
+        neardup_against_store(docs, store, sigs, n_bands=5, threshold=0.0).collect()
+
+
 def test_store_probe_plan_shape(spark, tmp_path):
     """The scale claim frozen as a plan test: the vs-store probe carries
     NO forced broadcast (the store is corpus-sized at 100 TB — a hint

@@ -5,10 +5,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from htrc_feature_reader_spark.operators import sessionize
-from htrc_feature_reader_spark.streaming.sessionize import (
-    run_stream_to_memory,
-    stream_session_counts,
-)
+from htrc_feature_reader_spark.streaming.sessionize import stream_session_counts
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -24,9 +21,14 @@ def test_stream_sessions_match_batch(spark, tmp_path):
     df.write.parquet(path)
 
     sdf = stream_session_counts(
-        spark, path, df.schema, key="user_id", ts="ts", gap="30 minutes"
+        spark.readStream.schema(df.schema).parquet(path),
+        key="user_id", ts="ts", gap="30 minutes",
     )
-    run_stream_to_memory(sdf, "sess_test")
+    q = (
+        sdf.writeStream.outputMode("complete").format("memory")
+        .queryName("sess_test").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
     got = spark.sql("select * from sess_test").collect()
 
     # batch reference: same gap

@@ -24,7 +24,9 @@ def test_windowed_rollup_matches_batch(spark, tmp_path):
     path = str(tmp_path / "ev")
     df.coalesce(1).write.parquet(path)
 
-    out = stream_windowed_rollup(spark, path, df.schema, value="value")
+    out = stream_windowed_rollup(
+        spark.readStream.schema(df.schema).parquet(path), value="value"
+    )
     q = (out.writeStream.outputMode("complete").format("memory")
          .queryName("roll_out").trigger(availableNow=True).start())
     q.awaitTermination()
@@ -53,8 +55,7 @@ def test_windowed_rollup_append_drops_late_beyond_watermark(spark, tmp_path):
     ).coalesce(1).write.parquet(path)
 
     out = stream_windowed_rollup(
-        spark, path,
-        "user_id string, ts timestamp, value double",
+        spark.readStream.schema("user_id string, ts timestamp, value double").parquet(path),
         watermark="1 hour",
     )
     q = (out.writeStream.outputMode("append").format("memory")
