@@ -378,19 +378,6 @@ def q_asof_purchase_view(spark, sf_dir):
     return asof_join(probe, build, on="user_id", ts="ts")
 
 
-def q_asof_merge_strategy(spark, sf_dir):
-    """Same semantics as asof_purchase_view through the OTHER physical
-    strategy: per-key applyInPandas merge_asof (operators/asof.py
-    strategy='merge') — both strategies must agree cell-exact with the
-    one DuckDB ASOF oracle."""
-    ev = _t(spark, sf_dir, "events")
-    probe = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    build = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("value").alias("view_value")
-    )
-    return asof_join(probe, build, on="user_id", ts="ts", strategy="merge")
-
-
 def q_asof_salted(spark, sf_dir):
     """Same semantics again under skew salting (salt=8 replicates the
     build timeline across salt buckets — never splits it, so results are
@@ -405,11 +392,11 @@ def q_asof_salted(spark, sf_dir):
 
 
 def q_asof_auto_salt(spark, sf_dir):
-    """Fourth physical variant: LAZY per-key adaptive salting
-    (salt='auto', operators/asof.py:_salted_adaptive) — key row counts
-    ride along as an in-plan aggregate (no driver job at construction),
-    each key gets ceil(rows/target) buckets. Same one DuckDB ASOF oracle;
-    target lowered so the path actually salts at driver scale."""
+    """Same semantics under LAZY per-key salting (salt='auto',
+    operators/asof.py:_salted) — key row counts ride along as an in-plan
+    aggregate (no driver job at construction), each key gets
+    ceil(rows/target) buckets. Same one DuckDB ASOF oracle; target
+    lowered so the path actually salts at driver scale."""
     ev = _t(spark, sf_dir, "events")
     probe = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     build = ev.filter(F.col("event_type") == "view").select(
@@ -3079,14 +3066,10 @@ _ASOF_NEAREST_SQL = """
              UNION ALL
              SELECT user_id, ts, event_id, CAST(NULL AS DOUBLE), 1 AS tag FROM p),
        f AS (SELECT *,
-                last_value(CASE WHEN tag = 0 THEN ts END IGNORE NULLS)
-                  OVER wb AS bts,
-                last_value(CASE WHEN tag = 0 THEN click_value END IGNORE NULLS)
-                  OVER wb AS bval,
-                last_value(CASE WHEN tag = 0 THEN ts END IGNORE NULLS)
-                  OVER wf AS fts,
-                last_value(CASE WHEN tag = 0 THEN click_value END IGNORE NULLS)
-                  OVER wf AS fval
+                last_value(CASE WHEN tag = 0 THEN struct_pack(ts := ts, v := click_value)
+                           END IGNORE NULLS) OVER wb AS bm,
+                last_value(CASE WHEN tag = 0 THEN struct_pack(ts := ts, v := click_value)
+                           END IGNORE NULLS) OVER wf AS fm
              FROM u
              WINDOW
                wb AS (PARTITION BY user_id ORDER BY ts ASC, tag ASC
@@ -3094,9 +3077,9 @@ _ASOF_NEAREST_SQL = """
                wf AS (PARTITION BY user_id ORDER BY ts DESC, tag ASC
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
   SELECT event_id, user_id, ts,
-         CASE WHEN bts IS NOT NULL AND (fts IS NULL OR
-                   (epoch_us(ts) - epoch_us(bts)) <= (epoch_us(fts) - epoch_us(ts)))
-              THEN bval ELSE fval END AS click_value
+         CASE WHEN bm IS NOT NULL AND (fm IS NULL OR
+                   (epoch_us(ts) - epoch_us(bm.ts)) <= (epoch_us(fm.ts) - epoch_us(ts)))
+              THEN bm.v ELSE fm.v END AS click_value
   FROM f WHERE tag = 1
 """
 
@@ -3242,7 +3225,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nation_revenue": q_nation_revenue,
         "top_parts_per_brand": q_top_parts_per_brand,
         "asof_purchase_view": q_asof_purchase_view,
-        "asof_merge_strategy": q_asof_merge_strategy,
         "asof_salted": q_asof_salted,
         "asof_forward": q_asof_forward,
         "lag_delta": q_lag_delta,
@@ -3720,7 +3702,6 @@ def oracle_sql() -> dict[str, str]:
           WHERE rnk <= 3
         """,
         "asof_purchase_view": _ASOF_PURCHASE_SQL,
-        "asof_merge_strategy": _ASOF_PURCHASE_SQL,
         "asof_salted": _ASOF_PURCHASE_SQL,
         "asof_auto_salt": _ASOF_PURCHASE_SQL,
         "asof_forward": """

@@ -5,7 +5,8 @@ are union-tagged and fed through ONE ``applyInPandasWithState``: per-key
 state is the latest build row (and the one before it), and every probe
 row gets the most recent build values at-or-before its timestamp. For
 in-order replays this matches the batch ``operators/asof.py:asof_join``
-(backward, exact matches allowed, optional tolerance). Out-of-order rows
+(backward, exact matches allowed, optional tolerance), a matched build
+row's NULL and NaN cells included. Out-of-order rows
 ACROSS micro-batches see last-known state, a one-sided relaxation: a late
 probe is never served a future build value (it falls back to the earlier
 state row or null-fills), and a late build row is dropped rather than
@@ -16,7 +17,7 @@ tests/test_streaming_stateful.py).
 
 Scale shape:
 - one shuffle (the groupBy key hash) shared by both sides, as in the
-  batch union-window strategy's single-shuffle plan;
+  batch union window's single-shuffle plan;
 - state is O(1) per key, so sharding keys scales state memory out;
 - within a micro-batch the group is sorted by (ts, side), so build rows
   at timestamp T are visible to probe rows at T (allow_exact_matches),
@@ -31,7 +32,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 
 def stream_asof_join(
@@ -48,7 +56,9 @@ def stream_asof_join(
     ``probe`` and ``build`` are streaming DataFrames sharing the key and
     timestamp column names. Returns probe columns + one column per build
     value column (nullable; null when no build row at-or-before the probe
-    ts within tolerance). Probe rows are emitted in append mode.
+    ts within tolerance). The matched build row's NULL and NaN cells come
+    through as they are, as in batch ``asof_join``. Probe rows are emitted
+    in append mode.
     """
     if value_cols is None:
         value_cols = [c for c in build.columns if c not in (on, ts)]
@@ -119,6 +129,14 @@ def _state_join(
     read on build rows, payload columns on probe rows). Emits one row per
     probe row: (on, ts, *probe_payload, *value_cols), typed as in
     ``tagged``."""
+    # Arrow masks pandas' isnull() both ways, so NaN and NULL merge at the
+    # Python boundary: each floating column carries an isnan() flag through
+    # the machine and NaN is restored on output
+    cols = [*probe_payload, *value_cols]
+    floats = [c for c in cols if isinstance(tagged.schema[c].dataType, (DoubleType, FloatType))]
+    tagged = tagged.select("*", *[F.isnan(c).alias(f"__nan_{c}") for c in floats])
+    probe_payload = probe_payload + [f"__nan_{c}" for c in floats if c in probe_payload]
+    value_cols = value_cols + [f"__nan_{c}" for c in floats if c in value_cols]
     schema = tagged.schema
     key_t = schema["__k"].dataType
     ts_t = schema["__ts"].dataType
@@ -232,4 +250,11 @@ def _state_join(
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    ).select(
+        on, ts,
+        *[
+            F.when(F.col(f"__nan_{c}"), F.lit(float("nan")).cast(schema[c].dataType))
+            .otherwise(F.col(c)).alias(c) if c in floats else F.col(c)
+            for c in cols
+        ],
     )

@@ -20,8 +20,9 @@ _minutes = st.integers(min_value=0, max_value=30)
 
 @st.composite
 def asof_frames(draw):
-    build = draw(st.lists(st.tuples(_key, _minutes, st.floats(-10, 10, allow_nan=False)),
-                          min_size=0, max_size=25))
+    # NULL value cells too: a matched row's NULL comes through as it is
+    value = st.none() | st.floats(-10, 10, allow_nan=False)
+    build = draw(st.lists(st.tuples(_key, _minutes, value), min_size=0, max_size=25))
     probe = draw(st.lists(st.tuples(_key, _minutes), min_size=1, max_size=25))
     return build, probe
 

@@ -3,6 +3,7 @@ replay, honors the exact-match tie rule and tolerance, and carries state
 across micro-batches."""
 
 import datetime as dt
+import math
 
 from pyspark.sql import functions as F
 
@@ -83,6 +84,34 @@ def test_stream_asof_tolerance_and_no_exact(spark, tmp_path):
     assert got[("a", _mins(10))] == 1.0
     # 20 min past the last build row > 600 s tolerance -> null
     assert got[("a", _mins(30))] is None
+
+
+def test_stream_asof_null_and_nan_cells_match_batch(spark, tmp_path):
+    """A build row's NULL cell is its value, as in batch: the probe at 15
+    takes minute 10's NULL, not minute 0's 1.0; minute 20's NaN stays NaN
+    (asserted on Spark rows; pandas cannot tell NULL from NaN)."""
+    nan = float("nan")
+    build_rows = [("a", _mins(0), 1.0), ("a", _mins(10), None), ("a", _mins(20), nan)]
+    probe_rows = [("a", _mins(m), m) for m in (5, 15, 25)]
+    build, probe, bs, ps = _write_streams(spark, tmp_path, build_rows, probe_rows)
+
+    out = stream_asof_join(ps, bs, on="key", ts="ts")
+    q = (
+        out.writeStream.outputMode("append").format("memory")
+        .queryName("asof_null_cells").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+
+    def _canon(rows):
+        return {
+            r["qty"]: "NaN" if r["price"] is not None and math.isnan(r["price"])
+            else r["price"]
+            for r in rows
+        }
+
+    got = _canon(spark.sql("select * from asof_null_cells").collect())
+    assert got == _canon(asof_join(probe, build, on="key", ts="ts").collect())
+    assert got == {5: 1.0, 15: None, 25: "NaN"}
 
 
 def test_stream_asof_state_across_micro_batches(spark, tmp_path):

@@ -3,6 +3,7 @@ with the batch forward_fill on an in-order replay, keeps late rows from
 leaking future values across micro-batches, and keeps the input's types."""
 
 import datetime as dt
+import math
 
 from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -105,3 +106,28 @@ def test_stream_ffill_keeps_key_and_ts_types(spark, tmp_path):
     assert isinstance(out["key"].dataType, LongType)
     assert isinstance(out["ts"].dataType, TimestampNTZType)
     assert got == {(7, _mins(0)): 2.0, (7, _mins(1)): 2.0}
+
+
+def test_stream_ffill_keeps_nan_apart_from_null(spark, tmp_path):
+    """NaN is a value, not a gap: minutes 0 = 1.0, 1 = NaN, 2 = NULL fill
+    to 1.0, NaN, NaN as in batch forward_fill, and minute 1 reports its own
+    value as NaN. Arrow merges NaN into NULL at the Python boundary, so
+    the stream must carry NaN past it."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [("a", _mins(0), 1.0), ("a", _mins(1), nan), ("a", _mins(2), None)],
+        "key string, ts timestamp, value double",
+    )
+    _drain(spark, df, str(tmp_path / "ev"), "ffill_nan")
+    canon = lambda v: "NaN" if v is not None and math.isnan(v) else v  # noqa: E731
+    got = {
+        r["ts"]: (canon(r["value"]), canon(r["filled"]))
+        for r in spark.sql("select * from ffill_nan").collect()
+    }
+    batch = forward_fill(df, ["value"], key="key", ts="ts", suffix="_f")
+    assert got == {
+        r["ts"]: (canon(r["value"]), canon(r["value_f"])) for r in batch.collect()
+    }
+    assert got == {
+        _mins(0): (1.0, 1.0), _mins(1): ("NaN", "NaN"), _mins(2): (None, "NaN")
+    }

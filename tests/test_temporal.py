@@ -1,8 +1,9 @@
-"""Temporal layer: as-of join (both strategies, salted and not) vs a pandas
-merge_asof oracle; fills; sessionization; zero-leakage adversarial test
-(FIXTURES.md golden invariant 6)."""
+"""Temporal layer: as-of join (salted and not) vs a pandas merge_asof
+oracle, NULL/NaN build cells on Spark rows; fills; sessionization;
+zero-leakage adversarial test (FIXTURES.md golden invariant 6)."""
 
 import datetime as dt
+import math
 
 import pandas as pd
 import pytest
@@ -54,13 +55,11 @@ def _collect_sorted(df):
     )
 
 
-# salt applies to the union strategy only, so (4, "merge") does not exist
-@pytest.mark.parametrize("salt, strategy", [(None, "union"), (None, "merge"), (4, "union")])
-def test_asof_backward_matches_merge_asof(asof_frames, strategy, salt):
+# the ids name the union window, the as-of join's one physical plan
+@pytest.mark.parametrize("salt", [None, 4], ids=["None-union", "4-union"])
+def test_asof_backward_matches_merge_asof(asof_frames, salt):
     probe, build = asof_frames
-    got = _collect_sorted(
-        asof_join(probe, build, on="key", ts="ts", strategy=strategy, salt=salt)
-    )
+    got = _collect_sorted(asof_join(probe, build, on="key", ts="ts", salt=salt))
     expect = _pandas_oracle(probe, build)
     pd.testing.assert_frame_equal(got, expect, check_dtype=False)
 
@@ -88,6 +87,38 @@ def test_asof_no_exact_matches(asof_frames):
     )
     expect = _pandas_oracle(probe, build, allow_exact_matches=False)
     pd.testing.assert_frame_equal(got, expect, check_dtype=False)
+
+
+_NAN = float("nan")
+# per direction: probe minute -> (val, tag); the matched row's NULL and NaN
+# cells come through as they are (pandas merge_asof / DuckDB ASOF)
+_CELLS_EXPECT = {
+    "backward": {5: (1.0, "x"), 15: (None, None), 25: (_NAN, "z")},
+    "forward": {5: (None, None), 15: (_NAN, "z"), 25: (None, None)},
+    "nearest": {5: (1.0, "x"), 15: (None, None), 25: (_NAN, "z")},  # ties go backward
+}
+
+
+@pytest.mark.parametrize("salt", [None, 4, "auto"])
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_asof_null_and_nan_cells_come_through(spark, direction, salt):
+    """A matched build row is returned whole: its NULL cells are not
+    skipped for an older row's values, and its NaN stays NaN (asserted on
+    Spark rows; pandas cannot tell NULL from NaN)."""
+    build = spark.createDataFrame(
+        [("a", ts(0), 1.0, "x"), ("a", ts(10), None, None), ("a", ts(20), _NAN, "z")],
+        "key string, ts timestamp, val double, tag string",
+    )
+    probe = spark.createDataFrame(
+        [("a", ts(m)) for m in (5, 15, 25)], "key string, ts timestamp"
+    )
+    out = asof_join(probe, build, on="key", ts="ts", direction=direction,
+                    salt=salt, salt_target_rows=1)
+    canon = lambda v: "NaN" if isinstance(v, float) and math.isnan(v) else v  # noqa: E731
+    got = {r["ts"].minute: (canon(r["val"]), r["tag"]) for r in out.collect()}
+    assert got == {
+        m: (canon(v), t) for m, (v, t) in _CELLS_EXPECT[direction].items()
+    }
 
 
 def test_asof_zero_leakage_adversarial(spark):
@@ -234,12 +265,11 @@ def test_auto_salt_null_keys_match_unsalted(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge"])
-def test_asof_nearest_matches_merge_asof(asof_frames, strategy):
+@pytest.mark.parametrize("salt", [None], ids=["union"])
+def test_asof_nearest_matches_merge_asof(asof_frames, salt):
     probe, build = asof_frames
     got = _collect_sorted(
-        asof_join(probe, build, on="key", ts="ts", direction="nearest",
-                  strategy=strategy)
+        asof_join(probe, build, on="key", ts="ts", direction="nearest", salt=salt)
     )
     expect = _pandas_oracle(probe, build, direction="nearest")
     pd.testing.assert_frame_equal(got, expect, check_dtype=False)
