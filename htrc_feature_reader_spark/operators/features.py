@@ -28,6 +28,9 @@ Features:
 - timeline:      gap_s since previous row, session_id (gap-based)
 
 Scale design:
+- the doc-keyed windows share one exchange and one sort: each comes from
+  ``windows._ordered_window`` and orders by the ts column itself (only the
+  (doc, source) cumulative re-sorts, inside the same partitions).
 - doc-keyed windows parallelize across millions of docs, but a plain
   ``partitionBy(source)`` window has a hard parallelism ceiling of #sources
   (4 here — one task each, no matter the cluster). The source cumulative is
@@ -50,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .windows import session_id_col
+from .windows import _ordered_window, session_id_col
 
 from ..functions import ts_micros
 
@@ -77,20 +80,14 @@ def distributed_prefix_sum(
     # can misround at exact bucket boundaries for epoch-micros magnitudes)
     bucket_col = ((ts_us - F.pmod(ts_us, F.lit(bucket_us))) / F.lit(bucket_us)).cast("long")
     df = df.withColumn("__bucket", bucket_col)
-    w_in = (
-        Window.partitionBy(*key_cols, "__bucket")
-        .orderBy(ts_us)
-        .rangeBetween(Window.unboundedPreceding, 0)
+    w_in = _ordered_window([*key_cols, "__bucket"], ts_col).rangeBetween(
+        Window.unboundedPreceding, 0
     )
     df = df.withColumn("__in_cum", F.sum(value_col).over(w_in))
     totals = df.groupBy(*key_cols, "__bucket").agg(
         F.sum(value_col).alias("__btotal")
     )
-    w_pref = (
-        Window.partitionBy(*key_cols)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w_pref = _ordered_window(key_cols, "__bucket").rowsBetween(Window.unboundedPreceding, -1)
     prefix = totals.select(
         *key_cols, "__bucket", F.sum("__btotal").over(w_pref).alias("__prefix")
     )
@@ -129,19 +126,6 @@ def build_pit_features(
     collapse to one representative's row-ordered features — they are
     interchangeable, so cumulative features are unaffected.
     """
-    ts_us = ts_micros(ts_col)
-
-    doc_range = (
-        Window.partitionBy(doc_col)
-        .orderBy(ts_us)
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    doc_src_range = (
-        Window.partitionBy(doc_col, "source")
-        .orderBy(ts_us)
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-
     with_scalars = seqs.withColumn(
         "sum_tok", F.aggregate("tokens", F.lit(0).cast("long"), lambda a, x: a + x)
     ).withColumn("n_distinct", F.size(F.array_distinct("tokens")))
@@ -151,11 +135,23 @@ def build_pit_features(
     df = with_scalars.drop(*present_payload)
     narrow_key = df.columns
 
-    df = (
-        df.withColumn("seq_idx", F.count(F.lit(1)).over(doc_range))
-        .withColumn("cum_n_tok", F.sum("n_tok").over(doc_range))
-        .withColumn("cum_sum_tok", F.sum("sum_tok").over(doc_range))
-        .withColumn("doc_src_cum_n_tok", F.sum("n_tok").over(doc_src_range))
+    # timeline features use a deterministic total order within ties;
+    # the gap is computed in exact integer micros, divided out only here
+    tb = tiebreak if tiebreak is not None else ["n_tok", "sum_tok"]
+    doc_range = _ordered_window(doc_col, ts_col).rangeBetween(Window.unboundedPreceding, 0)
+    doc_src_range = _ordered_window([doc_col, "source"], ts_col).rangeBetween(
+        Window.unboundedPreceding, 0
+    )
+    prev_ts = F.lag(ts_col).over(_ordered_window(doc_col, ts_col, tb))
+    df = df.select(
+        "*",
+        F.count(F.lit(1)).over(doc_range).alias("seq_idx"),
+        F.sum("n_tok").over(doc_range).alias("cum_n_tok"),
+        F.sum("sum_tok").over(doc_range).alias("cum_sum_tok"),
+        F.sum("n_tok").over(doc_src_range).alias("doc_src_cum_n_tok"),
+        ((ts_micros(ts_col) - ts_micros(prev_ts)) / F.lit(1_000_000.0)).alias("gap_s"),
+        session_id_col(doc_col, ts_col, session_gap_s, tiebreak=tb)
+        .cast("long").alias("session_id"),
     )
     # source-level cumulative via distributed prefix sum (no 4-task ceiling)
     df = distributed_prefix_sum(
@@ -166,17 +162,6 @@ def build_pit_features(
         df.withColumn("mean_n_tok", F.col("cum_n_tok") / F.col("seq_idx"))
         .withColumn("mean_token_id", F.col("cum_sum_tok") / F.col("cum_n_tok"))
         .withColumn("src_share", F.col("doc_src_cum_n_tok") / F.col("src_cum_n_tok"))
-    )
-
-    # timeline features use a deterministic total order within ties;
-    # the gap is computed in exact integer micros, divided out only here
-    tb = tiebreak if tiebreak is not None else ["n_tok", "sum_tok"]
-    order_w = Window.partitionBy(doc_col).orderBy(ts_us, *[F.col(c) for c in tb])
-    df = df.withColumn(
-        "gap_s", (ts_us - F.lag(ts_us).over(order_w)) / F.lit(1_000_000.0)
-    ).withColumn(
-        "session_id",
-        session_id_col(doc_col, ts_col, session_gap_s, tiebreak=tb).cast("long"),
     )
 
     if attach_payload and present_payload:
@@ -231,20 +216,14 @@ def trailing_window_features(
     df = seqs.drop(*present_payload)
     narrow_key = df.columns
 
-    # materialize the order key once and emit every horizon in ONE select:
-    # separate withColumn calls would alias a fresh ts-micros expression per
-    # window, which Catalyst cannot prove equal across Window nodes — it
-    # re-sorts and re-exchanges (measured: 2 Exchanges for 3 horizons)
+    # the bounded frames need a numeric order key: materialize it once as a
+    # column (never order by an expression -- see ``_ordered_window``)
     df = df.withColumn("__ts_us", ts_micros(ts_col))
     hi = -1 if strict else 0
     cols = []
     for label, h_s in horizons_s.items():
         h_us = int(round(float(h_s) * 1_000_000))
-        w = (
-            Window.partitionBy(doc_col)
-            .orderBy("__ts_us")
-            .rangeBetween(-h_us, hi)
-        )
+        w = _ordered_window(doc_col, "__ts_us").rangeBetween(-h_us, hi)
         cols.append(F.count(F.lit(1)).over(w).cast("long").alias(f"trail_n_{label}"))
         cols.append(
             F.coalesce(F.sum(value_col).over(w), F.lit(0))

@@ -18,6 +18,16 @@ from ..functions import ts_micros
 
 
 def _ordered_window(key, ts: str, tiebreak: list[str] | None = None):
+    """The one builder of a per-entity time window: partition by ``key``,
+    order by ``ts`` then ``tiebreak``.
+
+    Order by a column, never an expression: an expression order key (say
+    ``ts_micros(ts)``) is aliased anew (``_w0#19``, ``_w0#22``, ...) by each
+    ``withColumn`` or ``select`` that uses it, Catalyst cannot prove those
+    aliases equal, and the windows cannot share an exchange and a sort. A
+    frame that needs a numeric key (a bounded RANGE) orders by a column
+    materialized once.
+    """
     keys = [key] if isinstance(key, str) else list(key)
     order = [F.col(ts)] + [F.col(c) for c in (tiebreak or [])]
     return Window.partitionBy(*keys).orderBy(*order)

@@ -247,10 +247,8 @@ def _genre_label(col):
     # (parsers.py:233: genre[36:])
     code = F.substring(col, len(_MARCGT_PREFIX) + 1, 100)
     mapping = F.create_map(*[F.lit(x) for kv in _MARCGT.items() for x in kv])
-    return F.when(
-        col.startswith(_MARCGT_PREFIX) & mapping.getItem(code).isNotNull(),
-        mapping.getItem(code),
-    ).otherwise(col)
+    label = mapping[code]
+    return F.when(col.startswith(_MARCGT_PREFIX) & label.isNotNull(), label).otherwise(col)
 
 
 _LD_ENTITY_DDL = "struct<id:string,name:string,type:string>"

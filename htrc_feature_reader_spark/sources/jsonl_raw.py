@@ -29,7 +29,7 @@ Design notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -77,7 +77,7 @@ def parse_jsonl_lines(
     schema: StructType,
     required: tuple[str, ...] = (),
     corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame, "Column"]:
+) -> tuple[DataFrame, Column]:
     """Shared parse/validate/split core for the batch and streaming
     readers (one definition — the contract cannot drift between them):
     ``text_df`` must have a string ``value`` column (plus anything a

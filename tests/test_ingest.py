@@ -1,6 +1,8 @@
 """EF-JSON ingest and parquet quad round-trips (reference test analogs:
 tests/test_parsers.py:20-112, tests/test_resolvers.py:27-119)."""
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -210,6 +212,16 @@ def test_volumes_metadata_full_ld(ef_raw_ld):
     for old_col in ("ht_bib_url", "imprint", "names", "issuance",
                     "government_document", "volume_identifier"):
         assert v[old_col] is None, old_col
+
+
+def test_volumes_from_ef_ld_genre_lookup_is_not_deprecated(ef_raw_ld):
+    """The LD genre lookup subscripts the MARC map with a Column key, the
+    supported form: getItem with a Column key is deprecated in PySpark 4."""
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", message="A column as 'key' in getItem",
+                                category=FutureWarning)
+        vols = {r["htid"]: r for r in volumes_from_ef(ef_raw_ld).collect()}
+    assert vols["syn.vol000"]["genre"] == ["novel", "fiction"]
 
 
 def test_line_chars_era_key_dispatch(spark, tmp_path_factory):

@@ -4,11 +4,14 @@ single-shuffle as-of, broadcast label joins, no stray Python in the fold
 path. (The round brief: '.explain the plan and iterate until it's the plan
 you'd want' — these tests freeze that plan.)"""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from htrc_feature_reader_spark.operators import asof_join, fold_tokenlist
+from htrc_feature_reader_spark.operators import asof_join, build_pit_features, fold_tokenlist
 from htrc_feature_reader_spark.operators.chunking import chunked_tokenlist
+from htrc_feature_reader_spark.synth import generate_sequences
 
 
 def _formatted(df):
@@ -330,3 +333,17 @@ def test_nb_classify_scan_and_featurization_budget(spark, docs_dir):
     assert sum("text#" in ln for ln in scans) == 2
     assert plan.count(" Generate ") == 2
     assert plan.count("lambdafunction(aggregate(") == 2
+
+
+def test_pit_features_share_one_doc_exchange(spark, tmp_path):
+    """Every doc-keyed window of the PIT feature build orders by the ts
+    column, so one hash exchange on the doc column feeds them all and the
+    cumulative windows reuse the timeline sort."""
+    p = str(tmp_path / "seqs")
+    generate_sequences(spark, 200, n_docs=8, seed=5).write.parquet(p)
+    feats = build_pit_features(spark.read.parquet(p), attach_payload=False)
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    ops = [re.match(r"[\s:+\-]*(\w+)", ln).group(1) for ln in plan.splitlines()]
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id#\d+, \d+\)", plan)) == 1, plan
+    assert ops.count("Sort") == 4, plan
+    assert ops.count("Window") == 6, plan

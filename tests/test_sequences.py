@@ -56,18 +56,25 @@ def test_token_array_byte_equality(sequences_df, tmp_path):
     pd.testing.assert_frame_equal(src, got)
 
 
-def _pandas_pit_oracle(pdf: pd.DataFrame) -> pd.DataFrame:
+def _pandas_pit_oracle(pdf: pd.DataFrame, session_gap_s: float = 1800.0) -> pd.DataFrame:
     """Reference semantics in pandas: per (doc, ts) cumulative features over
-    rows with ts' <= ts (range semantics — duplicate ts included together)."""
+    rows with ts' <= ts (range semantics — duplicate ts included together),
+    per-(doc, source) and per-source cumulatives the same way, and the
+    timeline features in (ts, n_tok, sum_tok) order on integer micros."""
     pdf = pdf.copy()
     pdf["sum_tok"] = pdf["tokens"].map(lambda a: int(np.sum(np.asarray(a, dtype=np.int64))))
     pdf["n_distinct"] = pdf["tokens"].map(lambda a: len(set(a)))
+    pdf["ts_us"] = pdf["ts"].astype("datetime64[us]").astype(np.int64)
+    gap_us = int(round(session_gap_s * 1_000_000))
 
     out = []
     for doc, grp in pdf.groupby("doc_id"):
-        grp = grp.sort_values("ts", kind="mergesort")
-        for _, row in grp.iterrows():
+        grp = grp.sort_values(["ts", "n_tok", "sum_tok"], kind="mergesort")
+        prev_us = grp["ts_us"].shift()
+        new_session = prev_us.isna() | (grp["ts_us"] - prev_us > gap_us)
+        for (_, row), prev, session in zip(grp.iterrows(), prev_us, new_session.cumsum()):
             upto = grp[grp["ts"] <= row["ts"]]
+            src_upto = pdf[(pdf["source"] == row["source"]) & (pdf["ts"] <= row["ts"])]
             out.append(
                 {
                     "doc_id": doc,
@@ -77,6 +84,12 @@ def _pandas_pit_oracle(pdf: pd.DataFrame) -> pd.DataFrame:
                     "seq_idx": len(upto),
                     "cum_n_tok": int(upto["n_tok"].sum()),
                     "cum_sum_tok": int(upto["sum_tok"].sum()),
+                    "doc_src_cum_n_tok": int(
+                        upto.loc[upto["source"] == row["source"], "n_tok"].sum()
+                    ),
+                    "src_cum_n_tok": int(src_upto["n_tok"].sum()),
+                    "gap_s": (row["ts_us"] - prev) / 1_000_000.0,
+                    "session_id": int(session),
                 }
             )
     o = pd.DataFrame(out)
@@ -90,14 +103,18 @@ def test_features_match_pandas_oracle(spark):
     got = (
         build_pit_features(seqs)
         .select("doc_id", "ts", "n_tok", "sum_tok", "seq_idx", "cum_n_tok",
-                "cum_sum_tok", "mean_n_tok", "mean_token_id", "n_distinct", "src_share")
+                "cum_sum_tok", "mean_n_tok", "mean_token_id", "n_distinct", "src_share",
+                "doc_src_cum_n_tok", "src_cum_n_tok", "gap_s", "session_id")
         .toPandas()
         .sort_values(["doc_id", "ts", "n_tok", "sum_tok"])
         .reset_index(drop=True)
     )
     expect = _pandas_pit_oracle(seqs.toPandas())
-    for col in ("seq_idx", "cum_n_tok", "cum_sum_tok"):
-        assert (got[col].to_numpy() == expect[col].to_numpy()).all(), col
+    for col in ("seq_idx", "cum_n_tok", "cum_sum_tok", "doc_src_cum_n_tok",
+                "src_cum_n_tok", "session_id"):
+        assert (got[col].to_numpy(np.int64) == expect[col].to_numpy(np.int64)).all(), col
+    # both sides divide the same integer micros difference: exact, NaN first
+    np.testing.assert_array_equal(got["gap_s"].to_numpy(float), expect["gap_s"].to_numpy(float))
     for col in ("mean_n_tok", "mean_token_id"):
         assert np.allclose(got[col].to_numpy(), expect[col].to_numpy()), col
     assert ((got["src_share"] > 0) & (got["src_share"] <= 1)).all()
