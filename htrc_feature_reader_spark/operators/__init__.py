@@ -39,7 +39,6 @@ from .stats import (  # noqa: F401
 )
 from .similarity import (  # noqa: F401
     cosine_topk,
-    lsh_cosine_topk,
     near_dup_pairs,
     semantic_dedup,
 )

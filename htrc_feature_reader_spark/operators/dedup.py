@@ -365,7 +365,7 @@ def simhash_candidate_pairs(
 ) -> DataFrame:
     """SimHash near-dup pair mining: bit-slice each fingerprint into
     ``n_bands`` contiguous bands; candidate pairs share >= 1 identical
-    band (self-equi-join on (band, slice) — bucketed, never corpus^2);
+    band (self-equi-join on (band, slice) — band-keyed, never corpus^2);
     survivors filtered to hamming distance <= ``max_hamming`` (default
     n_bands - 1, the pigeonhole bound: any pair within that distance has
     at least one untouched band, so recall is EXACT, not probabilistic).

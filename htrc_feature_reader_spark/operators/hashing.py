@@ -35,8 +35,7 @@ The family
   seed; ``h_i(x) = (a_i * ((x + 1) * PREMIX mod p) + b_i) mod p``. The
   multiplicative pre-mix spreads small dense ids over the ring; the +1
   keeps id 0 off the zero fixed point. MinHash signatures and the
-  embedding LSH hyperplanes (``similarity.near_dup_pairs`` and
-  ``similarity.lsh_cosine_topk``) share it.
+  embedding LSH hyperplanes (``similarity.near_dup_pairs``) share it.
 - Mixers: :func:`key_hash` (a per-seed multiplicative hash of an integral
   or string key, :func:`seed_mult` decorrelating seeds) and :func:`mix`
   (an xorshift finalizer that breaks its affine lattice).

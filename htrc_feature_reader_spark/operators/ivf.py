@@ -1,6 +1,6 @@
 """IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
-scale path for embedding search, complementing the hyperplane-LSH variant
-(similarity.py:lsh_cosine_topk).
+scale path for embedding search, beside the exact brute-force
+``similarity.cosine_topk``.
 
 ``ivf_index`` trains a small centroid codebook with Lloyd's k-means
 expressed as DataFrame aggregations (assignment is a broadcast argmin over
@@ -62,12 +62,18 @@ def ivf_index(
     driver-sized, the corpus stays distributed).
 
     Deterministic init: the ``n_centroids`` vectors with the smallest ids
-    seed the codebook (data-independent of partitioning).
+    seed the codebook (data-independent of partitioning). Raises
+    ``ValueError`` when ``n_centroids < 1`` or ``emb`` has no rows: an
+    empty codebook has no nearest centroid.
     """
+    if n_centroids < 1:
+        raise ValueError(f"ivf_index needs n_centroids >= 1, got {n_centroids}")
     seeds = (
         emb.orderBy(id_col).limit(n_centroids)
         .select(id_col, vec_col).collect()
     )
+    if not seeds:
+        raise ValueError("ivf_index got an empty corpus: no vector to seed the codebook")
     centroids = [
         (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(seeds)
     ]
@@ -145,173 +151,3 @@ def ivf_topk(
         .drop("__rk")
     )
 
-
-def save_ivf_index(
-    assigned: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    path: str,
-) -> None:
-    """Persist a trained IVF index so the corpus is indexed ONCE and
-    probed by many serving jobs — at the 100 TB tier re-running Lloyd's
-    per query batch would re-scan the corpus ``n_iters + 1`` times.
-
-    Layout: ``<path>/codebook`` — the driver-sized (bucket, centroid)
-    table; ``<path>/assignments`` — the assigned corpus written
-    **partitioned by bucket**, so a probe of ``nprobe`` buckets is
-    directory-pruned at the file listing: the scan reads
-    ~``nprobe / n_centroids`` of the corpus instead of all of it
-    (the physical realization of the IVF cost contract). Idempotent
-    (overwrite mode); both writes are plain parquet, no metastore needed.
-    """
-    spark = assigned.sparkSession
-    spark.createDataFrame(
-        [(int(cid), [float(x) for x in c]) for cid, c in centroids],
-        "bucket int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
-    (
-        assigned.withColumnRenamed("__bucket", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/assignments")
-    )
-
-
-def _load_codebook(spark, path: str) -> list[tuple[int, list[float]]]:
-    """The saved codebook as the sorted [(bucket, centroid)] list both
-    :func:`load_ivf_index` and :func:`append_to_ivf_index` consume —
-    one definition so a future layout change cannot diverge the two."""
-    return sorted(
-        (int(r["bucket"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.parquet(f"{path}/codebook").collect()
-    )
-
-
-def load_ivf_index(
-    spark, path: str
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Load an index written by :func:`save_ivf_index`, returning the
-    same ``(assigned, centroids)`` shape :func:`ivf_index` produces —
-    :func:`ivf_topk` runs on it unchanged. The codebook collect is
-    driver-sized by construction (k rows). Filters on ``__bucket``
-    (the probe join under AQE/DPP, or an explicit ``isin``) prune to the
-    matching ``bucket=`` directories."""
-    centroids = _load_codebook(spark, path)
-    assigned = (
-        spark.read.parquet(f"{path}/assignments")
-        .withColumnRenamed("bucket", "__bucket")
-    )
-    return assigned, centroids
-
-
-def append_to_ivf_index(
-    new_emb: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dedup_ids: bool = False,
-) -> DataFrame:
-    """Add new vectors to a saved index WITHOUT retraining: assign each to
-    its nearest centroid under the index's existing codebook (a map-side
-    broadcast argmin — the corpus on disk is never read) and append the
-    assignments into the matching ``bucket=`` directories. The
-    incremental-ingest face of the similarity layer: a 100 TB corpus is
-    k-means-trained once, and every later crawl drop lands with one
-    narrow job instead of an ``n_iters + 1``-scan rebuild.
-
-    Returns the newly-assigned rows (with ``__bucket``), PINNED
-    (localCheckpoint) so the returned decisions are exactly what was
-    persisted even under a non-deterministic upstream, and nothing
-    recomputes on consumption. Two drift classes FAIL CLOSED (the
-    fail-open versions silently corrupt the on-disk index):
-
-    - embedding-DIMENSION drift (new vectors embedded with a different
-      model): the argmin's zip_with would null-pad, every distance would
-      go NULL, and every drifted vector would silently land in the
-      lowest bucket — an ``assert_true`` on the vector length errors the
-      job instead;
-    - COLUMN drift (renamed id column, extra columns): parquet append
-      accepts mixed schemas and the reader then resolves NULLs for the
-      mismatched files — the column sets are compared against the stored
-      assignments up front and a ``ValueError`` raised.
-
-    Deliberate semantics, documented not guarded:
-
-    - the CODEBOOK does not move — appended vectors are quantized by the
-      old centroids, so the index degrades gradually if the new data's
-      distribution drifts. Measured
-      (``tests/test_ivf.py::test_append_recall_drift_vs_rebuild``, 16-d
-      Gaussian clusters, k=8 centroids): a distribution-shifted batch
-      costs 0.10–0.17 recall@10 at nprobe=1 (0.84–0.90 appended vs 1.00
-      rebuilt); raising nprobe to 2 recovers recall (>= 0.95) but pays
-      the second degradation channel — bucket skew (max bucket share
-      0.25–0.28 appended vs 0.20–0.22 rebuilt, 0.125 uniform), i.e. the
-      ~nprobe/k probe-cost contract erodes. In-distribution appends show
-      neither effect. Rebuild (``ivf_index`` + ``save_ivf_index``) on a
-      schedule, exactly like compacting the dedup stores;
-    - by default ids are not checked against existing assignments:
-      re-appending a batch duplicates its rows and ``ivf_topk`` would
-      return duplicate (query, id) pairs — keep appends idempotent
-      upstream (e.g. gate on the digest store), OR pass
-      ``dedup_ids=True``: already-present ``id_col`` values are dropped
-      via an anti join against ONLY the batch's own target ``bucket=``
-      partitions (the ``isin`` on the partition column directory-prunes
-      the scan to at most k directories — never a full corpus read; the
-      codebook is frozen, so a re-appended vector always targets the
-      bucket that already holds it). ``dedup_ids`` suppresses duplicate
-      IDS, not updates: a changed vector under an existing id is dropped,
-      not replaced — rebuild for re-embeddings.
-    """
-    spark = new_emb.sparkSession
-    centroids = _load_codebook(spark, path)
-    if dedup_ids and id_col not in new_emb.columns:
-        raise ValueError(
-            f"dedup_ids=True needs id column {id_col!r}; batch has "
-            f"{sorted(new_emb.columns)}"
-        )
-
-    stored = set(spark.read.parquet(f"{path}/assignments").schema.names)
-    incoming = set(new_emb.columns) | {"bucket"}
-    if incoming != stored:
-        raise ValueError(
-            f"append_to_ivf_index column drift: index stores {sorted(stored)} "
-            f"but the batch provides {sorted(incoming)} — parquet append "
-            "would mix schemas and read back NULLs for mismatched files"
-        )
-
-    dims = len(centroids[0][1])
-    dim_guard = F.assert_true(
-        F.size(F.col(vec_col)) == F.lit(dims),
-        F.lit(
-            f"embedding dimension mismatch: index codebook is {dims}-d but "
-            "a batch vector differs — a different embedding model cannot "
-            "share this index; rebuild instead"
-        ),
-    )
-    assigned = new_emb.withColumn(
-        "__bucket",
-        F.when(dim_guard.isNull(), _nearest_centroid(F.col(vec_col), centroids)),
-    ).localCheckpoint(eager=True)  # pin: returned rows == persisted rows
-    if dedup_ids:
-        # the batch's target buckets: <= k values (driver-sized by the
-        # same argument as the codebook itself)
-        buckets = [
-            r["__bucket"]
-            for r in assigned.select("__bucket").distinct().collect()
-        ]
-        existing = (
-            spark.read.parquet(f"{path}/assignments")
-            # partition-column isin => directory pruning: only the
-            # matching bucket= dirs are listed/read, never the corpus
-            .filter(F.col("bucket").isin(buckets))
-            .select(id_col)
-        )
-        assigned = assigned.join(
-            existing, on=id_col, how="left_anti"
-        ).localCheckpoint(eager=True)  # re-pin after the store read
-    (
-        assigned.withColumnRenamed("__bucket", "bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{path}/assignments")
-    )
-    return assigned

@@ -10,7 +10,7 @@ Scale shape:
 - quality/language/token-count are pure Catalyst projections (no shuffle);
 - exact dedup is one map-side-digest + groupBy (one shuffle), rejoined as
   a broadcast-free semi join on (digest is unique -> join on id);
-- near-dup removal reuses the bucketed LSH pair miner (stop-shingle
+- near-dup removal reuses the banded LSH pair miner (stop-shingle
   capped, never corpus²); candidate pairs are VERIFIED against the
   MinHash-estimated Jaccard before any document is dropped (raw LSH
   candidacy has a ~15%+ false-positive floor at low similarity — bare

@@ -1,18 +1,18 @@
 """Similarity search over embedding columns (training-data extension).
 
-Brute-force cosine top-k as the exact baseline, and a random-hyperplane
-LSH-bucketed variant as the scale path. Embeddings are plain
-``array<float>`` columns; all arithmetic runs JVM-side via higher-order
-functions (zip_with/aggregate) in double precision — no Python in the hot
-path.
+Brute-force cosine top-k as the exact baseline (the approximate top-k is
+``ivf.ivf_topk``), and random-hyperplane LSH near-duplicate pairs.
+Embeddings are plain ``array<float>`` columns; all arithmetic runs
+JVM-side via higher-order functions (zip_with/aggregate) in double
+precision — no Python in the hot path.
 
 Scale shape: brute force is queries x corpus — fine when the query side is
-small and broadcast (the common "probe a candidate set" case). The LSH
-variant buckets both sides by hyperplane sign bits so each query only
-scores its bucket's collisions; both LSH operators take their planes from
-the affine family of :mod:`.hashing`, so signatures are reproducible across
-runs and engines. A vector without a positive norm (empty, all zeros, or
-holding a NULL) has no direction: no scorer here pairs or ranks it.
+small and broadcast (the common "probe a candidate set" case).
+``near_dup_pairs`` buckets vectors by hyperplane sign bits so only bucket
+collisions are scored; its planes come from the affine family of
+:mod:`.hashing`, so signatures are reproducible across runs and engines.
+A vector without a positive norm (empty, all zeros, or holding a NULL)
+has no direction: no scorer here pairs or ranks it.
 """
 
 from __future__ import annotations
@@ -233,51 +233,6 @@ def near_dup_pairs(
         )
     )
     return scored.filter(F.round("cos", 6) >= threshold)
-
-
-def lsh_cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_planes: int = 12,
-    seed: int = 42,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec: str = "q_embedding",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: score only signature-bucket collisions.
-
-    Recall is tunable via n_planes (fewer planes = bigger buckets = higher
-    recall/cost). Use cosine_topk for exactness; this is the 100 TB path
-    where the corpus cannot be brute-forced per query. The buckets are
-    ``near_dup_pairs``' signatures with one band of ``n_planes`` bits;
-    ``query_id`` and ``corpus_id`` are unique keys of their sides.
-    """
-    q = queries.select(query_id, query_vec).filter(norm(F.col(query_vec)) > 0)
-    c = corpus.select(corpus_id, corpus_vec).filter(norm(F.col(corpus_vec)) > 0)
-
-    def sigs(df, id_col, vec_col):
-        ex = df.select(
-            F.col(id_col).alias("id"), F.posexplode(vec_col).alias("__i", "__x")
-        )
-        return _band_signatures(ex, 1, n_planes, seed).select(
-            F.col("id").alias(id_col), "sig"
-        )
-
-    scored = (
-        F.broadcast(sigs(q, query_id, query_vec))
-        .join(sigs(c, corpus_id, corpus_vec), on="sig")
-        .join(F.broadcast(q), on=query_id)
-        .join(c, on=corpus_id)
-        .select(query_id, corpus_id, cosine(F.col(query_vec), F.col(corpus_vec)).alias("cos"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos"), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
 
 
 def semantic_dedup(

@@ -16,9 +16,7 @@ from .hashing import MOD, rolling_hash, rolling_hash_sql, window_starts
 # Tiny per-language stopword marker sets (drawn from public stopword
 # lists) — enough signal for a coarse heuristic language id on natural
 # text. Deliberately small: each probe is one array_intersect over the
-# distinct token array, all JVM-side. For production-grade 100+-language
-# coverage plug a real classifier in via ``detect_language(method='model',
-# model_fn=...)`` below.
+# distinct token array, all JVM-side.
 _LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "is", "that", "you", "with"],
     "fr": ["le", "la", "les", "et", "est", "que", "vous", "avec"],
@@ -61,125 +59,51 @@ def detect_language(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "lang",
-    method: str = "heuristic",
-    model_fn=None,
 ) -> DataFrame:
-    """Attach a language column.
-
-    method='heuristic' (default): the JVM-side marker-stopword expression
+    """Attach a language column: the JVM-side marker-stopword expression
     (:func:`lang_id`) — ~10 languages, zero Python, composes into any
-    plan.
-
-    method='model': plug in a REAL classifier (fastText, CLD3, a pyfunc
-    model...) as ``model_fn``, a batched callable mapping a
-    ``pandas.Series`` of document texts to a same-length ``pandas.Series``
-    of language codes. Runs via ``mapInPandas`` so the model is invoked
-    once per Arrow batch (not per row), loads per executor (import/init
-    inside ``model_fn`` or its closure), and the plan shape stays
-    scan -> one Python stage -> downstream JVM ops. The classifier
-    libraries themselves are not bundled here — this is the documented
-    plumbing seam, exercised by a deterministic fake model in tests
-    (tests/test_text_extra.py).
-    """
-    # same contract on BOTH paths: withColumn would silently overwrite an
-    # existing column (e.g. a stored ground-truth `lang`)
+    plan. Raises ``ValueError`` when ``out_col`` already exists, so a
+    stored ground-truth column is never silently overwritten."""
     if out_col in df.columns:
         raise ValueError(f"output column {out_col!r} already exists")
-    if method == "heuristic":
-        return df.withColumn(out_col, lang_id(F.col(text_col)))
-    if method != "model":
-        raise ValueError(f"unknown language-id method {method!r}")
-    if model_fn is None:
-        raise ValueError(
-            "method='model' needs model_fn "
-            "(pandas.Series[str] -> pandas.Series[str]); "
-            "pass e.g. a fastText predict wrapper"
-        )
-    import pandas as pd  # local: keep module import light
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"`{out_col}` string"]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            langs = model_fn(pdf[text_col])
-            yield pdf.assign(**{out_col: pd.Series(langs).astype(str).values})
-
-    return df.mapInPandas(run, schema=out_schema)
+    return df.withColumn(out_col, lang_id(F.col(text_col)))
 
 
 def tokenize(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "tokens",
-    method: str = "hash",
-    tokenizer_fn=None,
     vocab_size: int | None = None,
 ) -> DataFrame:
     """Attach a token-id array column — the input :func:`..packing.pack_sequences`
     consumes, making tokenize -> pack -> train-shards one lazy plan.
 
-    method='hash' (default): the BPE-ish pretokenizer
-    (:data:`BPE_ISH_PATTERN` — letter runs / digit runs / single
-    punctuation, the same matches :func:`bpe_ish_token_count` counts) with
-    each piece mapped to an id by the module's polynomial rolling hash,
-    optionally folded into ``[0, vocab_size)``. Pure Catalyst
+    The BPE-ish pretokenizer (:data:`BPE_ISH_PATTERN` — letter runs / digit
+    runs / single punctuation, the same matches :func:`bpe_ish_token_count`
+    counts) with each piece mapped to an id by the module's polynomial
+    rolling hash, optionally folded into ``[0, vocab_size)``. Pure Catalyst
     (regexp_extract_all + transform + aggregate, zero Python), exact
     integer arithmetic — the DuckDB oracle replays it verbatim
     (:func:`tokenize_sql`), and ``size(tokens)`` equals
     ``bpe_ish_token_count`` by construction. An honest stand-in for a real
     BPE vocabulary: ids are content-deterministic, merges are not modeled.
-
-    method='model': plug a REAL tokenizer (tiktoken, HF tokenizers,
-    SentencePiece...) in as ``tokenizer_fn``, a batched callable mapping a
-    ``pandas.Series`` of texts to a same-length iterable of ``list[int]``.
-    Runs via ``mapInPandas`` — one Python invocation per Arrow batch, the
-    tokenizer loads once per executor (init inside ``tokenizer_fn``'s
-    closure), plan shape scan -> one Python stage -> JVM packing. The
-    tokenizer libraries are not bundled in this environment; this is the
-    documented plumbing seam, exercised by a deterministic fake in tests —
-    the same contract as ``detect_language(method='model')``.
+    Raises ``ValueError`` when ``out_col`` already exists.
     """
     if out_col in df.columns:
         raise ValueError(f"output column {out_col!r} already exists")
-    if method == "hash":
-        pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0)
-        tok = F.transform(pieces, lambda p: rolling_hash(p))
-        if vocab_size is not None:
-            if vocab_size <= 0:
-                raise ValueError(f"vocab_size must be positive, got {vocab_size}")
-            tok = F.transform(tok, lambda t: F.pmod(t, F.lit(int(vocab_size))))
-        return df.withColumn(out_col, tok)
-    if method != "model":
-        raise ValueError(f"unknown tokenize method {method!r}")
-    if tokenizer_fn is None:
-        raise ValueError(
-            "method='model' needs tokenizer_fn "
-            "(pandas.Series[str] -> iterable of list[int]); "
-            "pass e.g. a tiktoken encode_batch wrapper"
-        )
-    import pandas as pd  # local: keep module import light
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"`{out_col}` array<long>"]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids = tokenizer_fn(pdf[text_col])
-            yield pdf.assign(
-                **{out_col: pd.Series(list(ids), index=pdf.index)}
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
+    pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0)
+    tok = F.transform(pieces, lambda p: rolling_hash(p))
+    if vocab_size is not None:
+        if vocab_size <= 0:
+            raise ValueError(f"vocab_size must be positive, got {vocab_size}")
+        tok = F.transform(tok, lambda t: F.pmod(t, F.lit(int(vocab_size))))
+    return df.withColumn(out_col, tok)
 
 
 def tokenize_sql(
     text_expr: str, vocab_size: int | None = None, mod: int = MOD
 ) -> str:
-    """The ``tokenize(method='hash')`` expression as DuckDB SQL — same
+    """The :func:`tokenize` expression as DuckDB SQL — same
     pretokenizer regex, same rolling-hash family, bit-identical ids (for
     oracles and cross-engine replays)."""
     rh = rolling_hash_sql("p", mod=mod)
@@ -422,8 +346,6 @@ def unigram_logprob(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    model: DataFrame | None = None,
-    oov_bits: float = 30.0,
 ) -> DataFrame:
     """Unigram language-model quality score (CCNet-style perplexity
     filter): per document, the mean information content in bits of its
@@ -432,11 +354,14 @@ def unigram_logprob(
 
     High scores flag gibberish / junk-token documents (their tokens are
     rare corpus-wide); unusually low scores flag boilerplate drawn from
-    the most common token mass. By default the model is trained on
-    ``docs`` itself in the same lazy plan (two aggregations, no driver
-    action); pass ``model`` — a frozen ``(token, tok_count, __total)``
-    table from a trusted corpus — to score a new crawl drop against it,
-    with out-of-vocabulary tokens charged ``oov_bits`` bits.
+    the most common token mass. The model is trained on ``docs`` itself
+    in the same lazy plan (two aggregations, no driver action), so every
+    scored token is in the vocabulary.
+
+    Returns ``(id, n_tokens, bits_per_token)`` only for documents with at
+    least one token: a document whose text is NULL, empty or whitespace
+    only has no row (unlike :func:`bigram_logprob`, which keeps every
+    document).
 
     Scale: the token-frequency join carries NO broadcast hint — a token
     vocabulary is unbounded at web scale (Heaps' law), the same contract
@@ -449,15 +374,11 @@ def unigram_logprob(
         F.col(id_col).alias(id_col),
         F.explode(F.split(F.col(text_col), r"\s+")).alias("token"),
     ).filter(F.col("token") != "")
-    if model is None:
-        model = toks.groupBy("token").agg(F.count(F.lit(1)).alias("tok_count"))
-        total = toks.agg(F.count(F.lit(1)).alias("__total"))
-        model = model.join(F.broadcast(total))  # 1-row cross join
+    model = toks.groupBy("token").agg(F.count(F.lit(1)).alias("tok_count"))
+    total = toks.agg(F.count(F.lit(1)).alias("__total"))
+    model = model.join(F.broadcast(total))  # 1-row cross join
     scored = toks.join(model, on="token", how="left")  # unbounded vocab: AQE decides
-    bits = F.when(
-        F.col("tok_count").isNotNull(),
-        -F.log2(F.col("tok_count").cast("double") / F.col("__total")),
-    ).otherwise(F.lit(float(oov_bits)))
+    bits = -F.log2(F.col("tok_count").cast("double") / F.col("__total"))
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.avg(bits).alias("bits_per_token"),
@@ -469,8 +390,6 @@ def bigram_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     lam: float = 0.9,
-    model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    oov_bits: float = 30.0,
 ) -> DataFrame:
     """Interpolated bigram language-model quality score — the next rung
     above :func:`unigram_logprob` on the CCNet/KenLM-style perplexity
@@ -482,18 +401,14 @@ def bigram_logprob(
     where ``c(v w)`` counts the bigram over the corpus, ``c(v .)`` counts
     ``v`` as a transition context, and ``c(w)/N`` is the unigram MLE over
     all token instances. The unigram interpolation floor means every
-    observed transition has p > 0 (any scoring corpus word appears in the
-    training counts when the model is self-trained).
+    observed transition has p > 0: the model is trained on ``docs`` itself
+    inside the same lazy plan, so every scored word and transition is in
+    its counts.
 
     Returns one row per input document: ``(id, n_trans, bits_per_trans)``
     — row-preserving: docs with < 2 words score ``n_trans = 0`` with NULL
     bits (no transitions to judge, deliberately not 0.0 — a 0 would sort
     as "perfectly predictable").
-
-    ``model``, if given, is the frozen triple ``(bigrams, contexts,
-    unigrams)`` with schemas ``(prev, cur, c_big)``, ``(prev, c_ctx)``,
-    ``(cur, c_uni, __n)`` from a trusted corpus. By default all three are
-    trained on ``docs`` itself inside the same lazy plan.
 
     Scale: transitions come from ONE split per doc (adjacent pairs via an
     index transform — no self-join of positions); all three count tables
@@ -514,35 +429,23 @@ def bigram_logprob(
         F.col(id_col).alias("id"), F.explode(pairs).alias("__p")
     ).select("id", F.col("__p.prev").alias("prev"), F.col("__p.cur").alias("cur"))
 
-    if model is None:
-        toks = docs.select(
-            F.explode(words).alias("cur")
-        )
-        unigrams = toks.groupBy("cur").agg(F.count(F.lit(1)).alias("c_uni"))
-        n_total = toks.agg(F.count(F.lit(1)).alias("__n"))
-        unigrams = unigrams.join(F.broadcast(n_total))  # 1-row cross join
-        bigrams = trans.groupBy("prev", "cur").agg(
-            F.count(F.lit(1)).alias("c_big")
-        )
-        contexts = trans.groupBy("prev").agg(F.count(F.lit(1)).alias("c_ctx"))
-    else:
-        bigrams, contexts, unigrams = model
+    toks = docs.select(
+        F.explode(words).alias("cur")
+    )
+    unigrams = toks.groupBy("cur").agg(F.count(F.lit(1)).alias("c_uni"))
+    n_total = toks.agg(F.count(F.lit(1)).alias("__n"))
+    unigrams = unigrams.join(F.broadcast(n_total))  # 1-row cross join
+    bigrams = trans.groupBy("prev", "cur").agg(
+        F.count(F.lit(1)).alias("c_big")
+    )
+    contexts = trans.groupBy("prev").agg(F.count(F.lit(1)).alias("c_ctx"))
 
     lam = float(lam)
-    # frozen-model OOV: a missing context/unigram row nulls its term —
-    # fold each to 0 mass, and charge oov_bits when the mix is 0 (both
-    # unseen; self-trained models never hit this — every transition's
-    # words are in their own training counts)
-    pb = F.when(
-        F.col("c_ctx").isNotNull(),
-        F.coalesce(F.col("c_big"), F.lit(0)).cast("double") / F.col("c_ctx"),
-    ).otherwise(F.lit(0.0))
-    pu = F.when(
-        F.col("c_uni").isNotNull(),
-        F.col("c_uni").cast("double") / F.col("__n"),
-    ).otherwise(F.lit(0.0))
-    p = lam * pb + (1.0 - lam) * pu
-    bits = F.when(p > 0.0, -F.log2(p)).otherwise(F.lit(float(oov_bits)))
+    p = (
+        lam * (F.col("c_big").cast("double") / F.col("c_ctx"))
+        + (1.0 - lam) * (F.col("c_uni").cast("double") / F.col("__n"))
+    )
+    bits = -F.log2(p)
     scored = (
         trans.join(bigrams, on=["prev", "cur"], how="left")  # unbounded: AQE
         .join(contexts, on="prev", how="left")

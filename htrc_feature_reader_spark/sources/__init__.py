@@ -8,7 +8,5 @@ from .ef_json import (  # noqa: F401
     volumes_from_ef,
 )
 from .parquet_quad import read_quad, write_quad  # noqa: F401
-from .ziptree import read_ef_ziptree, write_ef_ziptree  # noqa: F401
-from .bucketed import read_bucketed, write_bucketed  # noqa: F401
 from .jsonl_raw import read_jsonl, write_jsonl  # noqa: F401
 from . import ids  # noqa: F401

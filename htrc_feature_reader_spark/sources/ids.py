@@ -75,29 +75,3 @@ def stubbytree_filename(htid: str, fmt: str = "json", compression: str | None = 
         name += "." + compression
     return os.path.join(stubbytree_path(htid), name)
 
-
-def resolver_filename(
-    htid: str,
-    fmt: str = "json",
-    compression: str | None = "bz2",
-    suffix: str | None = None,
-) -> str:
-    """The reference resolvers' member filename rule (resolvers.py:51-63):
-    ``clean_htid[.suffix].fmt[.compression]``; parquet never carries the
-    compression in the name."""
-    if fmt == "parquet":
-        compression = None
-    parts = [clean_htid(htid), suffix, fmt, compression]
-    return ".".join(p for p in parts if p is not None)
-
-
-def ziptree_zipfile(htid: str, hash_chars: int = 3) -> str:
-    """Which zipfile of a ziptree holds a volume (resolvers.py:270-277):
-    the first ``hash_chars`` hex digits of sha1(htid) name the shard;
-    hash_chars=0 collapses the tree to one ``features.zip``."""
-    if hash_chars == 0:
-        return "features.zip"
-    import hashlib
-
-    code = hashlib.sha1(htid.encode("utf-8")).hexdigest()[:hash_chars]
-    return code + ".zip"

@@ -20,8 +20,8 @@ Stages (one lazy plan up to the packing barrier):
    and test-split texts (13-gram overlap): eval hygiene both by
    construction (disjoint hash intervals) AND by content (no train doc
    shares shingles with the holdout).
-4. :func:`tokenize` — hash tokenizer here; swap ``method='model'`` with a
-   real BPE ``tokenizer_fn`` at the same seam.
+4. :func:`tokenize` — the hash tokenizer (BPE-ish pretokenizer pieces
+   mapped to ids by the rolling hash, folded into a 2^17 vocabulary).
 5. :func:`pack_sequences` with ``checkpoint_dir`` — the corpus barrier is
    a RELIABLE checkpoint (staged write), so an executor loss mid-pack
    recomputes from the stage, not from nothing. The stage is a

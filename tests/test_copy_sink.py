@@ -2,41 +2,54 @@
 copies are byte-equal to the source; transcodes re-ingest identically."""
 
 import bz2
+import json
 import os
 
 import pytest
 
 from htrc_feature_reader_spark.sources.copy_sink import copy_volumes
 from htrc_feature_reader_spark.sources.ef_json import read_ef_json, tokenlist_from_ef
+from htrc_feature_reader_spark.synth import make_ef_volume_dict
 
 DATA = "/root/reference/tests/data"
 FIXTURE = f"{DATA}/frankenstein-15pages.json.bz2"
 
-# only the tests that read FIXTURE need the reference tree; the rest
-# write their own temp files and run on every host
+# only the reference source needs the reference tree; the synthetic
+# source and the other tests write their own temp files and run on
+# every host
 needs_fixture = pytest.mark.skipif(
     not os.path.isfile(FIXTURE), reason="reference fixtures not present"
 )
 
 
-@needs_fixture
-def test_same_compression_copy_is_byte_equal(spark, tmp_path):
+@pytest.fixture(params=[pytest.param("reference", marks=needs_fixture), "synth"])
+def source(request, tmp_path):
+    """One bz2 EF-JSON volume: the reference fixture, or a synthetic
+    volume written in ``tmp_path``."""
+    if request.param == "reference":
+        return FIXTURE
+    src = tmp_path / "src" / "syn.vol000.json.bz2"
+    src.parent.mkdir()
+    src.write_bytes(bz2.compress(json.dumps(make_ef_volume_dict("syn.vol000")).encode()))
+    return str(src)
+
+
+def test_same_compression_copy_is_byte_equal(spark, tmp_path, source):
     dest = str(tmp_path / "copies")
-    metrics = {r["src"]: r for r in copy_volumes(spark, FIXTURE, dest).collect()}
+    metrics = {r["src"]: r for r in copy_volumes(spark, source, dest).collect()}
     assert len(metrics) == 1
-    rec = metrics[FIXTURE]
+    rec = metrics[source]
     assert rec["skipped_recompression"] is True
-    with open(FIXTURE, "rb") as f:
+    with open(source, "rb") as f:
         src_bytes = f.read()
     with open(rec["dest"], "rb") as f:
         assert f.read() == src_bytes  # byte-faithful, never decoded
     assert rec["n_bytes_in"] == rec["n_bytes_out"] == len(src_bytes)
 
 
-@needs_fixture
-def test_transcode_roundtrips_content(spark, tmp_path):
+def test_transcode_roundtrips_content(spark, tmp_path, source):
     dest = str(tmp_path / "gz")
-    rec = copy_volumes(spark, FIXTURE, dest, compression="gz").collect()[0]
+    rec = copy_volumes(spark, source, dest, compression="gz").collect()[0]
     assert rec["skipped_recompression"] is False
     assert rec["dest"].endswith(".json.gz")
     # decoded content identical to the bz2 source's
@@ -44,10 +57,10 @@ def test_transcode_roundtrips_content(spark, tmp_path):
 
     with open(rec["dest"], "rb") as f:
         got = gzip.decompress(f.read())
-    with open(FIXTURE, "rb") as f:
+    with open(source, "rb") as f:
         assert got == bz2.decompress(f.read())
     # and the engine ingests the transcoded file to the same tokenlist
-    a = tokenlist_from_ef(read_ef_json(spark, FIXTURE, multiline=True))
+    a = tokenlist_from_ef(read_ef_json(spark, source, multiline=True))
     b = tokenlist_from_ef(read_ef_json(spark, rec["dest"], multiline=True))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
@@ -56,11 +69,10 @@ def _dest_files(dest):
     return [e for e in os.listdir(dest) if e != ".copy_manifest"]
 
 
-@needs_fixture
-def test_rerun_idempotent(spark, tmp_path):
+def test_rerun_idempotent(spark, tmp_path, source):
     dest = str(tmp_path / "copies")
-    copy_volumes(spark, FIXTURE, dest).collect()
-    copy_volumes(spark, FIXTURE, dest).collect()  # overwrite, not append
+    copy_volumes(spark, source, dest).collect()
+    copy_volumes(spark, source, dest).collect()  # overwrite, not append
     assert len(_dest_files(dest)) == 1
 
 

@@ -19,7 +19,6 @@ from htrc_feature_reader_spark.operators.dedup import (
 from htrc_feature_reader_spark.operators.ivf import ivf_topk
 from htrc_feature_reader_spark.operators.similarity import (
     cosine_topk,
-    lsh_cosine_topk,
     near_dup_pairs,
 )
 from htrc_feature_reader_spark.operators.text import lang_id, quality_features
@@ -128,31 +127,10 @@ def test_cosine_topk_exact(vectors):
     assert {r["vec_id"] for r in out} == top
 
 
-def test_lsh_topk_recovers_near_dup(vectors):
-    q = vectors.filter("vec_id = 0").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    out = lsh_cosine_topk(q, vectors, k=3, n_planes=4).collect()
-    got = [r["vec_id"] for r in out]
-    assert len(got) <= 3
-    assert len(set(got)) == len(got)
-    assert 0 in got  # identical vector always collides with itself
-    # near-dup has hamming-0 signature with high probability at 4 planes
-    assert 1 in got
-    # every returned score is the exact cosine of its pair
-    pdf = vectors.toPandas()
-    m = dict(zip(pdf["vec_id"], pdf["embedding"].map(np.asarray)))
-    for r in out:
-        a, b = m[0], m[r["vec_id"]]
-        want = a @ b / (np.linalg.norm(a) * np.linalg.norm(b))
-        assert math.isclose(r["cos"], want, abs_tol=1e-6)
-
-
 _DEGENERATE_SHAPES = {
     "near_dup_banded": lambda emb, q: near_dup_pairs(emb, threshold=0.9),
     "near_dup_exact": lambda emb, q: near_dup_pairs(emb, threshold=0.9, exact=True),
     "cosine_topk": lambda emb, q: cosine_topk(q, emb, k=3),
-    "lsh_cosine_topk": lambda emb, q: lsh_cosine_topk(q, emb, k=3),
     "ivf_topk": lambda emb, q: ivf_topk(
         emb.withColumn("__bucket", F.lit(0)), [(0, [1.0, 0.0])], q, k=3, nprobe=1
     ),

@@ -41,22 +41,16 @@ def test_unigram_logprob_hand_computed(spark):
 
 
 def test_unigram_logprob_empty_tokens_ignored(spark):
-    # leading/multiple whitespace must not contribute empty tokens
-    docs = spark.createDataFrame([(1, "  a   a  ")], "doc_id long, text string")
-    r = unigram_logprob(docs).collect()[0]
-    assert r["n_tokens"] == 2
-    assert r["bits_per_token"] == pytest.approx(0.0, abs=1e-12)  # p(a)=1
-
-
-def test_unigram_logprob_frozen_model_and_oov(spark):
-    # frozen model: a with count 1 of total 4 -> 2 bits; z is OOV -> 30
-    docs = spark.createDataFrame([(1, "a z")], "doc_id long, text string")
-    model = spark.createDataFrame(
-        [("a", 1, 4)], "token string, tok_count long, __total long"
+    # leading/multiple whitespace must not contribute empty tokens, and a
+    # document with no token at all (NULL, empty, whitespace only) has no row
+    docs = spark.createDataFrame(
+        [(1, "  a   a  "), (2, None), (3, ""), (4, " \t  ")],
+        "doc_id long, text string",
     )
-    r = unigram_logprob(docs, model=model, oov_bits=30.0).collect()[0]
-    assert r["n_tokens"] == 2
-    assert r["bits_per_token"] == pytest.approx((2.0 + 30.0) / 2, rel=1e-12)
+    rows = unigram_logprob(docs).collect()
+    assert [r["doc_id"] for r in rows] == [1]
+    assert rows[0]["n_tokens"] == 2
+    assert rows[0]["bits_per_token"] == pytest.approx(0.0, abs=1e-12)  # p(a)=1
 
 
 def test_unigram_logprob_no_forced_vocab_broadcast(spark):

@@ -252,35 +252,6 @@ def test_bigram_logprob_short_doc_null_bits(spark):
     assert rows[3]["n_trans"] == 1
 
 
-def test_bigram_logprob_frozen_model_oov(spark):
-    """Scoring a doc whose words the frozen model never saw charges
-    oov_bits per transition."""
-    train = spark.createDataFrame([(1, "a b a b")], "doc_id long, text string")
-    words = F.array_remove(F.split(F.col("text"), " "), "")
-    toks = train.select(F.explode(words).alias("cur"))
-    unigrams = toks.groupBy("cur").agg(F.count(F.lit(1)).alias("c_uni"))
-    unigrams = unigrams.join(
-        F.broadcast(toks.agg(F.count(F.lit(1)).alias("__n")))
-    )
-    idx = F.sequence(F.lit(0), F.size(words) - 2)
-    pairs = F.transform(
-        idx,
-        lambda i: F.struct(
-            F.element_at(words, i + 1).alias("prev"),
-            F.element_at(words, i + 2).alias("cur"),
-        ),
-    )
-    trans = train.select(F.explode(pairs).alias("p")).select("p.prev", "p.cur")
-    bigrams = trans.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c_big"))
-    contexts = trans.groupBy("prev").agg(F.count(F.lit(1)).alias("c_ctx"))
-    score = spark.createDataFrame([(9, "zz qq")], "doc_id long, text string")
-    r = bigram_logprob(
-        score, model=(bigrams, contexts, unigrams), oov_bits=30.0
-    ).collect()[0]
-    assert r["n_trans"] == 1
-    assert r["bits_per_trans"] == pytest.approx(30.0)
-
-
 # ---------------------------------------------------------------------------
 # token_drift
 

@@ -56,7 +56,7 @@ def test_remove_duplicate_lines(spark):
 
 
 def test_lang_id_broadened_markers(spark):
-    from htrc_feature_reader_spark.operators.text import lang_id
+    from htrc_feature_reader_spark.operators.text import detect_language, lang_id
 
     rows = [
         (1, "il problema che questo sono di per della"),
@@ -74,41 +74,17 @@ def test_lang_id_broadened_markers(spark):
     assert out == {1: "it", 2: "pt", 3: "nl", 4: "sv", 5: "pl",
                    6: "ru", 7: "en", 8: "und"}
 
-
-def test_detect_language_model_hook(spark):
-    """The mapInPandas model seam: a deterministic fake classifier drops
-    in with the documented batched Series->Series contract; schema and
-    row alignment preserved; errors on bad usage."""
-    import pytest
-    from htrc_feature_reader_spark.operators.text import detect_language
-
-    docs = spark.createDataFrame(
-        [(1, "aaa bbb"), (2, "ccc"), (3, "dd ee ff")],
-        "doc_id long, text string",
-    )
-
-    def fake_model(texts):
-        # deterministic 'model': even char counts -> xx, odd -> yy
-        return texts.str.len().map(lambda n: "xx" if n % 2 == 0 else "yy")
-
-    out = detect_language(docs, method="model", model_fn=fake_model)
-    assert out.columns == ["doc_id", "text", "lang"]
-    got = {r["doc_id"]: r["lang"] for r in out.collect()}
-    assert got == {1: "yy", 2: "yy", 3: "xx"}
-
-    # heuristic path unchanged and hook misuse fails loudly
-    heur = detect_language(docs)  # default heuristic
-    assert heur.filter("lang = 'und'").count() == 3
-    with pytest.raises(ValueError, match="model_fn"):
-        detect_language(docs, method="model")
-    with pytest.raises(ValueError, match="method"):
-        detect_language(docs, method="nope")
+    detected = detect_language(df)
+    assert detected.columns == ["id", "text", "lang"]
+    assert {r["id"]: r["lang"] for r in detected.collect()} == out
+    with pytest.raises(ValueError, match="already exists"):
+        detect_language(detected)
 
 
 def test_tokenize_hash_counts_and_duckdb_parity(spark):
-    """tokenize(method='hash') ids are bit-identical to the DuckDB replay
-    (tokenize_sql), size(tokens) == bpe_ish_token_count, and vocab_size
-    folds ids into range."""
+    """tokenize ids are bit-identical to the DuckDB replay (tokenize_sql),
+    size(tokens) == bpe_ish_token_count, vocab_size folds ids into range,
+    and an existing output column is never overwritten."""
     import duckdb
 
     from htrc_feature_reader_spark.operators.text import (
@@ -130,37 +106,8 @@ def test_tokenize_hash_counts_and_duckdb_parity(spark):
     ).fetchall())
     assert {r["doc_id"]: list(r["tokens"]) for r in rows} == \
         {k: list(v) for k, v in oracle.items()}
-
-
-def test_tokenize_model_hook_feeds_pack(spark):
-    """The tokenizer seam end-to-end: a fake model tokenizer ->
-    pack_sequences -> unpack recovers each doc's ids exactly."""
-    from htrc_feature_reader_spark.operators.packing import (
-        pack_sequences, unpack_sequences)
-    from htrc_feature_reader_spark.operators.text import tokenize
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", " ".join(f"w{j}" for j in range(i + 1)))
-         for i in range(12)], "doc_id string, text string")
-
-    def fake(series):  # deterministic across processes (hash() is not)
-        return [[sum(t.encode()) * 31 + len(w) for w in t.split()]
-                for t in series]
-
-    toks = tokenize(docs, method="model", tokenizer_fn=fake).drop("text")
-    packed = pack_sequences(toks, 16, drop_last=False)
-    back = {r["doc_id"]: list(r["tokens"])
-            for r in unpack_sequences(packed).collect()}
-    exp = {r["doc_id"]: [sum(r["text"].encode()) * 31 + len(w)
-                         for w in r["text"].split()]
-           for r in docs.collect()}
-    assert back == exp
-    with pytest.raises(ValueError, match="tokenizer_fn"):
-        tokenize(docs, method="model")
-    with pytest.raises(ValueError, match="method"):
-        tokenize(docs, method="nope")
     with pytest.raises(ValueError, match="already exists"):
-        tokenize(docs.withColumn("tokens", F.lit(1)), method="hash")
+        tokenize(docs.withColumn("tokens", F.lit(1)))
 
 
 def test_repetition_features_reference_values(spark):
