@@ -19,8 +19,8 @@ Scale shape:
   of the verified pair graph (``survivorship='clusters'`` — cluster-
   correct on chains, at the cost of the bounded iterative rounds in
   ``operators/components.py``);
-- the final write goes through ``plans.write_partitioned`` /
-  ``resume_write`` when the caller wants lineage + resumability.
+- the final write goes through ``plans.resume_write`` when the caller
+  wants lineage + resumability.
 """
 
 from __future__ import annotations
@@ -314,6 +314,7 @@ def ingest_clean_batch(
         read_signature_store,
     )
 
+    from ..session import _job
     from ..sources.store_common import require_integral_id
 
     cfg = config or CleanConfig()
@@ -328,9 +329,10 @@ def ingest_clean_batch(
     q = _quality_lang(docs, cfg, text_col)
     # exact: within-batch min-id + digest-store anti join; pin before any
     # store mutates (the plan reads the store path)
-    ex = dedup_against_store(
-        q, read_digest_store(spark, digest_path), text_col, id_col
-    ).localCheckpoint(eager=True)
+    with _job("ingest_clean_batch: exact pin"):
+        ex = dedup_against_store(
+            q, read_digest_store(spark, digest_path), text_col, id_col
+        ).localCheckpoint(eager=True)
 
     survivors, sigs = ex, None
     if cfg.near_dup:
@@ -343,23 +345,25 @@ def ingest_clean_batch(
         # pinned once: the shingle folds + MinHash aggregation would
         # otherwise run twice (under the neardup joins and again in the
         # append) — the dominant CPU stage of the round
-        sigs = minhash_signatures(
-            sh, n_hashes=cfg.minhash_hashes
-        ).localCheckpoint(eager=True)
-        survivors = neardup_against_store(
-            ex,
-            read_signature_store(spark, sig_path),
-            sigs,
-            id_col=id_col,
-            n_bands=cfg.lsh_bands,
-            rows_per_band=cfg.lsh_rows,
-            # None = raw candidacy in clean_corpus; agreement >= 0 is the
-            # same rule here (every collision drops)
-            threshold=(
-                0.0 if cfg.near_dup_threshold is None
-                else cfg.near_dup_threshold
-            ),
-        ).localCheckpoint(eager=True)
+        with _job("ingest_clean_batch: signature pin"):
+            sigs = minhash_signatures(
+                sh, n_hashes=cfg.minhash_hashes
+            ).localCheckpoint(eager=True)
+        with _job("ingest_clean_batch: near-dup pin"):
+            survivors = neardup_against_store(
+                ex,
+                read_signature_store(spark, sig_path),
+                sigs,
+                id_col=id_col,
+                n_bands=cfg.lsh_bands,
+                rows_per_band=cfg.lsh_rows,
+                # None = raw candidacy in clean_corpus; agreement >= 0 is
+                # the same rule here (every collision drops)
+                threshold=(
+                    0.0 if cfg.near_dup_threshold is None
+                    else cfg.near_dup_threshold
+                ),
+            ).localCheckpoint(eager=True)
 
     final = survivors
     if eval_df is not None:
@@ -372,7 +376,8 @@ def ingest_clean_batch(
     )
 
     if out_path is not None:
-        final.write.mode("append").parquet(out_path)
+        with _job("ingest_clean_batch: out write"):
+            final.write.mode("append").parquet(out_path)
     # record-all (every exact survivor, kept or near-dup-dropped), with
     # SIGNATURES STRICTLY BEFORE DIGESTS: a crash after the digest append
     # would make the replay's exact stage drop the whole batch as
@@ -385,6 +390,8 @@ def ingest_clean_batch(
     # append completes — convergent, with one redundant signature shard
     # (compact_signature_store absorbs it).
     if sigs is not None:
-        append_signatures(sigs, sig_path)
-    append_digests(ex, digest_path, id_col)
+        with _job("ingest_clean_batch: signature append"):
+            append_signatures(sigs, sig_path)
+    with _job("ingest_clean_batch: digest append"):
+        append_digests(ex, digest_path, id_col)
     return final

@@ -416,7 +416,13 @@ def bigram_logprob(
     broadcast hint — AQE decides, same contract as :func:`tf_idf`; only
     the 1-row N funnel is hinted. Every aggregation is map-side
     combinable.
+
+    Raises ``ValueError`` unless ``0 <= lam <= 1``: outside that range the
+    mixture is not a probability (p can exceed 1, and the score go
+    negative).
     """
+    if not 0.0 <= lam <= 1.0:
+        raise ValueError(f"bigram_logprob: lam must be in [0, 1], got {lam}")
     words = F.array_remove(F.split(F.col(text_col), " "), "")
     pairs = F.transform(
         window_starts(words, 2),

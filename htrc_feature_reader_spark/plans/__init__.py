@@ -5,5 +5,4 @@ from .manifest import (  # noqa: F401
     repair_write,
     resume_write,
     verify_output,
-    write_partitioned,
 )

@@ -73,35 +73,14 @@ def _write_manifest(path: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(path))
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_col: str,
-    snapshot_id: str = "unversioned",
-    mode: str = "overwrite",
-) -> dict:
-    """Write df partitioned by ``partition_col`` with a full manifest."""
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
-    digests = partition_digests(df, partition_col).collect()
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "partition_col": partition_col,
-        "partitions": {
-            str(r["partition"]): {"row_count": r["row_count"], "digest": str(r["digest"])}
-            for r in digests
-        },
-    }
-    _write_manifest(path, manifest)
-    return manifest
-
-
 def resume_write(
     df: DataFrame,
     path: str,
     partition_col: str,
     snapshot_id: str = "unversioned",
 ) -> dict:
-    """Write only the partitions missing from the manifest (restart path).
+    """Write only the partitions missing from the manifest: on a fresh
+    path, every partition with a full manifest; after a failure, the rest.
 
     A snapshot mismatch means the input changed since the checkpoint —
     refuse rather than silently mix lineages.

@@ -24,6 +24,7 @@ apply on top and win on a conflict, and a caller who passes
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -116,3 +117,17 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark.sparkContext)
     return spark
+
+
+@contextlib.contextmanager
+def _job(label: str):
+    """Name every Spark job the active session starts inside the block
+    ``label`` (the job description shown by the UI and kept in the status
+    store), then restore the description the caller had set, if any."""
+    sc = SparkSession.active().sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

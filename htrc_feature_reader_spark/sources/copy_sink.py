@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .store_common import empty_frame
+
 _CODEC_EXT = {"bz2": ".bz2", "gz": ".gz", None: ""}
 
 
@@ -143,7 +145,7 @@ def copy_volumes(
             .dropna().distinct()
         )
     else:
-        man = spark.createDataFrame([], "b string, src string")
+        man = empty_frame(spark, "b string, src string")
     # Names where at least one planned source differs from a recorded one.
     # The decision must be per-ROW, not per-name: if recorded source A is
     # re-copied alongside a new colliding source B, prefixing the whole

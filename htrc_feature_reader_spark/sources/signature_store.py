@@ -13,14 +13,17 @@ ingest round is:
    :func:`word_minhash_signatures` convenience covers the common case;
    any ``minhash_signatures`` output works — token-array shingles, char
    shingles, ...),
-2. WITHIN the batch: LSH candidate pairs with fused signature
-   verification (``lsh_candidate_pairs(..., verify_threshold=t)``) —
-   the larger id of each verified pair is dropped (the batch
-   ``'pairs'`` survivorship rule of :func:`..operators.pipeline.clean_corpus`),
-3. AGAINST the store: batch bands join store bands on (band, bucket);
-   collisions whose signature agreement >= ``threshold`` drop the BATCH
-   doc (history always has precedence — first arrival wins), and
-4. ALL batch signatures (kept AND dropped) are appended as a new parquet
+2. ONE (band, bucket) join decides the drops: the batch bands join the
+   batch bands unioned with the store bands (store rows carry a NULL
+   id), and a collision whose signature agreement >= ``threshold`` drops
+   the BATCH doc when the other row is
+   - a smaller batch id — the larger id of each verified within-batch
+     pair goes (the batch ``'pairs'`` survivorship rule of
+     :func:`..operators.pipeline.clean_corpus`), or
+   - a store row — history always has precedence (first arrival wins).
+   The drop ids feed one anti join, which ignores duplicate keys, so no
+   ``distinct`` (and no exchange for it) is planned, and
+3. ALL batch signatures (kept AND dropped) are appended as a new parquet
    shard — matching the one-shot rule, where a dropped document still
    suppresses its own later near-duplicates.
 
@@ -32,7 +35,7 @@ per-pair function of the two signatures, so neither depends on batch
 boundaries. With arbitrary (non-id-ordered) batches the semantics are
 arrival-order precedence instead; both are deterministic.
 
-Scale shape: the vs-store join is (band, bucket)-keyed; the batch side is
+Scale shape: the one join is (band, bucket)-keyed; the batch side is
 one ingest's bands (small), so AQE broadcasts it and the store scan stays
 shuffle-free — indexing 10^9 documents costs each ingest one map-side
 probe of the store, not a corpus shuffle. Store-side banding is a
@@ -65,7 +68,6 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     band_rows,
-    lsh_candidate_pairs,
     minhash_signatures,
     signature_agreement,
     word_shingle_ids,
@@ -125,24 +127,36 @@ def neardup_against_store(
     included). ``signatures`` is the batch's (id, sig) table keyed by
     ``id_col`` values. Returns the surviving input rows unchanged.
 
-    Lazy: two (band, bucket) joins + one anti join; AQE broadcasts the
-    batch side of the store probe when the ingest is small."""
-    # within batch: the one-shot miner itself, verification fused
-    intra = lsh_candidate_pairs(
-        signatures,
-        n_bands=n_bands,
-        rows_per_band=rows_per_band,
-        verify_threshold=threshold,
-    ).select(F.col("id_b").alias("__drop_id"))
-
-    # vs store: collide batch bands with history bands, verify agreement.
-    # History has precedence regardless of id — no id ordering filter.
-    bb = band_rows(signatures, n_bands, rows_per_band).select(
+    Lazy: ONE (band, bucket) join of the batch bands against the batch
+    bands unioned with the store bands (store rows carry a NULL id), then
+    one anti join. A collision drops the batch doc when the other row is
+    a store row or a smaller batch id and the signatures agree on at
+    least ``threshold`` of their positions. AQE broadcasts the batch side
+    when the ingest is small, so the store scan streams through the join
+    without an exchange."""
+    # a NULL batch id can neither be dropped (the anti join never matches
+    # it) nor drop anything (it would read as a store row below). Both
+    # uses of the bands share this filter, so their subplans are equal and
+    # plan as ONE exchange when the signatures are not pinned
+    bands = band_rows(signatures, n_bands, rows_per_band).where(
+        F.col("id").isNotNull()
+    )
+    bb = bands.select(
         F.col("id").alias("__bid"), F.col("sig").alias("__bsig"),
         "band", "bucket",
     )
-    sb = band_rows(store, n_bands, rows_per_band).select(
-        F.col("sig").alias("__ssig"), "band", "bucket"
+    # the other side of the one join: the batch's own bands (for the
+    # within-batch pairs) and history's bands with a NULL id — history
+    # has precedence regardless of id, so no id ordering applies to it
+    other = bands.select(
+        F.col("id").alias("__oid"), F.col("sig").alias("__osig"),
+        "band", "bucket",
+    ).unionByName(
+        band_rows(store, n_bands, rows_per_band).select(
+            F.lit(None).cast("long").alias("__oid"),
+            F.col("sig").alias("__osig"),
+            "band", "bucket",
+        )
     )
     # fail CLOSED on signature-length drift (n_hashes changed between the
     # recorded history and this batch): zip_with pads the shorter side
@@ -153,7 +167,7 @@ def neardup_against_store(
     # (and is NULL — isNull() True — on every healthy row, so the filter
     # is a no-op when configs agree).
     len_guard = F.assert_true(
-        F.size("__bsig") == F.size("__ssig"),
+        F.size("__bsig") == F.size("__osig"),
         F.lit(
             "signature length mismatch between batch and store: the "
             "recorded history was built with a different n_hashes / "
@@ -161,19 +175,18 @@ def neardup_against_store(
             "store, do not mix signature families"
         ),
     ).isNull()
-    cross = (
-        bb.join(sb, on=["band", "bucket"])
-        .filter(len_guard
-                & (signature_agreement("__bsig", "__ssig") >= threshold))
-        .select(F.col("__bid").alias("__drop_id"))
-    )
-
     # no distinct: left_anti is insensitive to duplicate keys on the
     # right side, so deduping the drop set would only add an exchange
-    drops = intra.unionByName(cross)
-    return docs.join(
-        drops.withColumnRenamed("__drop_id", id_col), on=id_col, how="left_anti"
+    drops = (
+        bb.join(other, on=["band", "bucket"])
+        .filter(
+            (F.col("__oid").isNull() | (F.col("__oid") < F.col("__bid")))
+            & len_guard
+            & (signature_agreement("__bsig", "__osig") >= threshold)
+        )
+        .select(F.col("__bid").alias(id_col))
     )
+    return docs.join(drops, on=id_col, how="left_anti")
 
 
 def append_signatures(signatures: DataFrame, path: str) -> None:

@@ -9,6 +9,20 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty DataFrame of the DDL ``schema``, planned on the JVM alone.
+    ``createDataFrame([], schema)`` parallelizes a Python list, so every
+    plan that reads it runs a PythonRDD and forks Python workers for zero
+    rows; ``range(0)`` under typed NULLs costs no Python at all."""
+    from pyspark.sql.types import DataType
+
+    return spark.range(0).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in DataType.fromDDL(schema).fields
+    ])
 
 
 def require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
@@ -40,7 +54,8 @@ def require_integral_id(df: DataFrame, id_col: str, op: str) -> None:
 
 def read_shard_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """A shard store as a DataFrame of ``schema``. A missing/empty path
-    reads as an empty relation (first ingest needs no special casing);
+    reads as an empty relation (:func:`empty_frame`; first ingest needs
+    no special casing);
     existence is probed through the Hadoop FileSystem API, NOT
     ``os.path`` — the store lives wherever Spark can write (hdfs://,
     s3a://, ...), and a driver-local ``os.path.isdir`` on such a URI is
@@ -53,7 +68,7 @@ def read_shard_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(jsc.hadoopConfiguration())
     if not fs.exists(hpath):
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     it = fs.listFiles(hpath, True)  # recursive
     has_shard = False
     while it.hasNext():
@@ -61,7 +76,7 @@ def read_shard_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
             has_shard = True
             break
     if not has_shard:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -71,6 +71,39 @@ def test_cross_batch_exact_and_near_suppression(spark, tmp_path):
     assert [r["doc_id"] for r in out2.collect()] == [12]
 
 
+def _job_descriptions_since(spark, floor):
+    """(newest job id, [description of every job newer than ``floor``])
+    read from the application status store, the way the benchmark's
+    tracer reads finished jobs."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    descs = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= floor:
+            break
+        descs.append(j.description().get() if j.description().isDefined()
+                     else None)
+    return (jobs.apply(0).jobId() if jobs.size() else floor), descs
+
+
+def test_every_batch_job_is_labelled(spark, tmp_path):
+    """Each job an ingest batch launches (pins, out write, store appends;
+    first batch against empty stores, second against recorded ones)
+    carries an ``ingest_clean_batch:`` description."""
+    docs = _corpus(spark)
+    dp, sp = str(tmp_path / "dig"), str(tmp_path / "sig")
+    floor, _ = _job_descriptions_since(spark, -1)
+    for lo in (0, 12):
+        b = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 12))
+        ingest_clean_batch(b, dp, sp, _CFG, out_path=str(tmp_path / "out"))
+    _, descs = _job_descriptions_since(spark, floor)
+    assert descs
+    assert all(d and d.startswith("ingest_clean_batch: ") for d in descs), descs
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
 def test_clusters_survivorship_rejected(spark, tmp_path):
     docs = spark.createDataFrame([(1, "x " * 30)], _SCHEMA)
     cfg = CleanConfig(survivorship="clusters")

@@ -8,7 +8,6 @@ from htrc_feature_reader_spark.plans import (
     read_manifest,
     resume_write,
     verify_output,
-    write_partitioned,
 )
 
 
@@ -23,7 +22,7 @@ def df(spark):
 
 def test_write_and_verify(spark, df, tmp_path):
     path = str(tmp_path / "out")
-    manifest = write_partitioned(df, path, "bucket", snapshot_id="snap1")
+    manifest = resume_write(df, path, "bucket", snapshot_id="snap1")
     assert len(manifest["partitions"]) == 10
     assert all(p["row_count"] == 100 for p in manifest["partitions"].values())
     assert verify_output(spark, path) == []
@@ -35,7 +34,7 @@ def test_resume_completes_missing_partitions(spark, df, tmp_path):
     path = str(tmp_path / "out")
     # simulate a job that died after 6 of 10 partitions
     partial = df.filter(F.col("bucket").isin([str(i) for i in range(6)]))
-    write_partitioned(partial, path, "bucket", snapshot_id="snap1")
+    resume_write(partial, path, "bucket", snapshot_id="snap1")
     assert len(read_manifest(path)["partitions"]) == 6
 
     manifest = resume_write(df, path, "bucket", snapshot_id="snap1")
@@ -56,7 +55,7 @@ def test_resume_idempotent_after_crash_window(spark, df, tmp_path):
     overwrite), not appended to."""
     path = str(tmp_path / "out")
     partial = df.filter(F.col("bucket").isin([str(i) for i in range(6)]))
-    write_partitioned(partial, path, "bucket", snapshot_id="snap1")
+    resume_write(partial, path, "bucket", snapshot_id="snap1")
     # simulate the crash window: partition 6's data landed, manifest didn't
     df.filter(F.col("bucket") == "6").write.mode("append").partitionBy(
         "bucket").parquet(path)
@@ -70,14 +69,14 @@ def test_resume_idempotent_after_crash_window(spark, df, tmp_path):
 
 def test_resume_refuses_snapshot_mismatch(spark, df, tmp_path):
     path = str(tmp_path / "out")
-    write_partitioned(df.limit(100), path, "bucket", snapshot_id="snap1")
+    resume_write(df.limit(100), path, "bucket", snapshot_id="snap1")
     with pytest.raises(ValueError, match="snapshot"):
         resume_write(df, path, "bucket", snapshot_id="snap2")
 
 
 def test_verify_detects_corruption(spark, df, tmp_path):
     path = str(tmp_path / "out")
-    write_partitioned(df, path, "bucket", snapshot_id="snap1")
+    resume_write(df, path, "bucket", snapshot_id="snap1")
     # corrupt: delete one partition directory
     import shutil
 
@@ -106,7 +105,7 @@ def test_repair_write_heals_out_of_band_damage(spark, df, tmp_path):
     from htrc_feature_reader_spark.plans import repair_write
 
     path = str(tmp_path / "out")
-    write_partitioned(df, path, "bucket", snapshot_id="snap1")
+    resume_write(df, path, "bucket", snapshot_id="snap1")
     shutil.rmtree(f"{path}/bucket=3")  # out-of-band loss
     shutil.rmtree(f"{path}/bucket=7")
     # resume alone does NOT heal: manifest says both are done
@@ -126,7 +125,7 @@ def test_repair_write_heals_total_data_loss(spark, df, tmp_path):
     from htrc_feature_reader_spark.plans import repair_write
 
     path = str(tmp_path / "out")
-    write_partitioned(df, path, "bucket", snapshot_id="snap1")
+    resume_write(df, path, "bucket", snapshot_id="snap1")
     for d in list(__import__("os").listdir(path)):
         if d.startswith("bucket="):
             shutil.rmtree(f"{path}/{d}")
@@ -146,7 +145,7 @@ def test_verify_with_type_inferrable_partition_values(spark, tmp_path):
         F.lpad((F.col("id") % 4).cast("string"), 3, "0").alias("bucket"),
         F.col("id").alias("v"),
     )
-    write_partitioned(df, path, "bucket", snapshot_id="snap1")
+    resume_write(df, path, "bucket", snapshot_id="snap1")
     assert sorted(read_manifest(path)["partitions"]) == [
         "000", "001", "002", "003"]
     assert verify_output(spark, path) == []

@@ -347,3 +347,93 @@ def test_pit_features_share_one_doc_exchange(spark, tmp_path):
     assert len(re.findall(r"Exchange hashpartitioning\(doc_id#\d+, \d+\)", plan)) == 1, plan
     assert ops.count("Sort") == 4, plan
     assert ops.count("Window") == 6, plan
+
+
+# ------------------------------------------------ incremental store probes
+
+_SIG = "id long, sig array<long>"
+
+
+def test_empty_shard_store_plans_no_python(spark, tmp_path):
+    """A missing or shard-less store reads as an empty relation planned on
+    the JVM: no ExistingRDD scan, so no PythonRDD and no Python worker for
+    zero rows on a first ingest."""
+    from htrc_feature_reader_spark.sources.store_common import read_shard_store
+
+    (tmp_path / "no_shards").mkdir()
+    for p in (tmp_path / "missing", tmp_path / "no_shards"):
+        st = read_shard_store(spark, str(p), _SIG)
+        assert st.schema.simpleString() == "struct<id:bigint,sig:array<bigint>>"
+        plan = _formatted(st)
+        for op in ("ExistingRDD", "PythonRDD", "BatchEvalPython"):
+            assert op not in plan, f"{op} in plan:\n{plan}"
+
+
+def test_neardup_one_band_join_no_distinct(spark):
+    """Within-batch and vs-store near-dups are decided by ONE (band,
+    bucket) join, and the drop ids feed the anti join as they are: no
+    distinct aggregate (the anti join ignores duplicate keys)."""
+    from htrc_feature_reader_spark.sources.signature_store import (
+        neardup_against_store)
+
+    docs = spark.createDataFrame([(1, "t"), (2, "t")], "doc_id long, text string")
+    sigs = spark.createDataFrame(
+        [(1, [1, 2, 3, 4, 5, 6, 7, 8]), (2, [1, 2, 3, 4, 5, 6, 7, 9])], _SIG)
+    store = spark.createDataFrame([(9, [1, 2, 0, 0, 0, 0, 0, 0])], _SIG)
+    plan = _formatted(neardup_against_store(docs, store, sigs, threshold=0.25))
+    assert len(re.findall(r"Left keys \[2\]: \[band#\d+, bucket#\d+\]", plan)) == 1, plan
+    assert len(re.findall(r"Join type: ", plan)) == 2, plan  # band join + anti join
+    assert "HashAggregate" not in plan, plan
+
+
+def _ancestors(lines, i):
+    """The plan-tree lines above line ``i``, nearest first."""
+    def depth(ln):
+        return len(re.match(r"[\s:+\-]*", ln).group(0))
+
+    out, d = [], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            d = depth(ln)
+            out.append(ln)
+    return out
+
+
+def test_store_scan_streams_through_batch_broadcast(spark, tmp_path):
+    """The scale claim of the signature store: with a small batch and a
+    non-empty store, the batch bands are broadcast (BuildLeft) and the
+    store scan sits on the streamed side of that BroadcastHashJoin with no
+    exchange between them, so the store is probed, never shuffled. The
+    batch signatures are pinned from a parquet-rooted plan, as both ingest
+    faces pin them, so their size is known when the join is planned."""
+    import random
+
+    from htrc_feature_reader_spark.sources.signature_store import (
+        ingest_batch_near_dup, neardup_against_store, read_signature_store,
+        word_minhash_signatures)
+
+    rnd = random.Random(3)
+    vocab = [f"w{i}" for i in range(30)]
+    rows = [(i, " ".join(rnd.choice(vocab) for _ in range(20))) for i in range(40)]
+    rows.append((40, rows[5][1]))  # a batch copy of a stored doc
+    d = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(d)
+    docs = spark.read.parquet(d)
+    store = str(tmp_path / "store")
+    hist = docs.where("doc_id < 30")
+    ingest_batch_near_dup(hist, store, word_minhash_signatures(hist), threshold=0.5)
+
+    batch = docs.where("doc_id >= 30")
+    sigs = word_minhash_signatures(batch).localCheckpoint(eager=True)
+    out = neardup_against_store(
+        batch, read_signature_store(spark, store), sigs, threshold=0.5)
+    assert 40 not in {r["doc_id"] for r in out.collect()}
+    plan = [ln for ln in _final_plan(out).splitlines() if ln.strip()]
+    scan = [i for i, ln in enumerate(plan) if "FileScan parquet" in ln and "store]" in ln]
+    assert len(scan) == 1, "\n".join(plan)
+    up = _ancestors(plan, scan[0])
+    names = [re.match(r"[\s:+\-]*(?:\*\(\d+\) )?(\w+)", ln).group(1) for ln in up]
+    join = next(k for k, n in enumerate(names) if n.endswith("Join"))
+    assert names[join] == "BroadcastHashJoin", "\n".join(plan)
+    assert re.search(r"\[band#\d+, bucket#\d+\], .*BuildLeft", up[join]), up[join]
+    assert not any("Exchange" in n or "QueryStage" in n for n in names[:join]), names

@@ -252,6 +252,22 @@ def test_bigram_logprob_short_doc_null_bits(spark):
     assert rows[3]["n_trans"] == 1
 
 
+@pytest.mark.parametrize("lam", [1.5, -0.1])
+def test_bigram_logprob_rejects_lam_outside_unit_interval(spark, lam):
+    docs = spark.createDataFrame([(1, "a b a c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="lam must be in"):
+        bigram_logprob(docs, lam=lam)
+
+
+@pytest.mark.parametrize("lam", [0.0, 1.0])
+def test_bigram_logprob_lam_bounds_valid(spark, lam):
+    docs = spark.createDataFrame(
+        [(1, "a b a c"), (2, "a b a b")], "doc_id long, text string"
+    )
+    rows = bigram_logprob(docs, lam=lam).collect()
+    assert all(r["bits_per_trans"] >= 0 for r in rows)
+
+
 # ---------------------------------------------------------------------------
 # token_drift
 

@@ -264,22 +264,30 @@ def test_store_probe_plan_shape(spark, tmp_path):
     """The scale claim frozen as a plan test: the vs-store probe carries
     NO forced broadcast (the store is corpus-sized at 100 TB — a hint
     would OOM executors), and at runtime AQE broadcasts the SMALL batch
-    side so the store scan joins without an exchange of its own rows."""
+    side so the store scan joins without an exchange of its own rows.
+
+    The batch holds one copy of a stored doc: with nothing to drop, AQE
+    prunes the whole probe from the final plan once the drop stage comes
+    back empty, and there would be no join left to inspect."""
     p = str(tmp_path / "store")
     hist = _corpus(spark, n=24)
     ingest_batch_near_dup(
         hist, p, word_minhash_signatures(hist), threshold=_T)
 
+    stored = hist.where("doc_id = 1").first()["text"]
     batch = spark.createDataFrame(
-        [(100, "a few fresh words here")], _SCHEMA)
+        [(100, "a few fresh words here"), (102, stored)], _SCHEMA)
     out = neardup_against_store(
         batch, read_signature_store(spark, p),
         word_minhash_signatures(batch), threshold=_T)
     analyzed = out._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed
-    out.collect()
+    assert [r["doc_id"] for r in out.collect()] == [100]
     final = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in final
+    band_join = [ln for ln in final.split("== Initial Plan ==")[0].splitlines()
+                 if "BroadcastHashJoin [band#" in ln]
+    assert len(band_join) == 1 and "BuildLeft" in band_join[0], final
 
     # the probe join in ISOLATION, batch left / store right, with the
     # broadcast threshold squeezed between the two sides' sizes to
