@@ -2766,7 +2766,7 @@ def _dup_spans_sql() -> str:
 
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup-style within-cluster embedding dedup (operators/
-    similarity.py:semantic_dedup, mode='dominated'): per label cluster,
+    similarity.py:semantic_dedup): per label cluster,
     a vector is a duplicate iff a smaller-id vector in the same cluster
     has round(cos, 6) >= 0.3 (the synthetic embeddings' within-label
     cosine tops out near 0.47, so 0.3 yields a mixed drop set). The
@@ -2896,8 +2896,8 @@ _GQ_Q = 0.35
 
 
 def q_group_quantile(spark, sf_dir):
-    """Exact per-group percentile_disc (operators/stats.py:group_quantile,
-    exact=True): smallest n_chars whose within-source cume_dist reaches q
+    """Exact per-group percentile_disc (operators/stats.py:group_quantile):
+    smallest n_chars whose within-source cume_dist reaches q
     — one exchange + in-group sort of the (group, value) projection only.
     DuckDB's quantile_disc reproduces the rank definition exactly (no
     interpolation, so no float drift)."""

@@ -16,12 +16,19 @@ per round (count + order-insensitive edge checksum) and truncates lineage
 with ``localCheckpoint`` — the same documented driver-coordination
 contract as ``ivf.ivf_index``'s Lloyd iterations. Rounds shuffle only the
 current edge set (bounded by the pair-miner output, never the corpus).
+Every job runs under a ``connected_components:`` job description.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import _job
+
+# star rounds before giving up; the iteration converges in O(log^2 n)
+# rounds, a handful in practice
+_MAX_ROUNDS = 30
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -71,13 +78,9 @@ def _edges_equal(e2: DataFrame, e: DataFrame) -> bool:
     return e2.join(e, on=["u", "v"], how="left_anti").limit(1).count() == 0
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """(id, component) for every id appearing in ``pairs``; ``component``
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(id, component) for every id appearing in the ``(id_a, id_b)``
+    edges of ``pairs`` (the pair miners' output shape); ``component``
     is the minimum id of its connected component (deterministic under any
     partitioning). Ids absent from every pair are not emitted — callers
     treat them as their own singleton components.
@@ -90,26 +93,28 @@ def connected_components(
     re-run 4^k times by round k. With the barrier, mining runs ONCE and
     each round touches only the current (pair-bounded) edge set.
     """
-    e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sig = _edge_sig(e)
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        sig2 = _edge_sig(e2)
-        # signature match is a cheap candidate test; confirm with the
-        # exact anti-join before declaring the star forest reached
-        if sig2 == sig and _edges_equal(e2, e):
-            e = e2
+    with _job("connected_components: pin edges"):
+        e = (
+            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        sig = _edge_sig(e)
+    for _ in range(_MAX_ROUNDS):
+        with _job("connected_components: star round"):
+            e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        with _job("connected_components: convergence check"):
+            sig2 = _edge_sig(e2)
+            # signature match is a cheap candidate test; confirm with the
+            # exact anti-join before declaring the star forest reached
+            done = sig2 == sig and _edges_equal(e2, e)
+        e, sig = e2, sig2
+        if done:
             break  # star forest reached: every edge is (member, root)
-        e = e2
-        sig = sig2
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds"
         )
     members = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("id"), F.col("v").alias("component"))

@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .hashing import (
-    BASE,
-    MOD,
     affine_coeffs,
     affine_hash,
     compose_ngrams,
@@ -66,8 +64,6 @@ def word_shingle_ids(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    base: int = BASE,
-    mod: int = MOD,
 ) -> DataFrame:
     """Distinct (id, shingle_id) pairs with shingle_id the polynomial
     rolling hash of the word n-gram string — bit-identical to
@@ -84,8 +80,8 @@ def word_shingle_ids(
     key. Callers feeding a NON-unique id (e.g. a constant) get per-ROW
     distinctness only and must dedup downstream (``decontaminate`` does).
     """
-    staged = stage_word_hashes(df, text_col, id_col, base=base, mod=mod)
-    ids = compose_ngrams(n, base, mod)
+    staged = stage_word_hashes(df, text_col, id_col)
+    ids = compose_ngrams(n)
     return staged.select(
         "id", F.explode(F.array_distinct(ids)).alias("shingle_id")
     )
@@ -178,20 +174,6 @@ def minhash_signatures(
     )
 
 
-def _cap_buckets(bands: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
-    """Drop band buckets holding more than ``max_bucket`` members before a
-    banded self-join. A bucket of size B emits B^2 join rows, so one
-    degenerate bucket (empty-doc signatures, templated boilerplate that
-    survived the stop-shingle cap) can dominate the whole stage; capping
-    trades recall ONLY on members of such buckets for a hard quadratic
-    bound — the standard skew guard for web-scale LSH. One extra map-side-
-    combinable aggregate on the band table (already shuffled for the join).
-    """
-    sizes = bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bsz"))
-    ok = sizes.filter(F.col("__bsz") <= max_bucket).select(*keys)
-    return bands.join(ok, on=keys, how="left_semi")
-
-
 def band_rows(
     signatures: DataFrame, n_bands: int = 4, rows_per_band: int = 2
 ) -> DataFrame:
@@ -244,16 +226,15 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     n_bands: int = 4,
     rows_per_band: int = 2,
-    max_bucket: int | None = None,
     verify_threshold: float | None = None,
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band bucket.
 
     Pairs are (id_a < id_b), distinct. The self-join is on (band, bucket) —
     cost is sum of bucket sizes squared, not corpus squared; stop-shingle
-    filtering upstream keeps buckets small. ``max_bucket`` additionally
-    hard-bounds any single bucket's quadratic cost (see ``_cap_buckets``);
-    None (default) keeps exact banding semantics.
+    filtering upstream (:func:`stop_capped_shingle_ids`) is what keeps
+    buckets small. Banding is exact: every bucket, however large, pairs
+    all of its members.
 
     ``verify_threshold`` FUSES signature verification into the miner: the
     self-join already carries both sides' full signatures, so the
@@ -262,8 +243,6 @@ def lsh_candidate_pairs(
     and no re-evaluation of the signature subplan.
     """
     bands = band_rows(signatures, n_bands, rows_per_band)
-    if max_bucket is not None:
-        bands = _cap_buckets(bands, ["band", "bucket"], max_bucket)
     carry_a = ["sig"] if verify_threshold is not None else []
     a = bands.select(F.col("id").alias("id_a"),
                      *[F.col(c).alias("__sig_a") for c in carry_a],
@@ -361,7 +340,6 @@ def simhash_candidate_pairs(
     max_hamming: int | None = None,
     id_col: str = "id",
     sim_col: str = "simhash",
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pair mining: bit-slice each fingerprint into
     ``n_bands`` contiguous bands; candidate pairs share >= 1 identical
@@ -378,12 +356,10 @@ def simhash_candidate_pairs(
     defaults (bits=48, n_bands=4 -> 12-bit bands) follow that rule for
     million-doc corpora; ``simhash`` supports bits up to 62 in one int64
     fingerprint. The 16-bit configs in tests/driver queries are
-    oracle-scale, not corpus-scale. ``max_bucket`` hard-bounds any one
-    band slice's quadratic cost (degenerate fingerprints — e.g. empty or
-    templated docs — all land in one slice): oversized buckets are
-    dropped before the self-join, costing recall only for their members.
-    With max_bucket set, the pigeonhole recall guarantee holds only for
-    pairs outside dropped buckets.
+    oracle-scale, not corpus-scale. Degenerate fingerprints (e.g. empty
+    or templated docs) all land in one slice and pair quadratically: no
+    bucket is dropped, so the pigeonhole recall guarantee holds for every
+    pair.
     """
     if bits % n_bands:
         raise ValueError("n_bands must divide bits evenly")
@@ -407,8 +383,6 @@ def simhash_candidate_pairs(
             ])
         ).alias("__band", "__slice"),
     )
-    if max_bucket is not None:
-        banded = _cap_buckets(banded, ["__band", "__slice"], max_bucket)
     a = banded.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa"),
                       "__band", "__slice")
     b = banded.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb"),
@@ -430,7 +404,6 @@ def decontaminate(
     id_col: str = "doc_id",
     eval_text_col: str | None = None,
     n: int = 13,
-    broadcast_eval: bool = True,
     return_flags: bool = False,
     flag_col: str = "contaminated",
 ) -> DataFrame:
@@ -440,12 +413,11 @@ def decontaminate(
 
     Both sides shingle through :func:`word_shingle_ids` (one char pass
     per doc, integer ids, no shingle strings materialized), so the
-    overlap test is one semi-join on hashed ids. ``broadcast_eval=True``
-    is safe BY CONSTRUCTION here — unlike corpus-sized tables, the
-    distinct n-gram set of an eval suite is bounded by the benchmark's
-    own size (KB-MB even for large suites), the same bounded-side rule as
-    ``vocab.remove_stopwords``; pass False for eval sets that are
-    themselves corpus-scale and let AQE pick the strategy.
+    overlap test is one semi-join on hashed ids. The eval side is always
+    broadcast, which is safe BY CONSTRUCTION here — unlike corpus-sized
+    tables, the distinct n-gram set of an eval suite is bounded by the
+    benchmark's own size (KB-MB even for large suites), the same
+    bounded-side rule as ``vocab.remove_stopwords``.
 
     Documents shorter than ``n`` words produce no shingles and are never
     flagged (exactly the reference rule: an overlap needs a full n-gram).
@@ -463,13 +435,11 @@ def decontaminate(
         )
     eval_text_col = eval_text_col or text_col
     ev = eval_df.select(F.lit(0).alias("__eid"), F.col(eval_text_col).alias("__t"))
-    ev_sh = (
+    ev_sh = F.broadcast(
         word_shingle_ids(ev, "__t", "__eid", n=n)
         .select("shingle_id")
         .distinct()
     )
-    if broadcast_eval:
-        ev_sh = F.broadcast(ev_sh)
     tr_sh = word_shingle_ids(docs, text_col, id_col, n=n)
     contaminated = (
         tr_sh.join(ev_sh, on="shingle_id", how="left_semi")
@@ -488,11 +458,10 @@ def boilerplate_fraction(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     min_df: int = 5,
 ) -> DataFrame:
     """Cross-document boilerplate signal: for each doc, the fraction of
-    its distinct word ``n``-grams that appear in at least ``min_df``
+    its distinct word 3-grams that appear in at least ``min_df``
     documents corpus-wide (headers, footers, license blurbs, navigation
     chrome — the template text that within-doc repetition signals
     (:func:`~.text.repetition_features`) cannot see because it repeats
@@ -500,7 +469,7 @@ def boilerplate_fraction(
 
     Appends three columns: ``n_shingles`` (distinct n-grams in the doc),
     ``n_boiler`` (of those, how many are corpus-boilerplate), and
-    ``boilerplate_frac`` (their ratio; 0.0 for docs shorter than ``n``
+    ``boilerplate_frac`` (their ratio; 0.0 for docs shorter than 3
     words). Filter on ``boilerplate_frac`` to drop template-dominated
     docs, the usual cleaning rule.
 
@@ -514,11 +483,9 @@ def boilerplate_fraction(
     aggregation a plain count and makes the signal insensitive to
     within-doc repetition, which is measured separately.
     """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
     if min_df < 2:
         raise ValueError(f"min_df must be >= 2 (1 flags everything), got {min_df}")
-    pairs = word_shingle_ids(docs, text_col, id_col, n=n)
+    pairs = word_shingle_ids(docs, text_col, id_col)
     heavy = (
         pairs.groupBy("shingle_id")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -551,10 +518,9 @@ def ngram_novelty(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """Per-document n-gram novelty: of the document's DISTINCT word
-    ``n``-gram shingles, the fraction that occur in NO other document —
+    3-gram shingles, the fraction that occur in NO other document —
     the complement of :func:`boilerplate_fraction` at ``min_df=2``.
     Novelty near 1.0 means the document contributes genuinely new text;
     near 0.0 means everything in it already exists elsewhere (a fuzzy-
@@ -562,7 +528,7 @@ def ngram_novelty(
     defeat exact dedup).
 
     Returns ``(id_col, n_shingles, n_novel, novelty_frac)``; documents
-    shorter than ``n`` words have no shingles and are absent (the same
+    shorter than 3 words have no shingles and are absent (the same
     contract as the LSH miner they share shingles with).
 
     Scale: the document-frequency aggregation and the join back both key
@@ -571,9 +537,7 @@ def ngram_novelty(
     per-document fold partial-aggregates map-side. No forced broadcasts —
     the shingle space is unbounded.
     """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    pairs = word_shingle_ids(docs, text_col, id_col, n=n)
+    pairs = word_shingle_ids(docs, text_col, id_col)
     dfreq = pairs.groupBy("shingle_id").agg(F.count(F.lit(1)).alias("__df"))
     return (
         pairs.join(dfreq, on="shingle_id")
@@ -707,14 +671,12 @@ def token_shingle_ids(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     n: int = 5,
-    base: int = BASE,
-    mod: int = MOD,
 ) -> DataFrame:
     """Distinct (id, shingle_id) pairs over INT TOKEN ARRAYS — the
     pre-tokenized-sequence analog of :func:`word_shingle_ids` (the
     north-rule input ships ``tokens array<int>``, no text to re-split).
     shingle_id is the polynomial rolling hash of the n consecutive token
-    values, ``fold (h*base + pmod(tok, mod)) % mod`` — the same hash
+    values, ``fold (h*BASE + pmod(tok, MOD)) % MOD`` — the same hash
     family as the word path, so every downstream consumer
     (:func:`minhash_signatures`, :func:`lsh_candidate_pairs`,
     :func:`boilerplate_fraction`-style counts) composes unchanged.
@@ -733,7 +695,7 @@ def token_shingle_ids(
     from ..functions import ensure_min_parallelism
 
     df = ensure_min_parallelism(df)  # CPU-bound folds: spread tiny inputs
-    ids = token_window_ids(F.col(tokens_col), n, base, mod)
+    ids = token_window_ids(F.col(tokens_col), n)
     # row-local distinct, same contract as word_shingle_ids
     return df.select(
         F.col(id_col).alias("id"),

@@ -77,22 +77,23 @@ _SPACE = 32  # ascii code of the joining space
 
 # ------------------------------------------------------- character fold
 
-def rolling_hash(text, base: int = BASE, mod: int = MOD) -> Column:
-    """Polynomial rolling hash over a string's character codes."""
+def rolling_hash(text, base: int = BASE) -> Column:
+    """Polynomial rolling hash over a string's character codes; ``base``
+    picks the family (``BASE`` or the dual ids' ``BASE2``)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.aggregate(
         F.split(c, ""),
         F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
+        lambda acc, ch: (acc * base + F.ascii(ch)) % MOD,
     )
 
 
-def rolling_hash_sql(col: str, mod: int = MOD, base: int = BASE) -> str:
+def rolling_hash_sql(col: str, base: int = BASE) -> str:
     """DuckDB replay of :func:`rolling_hash` over a SQL expression."""
     return (
         "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform("
         f"string_split({col}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-        f"(a, b) -> (a * {int(base)} + b) % {int(mod)})"
+        f"(a, b) -> (a * {int(base)} + b) % {MOD})"
     )
 
 
@@ -136,10 +137,10 @@ def _lo(acc):  # the base^len limb
     return acc.bitwiseAND(F.lit(MOD).cast("long"))
 
 
-def _packed_step(base: int, mod: int):
+def _packed_step(base: int):
     def step(acc, ch):
-        h = (_hi(acc) * base + F.ascii(ch)) % mod
-        return F.shiftleft(h, 31) + (_lo(acc) * base) % mod
+        h = (_hi(acc) * base + F.ascii(ch)) % MOD
+        return F.shiftleft(h, 31) + (_lo(acc) * base) % MOD
 
     return step
 
@@ -149,13 +150,11 @@ def stage_word_hashes(
     text_col: str,
     id_col: str,
     drop_empty_words: bool = False,
-    base: int = BASE,
-    mod: int = MOD,
     dual: bool = False,
 ) -> DataFrame:
     """The staged frame ``(id, __wh)``: one row per document, ``__wh`` the
     packed per-word fold of ``text_col`` split on single spaces, as its
-    own projection (the staging rule). ``dual`` folds the ``base`` and
+    own projection (the staging rule). ``dual`` folds the ``BASE`` and
     ``BASE2`` families into the struct limbs ``hp`` and ``gq``."""
     df = ensure_min_parallelism(df)  # CPU-bound folds: spread tiny inputs
     words = F.split(F.col(text_col), " ")
@@ -166,23 +165,23 @@ def stage_word_hashes(
         return F.split(w, "") if drop_empty_words else F.array_remove(F.split(w, ""), "")
 
     def fold(w, b):
-        return F.aggregate(chars(w), F.lit(1).cast("long"), _packed_step(b, mod))
+        return F.aggregate(chars(w), F.lit(1).cast("long"), _packed_step(b))
 
     if dual:
         def word(w):
-            return F.struct(fold(w, base).alias("hp"), fold(w, BASE2).alias("gq"))
+            return F.struct(fold(w, BASE).alias("hp"), fold(w, BASE2).alias("gq"))
     else:
         def word(w):
-            return fold(w, base)
+            return fold(w, BASE)
 
     return df.select(F.col(id_col).alias("id"), F.transform(words, word).alias("__wh"))
 
 
-def compose_ngrams(n: int, base: int = BASE, mod: int = MOD, dual: bool = False) -> Column:
+def compose_ngrams(n: int, dual: bool = False) -> Column:
     """The positional word-n-gram id array over a staged frame's ``__wh``
     (element i hashes words ``i..i+n-1``; duplicates kept)."""
     wha = F.col("__wh")
-    limbs = [("hp", base), ("gq", BASE2)] if dual else [(None, base)]
+    limbs = [("hp", BASE), ("gq", BASE2)] if dual else [(None, BASE)]
 
     def gram(word):  # word(j) -> packed fold of the gram's j-th word
         hs = []
@@ -192,8 +191,8 @@ def compose_ngrams(n: int, base: int = BASE, mod: int = MOD, dual: bool = False)
 
             h = _hi(limb(0))
             for j in range(1, n):
-                h = (h * b + _SPACE) % mod
-                h = (h * _lo(limb(j)) + _hi(limb(j))) % mod
+                h = (h * b + _SPACE) % MOD
+                h = (h * _lo(limb(j)) + _hi(limb(j))) % MOD
             hs.append(h)
         # h < 2^31 - 1, so h * 2^31 + g < 2^62 fits int64
         return hs[0] * F.lit(1 << 31).cast("long") + hs[1] if dual else hs[0]
@@ -209,27 +208,27 @@ def compose_ngrams(n: int, base: int = BASE, mod: int = MOD, dual: bool = False)
 
 # ------------------------------------------------ int-token window fold
 
-def token_window_ids(toks, n: int, base: int = BASE, mod: int = MOD) -> Column:
+def token_window_ids(toks, n: int) -> Column:
     """The positional id array of every length-``n`` window of an int
     token array. ``pmod`` keeps negative token ids on the ring."""
 
     def window(i):
         h = F.lit(0).cast("long")
         for j in range(n):
-            t = F.pmod(F.element_at(toks, i + 1 + j).cast("long"), F.lit(mod))
-            h = (h * base + t) % mod
+            t = F.pmod(F.element_at(toks, i + 1 + j).cast("long"), F.lit(MOD))
+            h = (h * BASE + t) % MOD
         return h
 
     return F.transform(window_starts(toks, n), window)
 
 
-def token_window_ids_sql(lst: str, n: int, base: int = BASE, mod: int = MOD) -> str:
+def token_window_ids_sql(lst: str, n: int) -> str:
     """DuckDB replay of :func:`token_window_ids` over a list expression."""
-    m = int(mod)
+    m = MOD
     return (
         f"list_transform({window_starts_sql(lst, n)}, i -> list_reduce("
         f"list_prepend(CAST(0 AS BIGINT), {lst}[i+1:i+{n}]), "
-        f"(a, b) -> (a * {int(base)} + (CAST(b AS BIGINT) % {m} + {m}) % {m}) % {m}))"
+        f"(a, b) -> (a * {BASE} + (CAST(b AS BIGINT) % {m} + {m}) % {m}) % {m}))"
     )
 
 

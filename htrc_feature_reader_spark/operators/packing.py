@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _job
 from .hashing import MOD, key_hash, key_hash_sql, mix, mix_sql
 
 
@@ -123,19 +124,21 @@ def pack_sequences(
     )
     # step-2 barrier: pin the sampled range partitioning (see docstring
     # for the localCheckpoint-vs-reliable-checkpoint durability tradeoff)
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        base = base.checkpoint(eager=True)
-    else:
-        base = base.localCheckpoint(eager=True)
+    with _job("pack_sequences: barrier"):
+        if checkpoint_dir is not None:
+            df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+            base = base.checkpoint(eager=True)
+        else:
+            base = base.localCheckpoint(eager=True)
 
     # step 3a: per-partition totals -> driver exclusive prefix (one row per
     # partition — thousands, never corpus-sized)
-    totals = (
-        base.groupBy(F.spark_partition_id().alias("__pid"))
-        .agg(F.sum("__n").alias("__tot"))
-        .collect()
-    )
+    with _job("pack_sequences: offsets"):
+        totals = (
+            base.groupBy(F.spark_partition_id().alias("__pid"))
+            .agg(F.sum("__n").alias("__tot"))
+            .collect()
+        )
     offsets, acc = {}, 0
     for r in sorted(totals, key=lambda r: r["__pid"]):
         offsets[r["__pid"]] = acc
@@ -381,7 +384,6 @@ def pack_documents_padded(
     doc_col: str = "doc_id",
     pad_token: int | None = 0,
     eos_token: int | None = None,
-    min_tokens: int = 1,
 ) -> DataFrame:
     """Document-boundary-respecting packing: split each document's token
     array into ``ceil(n / seq_len)`` fixed-length chunks and pad the last
@@ -399,9 +401,7 @@ def pack_documents_padded(
 
     ``eos_token`` is appended to the document before chunking when set.
     ``pad_token=None`` leaves the final chunk ragged (for loaders that
-    pad on collate). Chunks with fewer than ``min_tokens`` REAL tokens
-    are dropped (default 1 — i.e. only empty/NULL docs vanish; raise it
-    to discard uninformative tails).
+    pad on collate). Empty and NULL documents yield no chunk.
 
     Returns ``(doc_col, chunk_id, tokens, n_tok, n_pad)``: ``chunk_id``
     is the 0-based within-document index, ``n_tok`` the real-token count,
@@ -409,8 +409,6 @@ def pack_documents_padded(
     """
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    if min_tokens < 1:
-        raise ValueError(f"min_tokens must be >= 1, got {min_tokens}")
     elem_t = df.schema[tokens_col].dataType.elementType.simpleString()
     toks = F.coalesce(F.col(tokens_col), F.array().cast(f"array<{elem_t}>"))
     if eos_token is not None:
@@ -445,7 +443,7 @@ def pack_documents_padded(
             F.col("c.frag").alias("__frag"),
         )
         .withColumn("n_tok", F.size("__frag"))
-        .filter(F.col("n_tok") >= int(min_tokens))
+        .filter(F.col("n_tok") >= 1)
     )
     if pad_token is None:
         return out.select(
@@ -664,7 +662,6 @@ def shuffle_sequences(
     key_col: str = "seq_id",
     seed: int = 29,
     out_col: str = "shuffle_key",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic global pseudo-random reordering for training-shard
     writes: attach ``out_col`` (the key's decision hash) and lay the data
@@ -690,11 +687,7 @@ def shuffle_sequences(
     h = mix(key_hash(df, key_col, seed), seed)
     out = df.withColumn(out_col, h)
     parts = [F.col(out_col), F.col(key_col)]
-    if num_partitions is None:
-        out = out.repartitionByRange(*parts)
-    else:
-        out = out.repartitionByRange(int(num_partitions), *parts)
-    return out.sortWithinPartitions(*parts)
+    return out.repartitionByRange(*parts).sortWithinPartitions(*parts)
 
 
 def length_bucket(

@@ -14,11 +14,9 @@ Scale shape:
   capped, never corpus²); candidate pairs are VERIFIED against the
   MinHash-estimated Jaccard before any document is dropped (raw LSH
   candidacy has a ~15%+ false-positive floor at low similarity — bare
-  candidates are not duplicates), then survivorship is either keep-min
-  per verified pair (lazy default) or keep-min per connected COMPONENT
-  of the verified pair graph (``survivorship='clusters'`` — cluster-
-  correct on chains, at the cost of the bounded iterative rounds in
-  ``operators/components.py``);
+  candidates are not duplicates), then the larger id of every verified
+  pair goes (keep-min per pair, fully lazy; the same rule the incremental
+  signature store applies per batch);
 - the final write goes through ``plans.resume_write`` when the caller
   wants lineage + resumability.
 """
@@ -30,7 +28,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import connected_components
 from .dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
@@ -66,11 +63,6 @@ class CleanConfig:
     # positions) for a candidate pair to count as a duplicate; None skips
     # verification (raw LSH candidacy — data loss at scale, see module doc)
     near_dup_threshold: float | None = 0.5
-    # 'pairs': drop the larger id of each verified pair (fully lazy);
-    # 'clusters': connected components over the verified pair graph, keep
-    # min id per component (cluster-correct on chains; runs the bounded
-    # iterative rounds of operators/components.py when the plan is built)
-    survivorship: str = "pairs"
     # word n-gram length for the optional eval-set decontamination stage
     # (armed by clean_corpus(eval_df=...)); 13 is the standard rule
     decontaminate_n: int = 13
@@ -122,9 +114,7 @@ def clean_corpus(
 ) -> DataFrame:
     """Clean ``docs`` for training: returns surviving rows with quality
     columns, ``lang`` (detected or stored), and whitespace/BPE-ish token
-    counts attached. Fully lazy — one plan, no driver actions — except
-    ``survivorship='clusters'``, which runs the bounded connected-
-    components rounds (documented iterative operator) while building.
+    counts attached. Fully lazy — one plan, no driver actions.
 
     ``eval_df`` arms benchmark decontamination as the final stage: any
     survivor sharing a ``decontaminate_n``-gram (CleanConfig, default 13)
@@ -165,18 +155,10 @@ def clean_corpus(
             sigs, n_bands=cfg.lsh_bands, rows_per_band=cfg.lsh_rows,
             verify_threshold=cfg.near_dup_threshold,
         )
-        if cfg.survivorship == "clusters":
-            comp = connected_components(pairs)
-            drop = comp.filter(F.col("id") != F.col("component")).select(
-                F.col("id").alias(id_col)
-            )
-        elif cfg.survivorship == "pairs":
-            # keep-min rule: the larger id of every verified pair goes.
-            # id_b is the larger by construction (id_a < id_b), so dropping
-            # the distinct id_b set is deterministic under any partitioning.
-            drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        else:
-            raise ValueError(f"unknown survivorship {cfg.survivorship!r}")
+        # keep-min rule: the larger id of every verified pair goes. id_b is
+        # the larger by construction (id_a < id_b), so dropping the
+        # distinct id_b set is deterministic under any partitioning.
+        drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
         q = q.join(drop, on=id_col, how="left_anti")
 
     if eval_df is not None:
@@ -209,11 +191,11 @@ def survivorship(docs: DataFrame, cleaned: DataFrame,
 def check_incremental_config(
     cfg: CleanConfig, stop_shingles_provided: bool = False
 ) -> None:
-    """Reject (or warn about) CleanConfig options that cannot be honored
-    incrementally — shared by :func:`ingest_clean_batch` and the streaming
-    face (``streaming.dedup.stream_ingest_clean``), which validates EAGERLY
-    at query construction so a bad config raises at the call site instead
-    of failing asynchronously inside the first micro-batch.
+    """Warn about the CleanConfig option incremental ingest cannot honor —
+    shared by :func:`ingest_clean_batch` and the streaming face
+    (``streaming.dedup.stream_ingest_clean``), which checks EAGERLY at
+    query construction so the warning surfaces at the call site instead
+    of inside the first micro-batch on the stream thread.
 
     ``stop_shingle_frac`` draws a warning, not an error: the field is
     simply IGNORED by the incremental path (corpus document frequencies
@@ -223,13 +205,6 @@ def check_incremental_config(
     quadratic-bucket guard — with zero runtime signal. Neutralize the
     field (``stop_shingle_frac=None`` or ``1.0``) or pass a fixed
     ``stop_shingles`` table to silence it."""
-    if cfg.near_dup and cfg.survivorship != "pairs":
-        raise ValueError(
-            "incremental ingest supports survivorship='pairs' only: "
-            "connected-component minima cannot be decided per batch "
-            f"(got {cfg.survivorship!r}) — run clean_corpus one-shot for "
-            "cluster survivorship"
-        )
     if (
         cfg.near_dup
         and not stop_shingles_provided
@@ -276,23 +251,19 @@ def ingest_clean_batch(
     decontamination -> token counts. The stores then record ALL exact
     survivors (digests AND signatures, kept or near-dup-dropped — the
     record-all rule that makes id-ordered incremental ingest EXACTLY the
-    one-shot ``survivorship='pairs'`` result; see the signature-store
-    module docstring for the equivalence argument).
+    one-shot keep-min-per-pair result; see the signature-store module
+    docstring for the equivalence argument).
 
-    Two deliberate deviations from ``CleanConfig``, both forced by
-    incrementality and raised/ignored loudly rather than silently
-    diverging:
-
-    - ``survivorship='clusters'`` is REJECTED: component minima change as
-      edges arrive, so cluster survivorship cannot be decided per batch.
-    - ``stop_shingle_frac`` is IGNORED: corpus document frequencies are
-      batch-dependent, so a frequency cap would make the result depend on
-      batch boundaries. A non-neutralized value (anything but ``None`` /
-      ``1.0``) draws a ``UserWarning`` unless ``stop_shingles`` is given.
-      Pass ``stop_shingles`` (a fixed DataFrame with a ``shingle_id``
-      column, e.g. the shingle ids of a reference corpus that
-      :func:`..dedup.stop_capped_shingle_ids` drops) for the same
-      protection with batch-independent semantics.
+    One deliberate deviation from ``CleanConfig``, forced by
+    incrementality and flagged loudly rather than silently diverging:
+    ``stop_shingle_frac`` is IGNORED. Corpus document frequencies are
+    batch-dependent, so a frequency cap would make the result depend on
+    batch boundaries. A non-neutralized value (anything but ``None`` /
+    ``1.0``) draws a ``UserWarning`` unless ``stop_shingles`` is given.
+    Pass ``stop_shingles`` (a fixed DataFrame with a ``shingle_id``
+    column, e.g. the shingle ids of a reference corpus that
+    :func:`..dedup.stop_capped_shingle_ids` drops) for the same
+    protection with batch-independent semantics.
 
     Crash ordering (same contract as both stores): survivors' DATA lands
     at ``out_path`` BEFORE either store is appended, and between the two

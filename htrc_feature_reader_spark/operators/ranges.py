@@ -45,6 +45,9 @@ from pyspark.sql import functions as F
 from ..functions import ts_micros
 
 _US = 1_000_000
+# clamp of the 'auto' bin width, in seconds
+MIN_BIN_S = 1.0
+MAX_BIN_S = 30 * 86400.0
 
 
 def range_join(
@@ -55,10 +58,6 @@ def range_join(
     start: str = "start",
     end: str = "end",
     bin_width_s: float | str = "auto",
-    how: str = "inner",
-    probe_id: str | None = None,
-    min_bin_s: float = 1.0,
-    max_bin_s: float = 30 * 86400.0,
 ) -> DataFrame:
     """Join probe rows to every same-key interval containing their ``ts``.
 
@@ -67,28 +66,13 @@ def range_join(
     producing a *descending* bin sequence — ``F.sequence`` would count
     down, not emit empty. Output columns are probe columns followed by
     the interval's non-key columns; overlapping non-key names raise
-    eagerly (rename before joining — silent suffixing hides bugs).
-
-    ``how='left'`` keeps unmatched probe rows with null interval columns
-    and requires ``probe_id`` — a UNIQUE, NON-NULL probe key (null ids
-    would share one window partition and lose rows); implemented as one
-    binned left join plus a per-probe window, so the join is never
-    planned twice. 'inner' is the default.
+    eagerly (rename before joining — silent suffixing hides bugs). It is
+    an inner join: a probe row inside no interval is not emitted.
 
     ``bin_width_s``: bin width in seconds, or ``'auto'`` (mean interval
-    length, clamped to ``[min_bin_s, max_bin_s]``, computed lazily as a
-    1-row broadcast funnel).
+    length, clamped to ``[MIN_BIN_S, MAX_BIN_S]`` — 1 s to 30 days —
+    computed lazily as a 1-row broadcast funnel).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    if how == "left" and probe_id is None:
-        raise ValueError("how='left' requires probe_id (a unique probe key)")
-    if not (min_bin_s > 0):
-        raise ValueError(f"min_bin_s must be positive, got {min_bin_s!r}")
-    if max_bin_s < min_bin_s:
-        raise ValueError(
-            f"max_bin_s ({max_bin_s!r}) must be >= min_bin_s ({min_bin_s!r})"
-        )
     keys = list(keys or [])
     overlap = (set(probe.columns) & set(intervals.columns)) - set(keys)
     if overlap:
@@ -96,7 +80,7 @@ def range_join(
             f"probe and intervals share non-key columns {sorted(overlap)}; "
             "rename them before range_join (silent suffixing hides bugs)"
         )
-    reserved = {"__w", "__bin", "__pus", "__sus", "__eus", "__flag", "__rn"}
+    reserved = {"__w", "__bin", "__pus", "__sus", "__eus"}
     taken = reserved & (set(probe.columns) | set(intervals.columns))
     if taken:
         raise ValueError(
@@ -119,11 +103,11 @@ def range_join(
                 F.greatest(
                     F.coalesce(
                         F.avg(F.col("__eus") - F.col("__sus")),
-                        F.lit(float(min_bin_s * _US)),
+                        F.lit(float(MIN_BIN_S * _US)),
                     ),
-                    F.lit(float(min_bin_s * _US)),
+                    F.lit(float(MIN_BIN_S * _US)),
                 ),
-                F.lit(float(max_bin_s * _US)),
+                F.lit(float(MAX_BIN_S * _US)),
             )
             .cast("long")
             .alias("__w")
@@ -150,41 +134,9 @@ def range_join(
         "__bin", (F.col("__pus") / F.col("__w")).cast("long")
     ).drop("__w")
 
-    helpers = ["__bin", "__pus", "__sus", "__eus"]
     cond = (F.col("__pus") >= F.col("__sus")) & (F.col("__pus") <= F.col("__eus"))
-    if how == "inner":
-        return (
-            pr.join(ivl, on=keys + ["__bin"], how="inner")
-            .filter(cond)
-            .drop(*helpers)
-        )
-
-    # left: ONE binned left join (never planned twice), then a single
-    # window on probe_id keeps all true matches, or exactly one nulled row
-    # when none — ordering by the flag makes the rank-1 row a match
-    # whenever any exists, so the filter never double-emits a probe row.
-    from pyspark.sql.window import Window
-
-    ivl_payload = [c for c in ivl.columns if c not in keys and c not in helpers]
-    # a NULL probe id would collapse every null-id row into one window
-    # partition and silently LOSE rows — fail loudly at runtime instead
-    # (the other preconditions raise eagerly; this one needs the data).
-    # The assert rides inside the always-used __pus column so column
-    # pruning cannot drop it: assert_true yields NULL on success, so the
-    # when() is the identity on valid rows and throws on the first null id.
-    guard = F.assert_true(
-        F.col(probe_id).isNotNull(),
-        F.lit(f"range_join(how='left'): null probe id in {probe_id!r} — "
-              "probe_id must be unique and non-null"),
+    return (
+        pr.join(ivl, on=keys + ["__bin"], how="inner")
+        .filter(cond)
+        .drop("__bin", "__pus", "__sus", "__eus")
     )
-    pr = pr.withColumn("__pus", F.when(guard.isNull(), F.col("__pus")))
-    joined = pr.join(ivl, on=keys + ["__bin"], how="left").withColumn(
-        "__flag", F.coalesce(cond, F.lit(False))
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.col("__flag").desc())
-    joined = joined.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__flag") | (F.col("__rn") == 1)
-    )
-    for c in ivl_payload:
-        joined = joined.withColumn(c, F.when(F.col("__flag"), F.col(c)))
-    return joined.drop("__flag", "__rn", *helpers)

@@ -241,8 +241,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    mode: str = "dominated",
-    tie_round: int = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: within each cluster, find
     embedding pairs whose cosine >= ``threshold`` and mark every document
@@ -257,24 +255,20 @@ def semantic_dedup(
     and stricter (cross-cluster dups are never compared — that is the
     approximation being bought).
 
-    Two survivorship contracts, both deterministic under any partitioning:
-
-    - ``mode='dominated'`` (default, single pass): a row is a duplicate iff
-      some SMALLER-id row in its cluster is within threshold; ``dup_of`` is
-      the smallest such id. Conservative (drops strictly more than greedy
-      sequential scanning) but one self-join + one aggregate — the shape to
-      run at 100 TB.
-    - ``mode='components'``: exact duplicate GROUPS — connected components
-      of the threshold graph (via the large/small-star iteration of
-      :func:`~htrc_feature_reader_spark.operators.components.connected_components`);
-      keeps the min id per component. What the SemDeDup paper's per-group
-      "keep one representative" does, at the cost of the iterative CC rounds.
+    Survivorship, deterministic under any partitioning and in one pass: a
+    row is a duplicate iff some SMALLER-id row in its cluster is within
+    threshold; ``dup_of`` is the smallest such id. Conservative (drops
+    strictly more than greedy sequential scanning) but one self-join + one
+    aggregate — the shape to run at 100 TB. Exact duplicate groups (keep
+    the min id per connected component of the threshold graph) are
+    :func:`~htrc_feature_reader_spark.operators.components.connected_components`
+    over the same edges.
 
     Returns every input row as ``(id_col, cluster_col, is_dup, dup_of)``
     with ``dup_of`` null on survivors. A vector without a positive norm
     (empty, all zeros, or holding a NULL) has no direction: it is never a
     duplicate and never a ``dup_of``. Cosine comparisons use
-    ``round(cos, tie_round)`` so a cross-engine replay (or a rerun under
+    ``round(cos, 6)`` so a cross-engine replay (or a rerun under
     different reduction order) cannot flip a boundary pair.
 
     Scale shape: the self-join keys on ``cluster_col`` — one exchange of
@@ -283,8 +277,6 @@ def semantic_dedup(
     — a 10^5-row cluster means 10^10 candidate pairs and no engine saves
     you. No forced broadcasts; AQE handles skewed cluster sizes.
     """
-    if mode not in ("dominated", "components"):
-        raise ValueError(f"mode must be 'dominated' or 'components', got {mode!r}")
     taken = {"is_dup", "dup_of", "__idb"} & set(df.columns)
     if taken:
         raise ValueError(
@@ -348,27 +340,13 @@ def semantic_dedup(
             F.round(
                 F.when(~F.col("__nul"), F.col("__dot"))
                 / (F.col("__na") * F.col("__nb")),
-                tie_round,
+                6,
             ).alias("__cos"),
         )
         .filter(F.col("__cos") >= threshold)
     )
-    if mode == "dominated":
-        losers = edges.groupBy("__idb").agg(F.min("__ida").alias("dup_of"))
-        out = df.join(
-            losers, on=df[id_col] == losers["__idb"], how="left"
-        ).drop("__idb")
-    else:
-        from .components import connected_components
-
-        cc = connected_components(edges, id_a="__ida", id_b="__idb")
-        losers = (
-            cc.filter(F.col("id") != F.col("component"))
-            .select(F.col("id").alias("__idb"), F.col("component").alias("dup_of"))
-        )
-        out = df.join(
-            losers, on=df[id_col] == losers["__idb"], how="left"
-        ).drop("__idb")
+    losers = edges.groupBy("__idb").agg(F.min("__ida").alias("dup_of"))
+    out = df.join(losers, on=df[id_col] == losers["__idb"], how="left").drop("__idb")
     return out.select(
         id_col,
         cluster_col,

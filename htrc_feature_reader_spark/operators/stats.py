@@ -85,14 +85,12 @@ def top_terms(
     k: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    group_col: str | None = "source",
-    lowercase: bool = False,
+    group_col: str = "source",
 ) -> DataFrame:
     """Exact heavy-hitter vocabulary: the ``k`` most frequent whitespace
-    terms per ``group_col`` (or corpus-wide when ``group_col=None``),
-    with term frequency ``tf``, document frequency ``df``, and a
-    tie-stable ``rank`` (tf desc, term asc — deterministic across runs
-    and engines).
+    terms per ``group_col``, with term frequency ``tf``, document
+    frequency ``df``, and a tie-stable ``rank`` (tf desc, term asc —
+    deterministic across runs and engines). Terms are case-sensitive.
 
     Scale: the exploded word stream never survives past the first
     aggregation — ``groupBy(group, term)`` partial-aggregates map-side,
@@ -108,31 +106,20 @@ def top_terms(
     word = F.explode(
         F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     ).alias("term")
-    term = F.lower(F.col("term")) if lowercase else F.col("term")
-    keys = [group_col] if group_col else []
-    exploded = docs.select(*keys, F.col(id_col).alias("__id"), word).select(
-        *keys, "__id", term.alias("term")
-    )
-    counts = exploded.groupBy(*keys, "term").agg(
+    exploded = docs.select(group_col, F.col(id_col).alias("__id"), word)
+    counts = exploded.groupBy(group_col, "term").agg(
         F.count(F.lit(1)).alias("tf"),
         F.countDistinct("__id").alias("df"),
     )
     order = [F.col("tf").desc(), F.col("term").asc()]
-    if keys:
-        # rank-filter form: Spark's WindowGroupLimit rewrites this into a
-        # partial per-partition group limit BEFORE the shuffle, so only
-        # ~k rows per group per mapper move — a distributed top-k, not a
-        # full per-group sort
-        ranked = counts.withColumn(
-            "rank", F.row_number().over(Window.partitionBy(*keys).orderBy(*order))
-        )
-        return ranked.filter(F.col("rank") <= k)
-    # corpus-wide: orderBy+limit is a TakeOrdered (per-partition heaps +
-    # driver merge of k rows), never a single-partition window
-    topk = counts.orderBy(*order).limit(k)
-    return topk.withColumn(
-        "rank", F.row_number().over(Window.partitionBy().orderBy(*order))
+    # rank-filter form: Spark's WindowGroupLimit rewrites this into a
+    # partial per-partition group limit BEFORE the shuffle, so only ~k
+    # rows per group per mapper move — a distributed top-k, not a full
+    # per-group sort
+    ranked = counts.withColumn(
+        "rank", F.row_number().over(Window.partitionBy(group_col).orderBy(*order))
     )
+    return ranked.filter(F.col("rank") <= k)
 
 
 def source_ngram_overlap(
@@ -277,37 +264,26 @@ def group_quantile(
     value_col: str,
     group_col: str = "source",
     q: float = 0.5,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-group discrete quantile — ``percentile_disc`` semantics (the
     smallest actual value whose cumulative distribution reaches ``q``),
     one row per group: ``(group, threshold)``.
 
-    ``exact=True`` computes it exactly via one window pass:
-    ``cume_dist()`` over the group ordered by value, filter ``>= q``,
-    min per group — one exchange + in-group sort of the (group, value)
-    projection ONLY (never the full row). Because the returned statistic
-    is a value at a rank, ties and duplicate values are handled by
-    definition, and DuckDB's ``percentile_disc`` reproduces it exactly —
-    no interpolation, no float averaging of neighbors.
-
-    ``exact=False`` swaps the sort for ``approx_percentile`` (KLL-style
-    sketch, map-side combinable, no per-group sort) — the 100 TB default
-    when the threshold feeds a filter and +-1/accuracy rank error is
-    acceptable. Returns a real data value either way.
+    Exact, via one window pass: ``cume_dist()`` over the group ordered
+    by value, filter ``>= q``, min per group — one exchange + in-group
+    sort of the (group, value) projection ONLY (never the full row).
+    Because the returned statistic is a value at a rank, ties and
+    duplicate values are handled by definition, and DuckDB's
+    ``percentile_disc`` reproduces it exactly — no interpolation, no
+    float averaging of neighbors, and no sketch (the reference computes
+    no approximate aggregates).
     """
     if not (0.0 < q <= 1.0):
         raise ValueError(f"q={q} outside (0, 1]")
-    if not exact:
-        return df.groupBy(F.col(group_col).alias("group")).agg(
-            F.percentile_approx(value_col, q, accuracy).alias("threshold")
-        )
     # NULL values are excluded BEFORE the window: cume_dist counts every
     # partition row (NULLs sort first), so leaving them in shifts both
-    # rank and denominator and the result diverges from percentile_disc,
-    # from the exact=False path (percentile_approx ignores NULLs) and
-    # from DuckDB's quantile_disc (ADVICE r5)
+    # rank and denominator and the result diverges from percentile_disc
+    # and from DuckDB's quantile_disc (ADVICE r5)
     return (
         df.select(F.col(group_col).alias("group"), F.col(value_col).alias("__v"))
         .filter(F.col("__v").isNotNull())
@@ -326,8 +302,6 @@ def filter_by_group_quantile(
     group_col: str = "source",
     q: float = 0.5,
     keep: str = "ge",
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Quantile-gated filtering — "keep each source's top (1-q) by
     quality score": join each row's group to its :func:`group_quantile`
@@ -350,7 +324,7 @@ def filter_by_group_quantile(
     """
     if keep not in ("ge", "lt"):
         raise ValueError(f"keep={keep!r}; expected 'ge' or 'lt'")
-    thr = group_quantile(df, value_col, group_col, q, exact, accuracy)
+    thr = group_quantile(df, value_col, group_col, q)
     joined = df.join(
         thr.withColumnRenamed("group", group_col), on=group_col
     ).withColumnRenamed("threshold", "__threshold")

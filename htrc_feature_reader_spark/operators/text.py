@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import MOD, rolling_hash, rolling_hash_sql, window_starts
+from .hashing import rolling_hash, rolling_hash_sql, window_starts
 
 # Tiny per-language stopword marker sets (drawn from public stopword
 # lists) — enough signal for a coarse heuristic language id on natural
@@ -100,13 +100,11 @@ def tokenize(
     return df.withColumn(out_col, tok)
 
 
-def tokenize_sql(
-    text_expr: str, vocab_size: int | None = None, mod: int = MOD
-) -> str:
+def tokenize_sql(text_expr: str, vocab_size: int | None = None) -> str:
     """The :func:`tokenize` expression as DuckDB SQL — same
     pretokenizer regex, same rolling-hash family, bit-identical ids (for
     oracles and cross-engine replays)."""
-    rh = rolling_hash_sql("p", mod=mod)
+    rh = rolling_hash_sql("p")
     tok = (
         f"list_transform(regexp_extract_all({text_expr}, "
         f"'{BPE_ISH_PATTERN}'), p -> {rh})"
@@ -516,18 +514,20 @@ def remove_duplicate_lines(
     )
 
 
+_BM25_K1, _BM25_B = 1.2, 0.75
+
+
 def bm25(
     token_counts: DataFrame,
     doc_col: str = "htid",
     token_col: str = "token",
     count_col: str = "count",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Okapi BM25 weight per (doc, token) over a long token-count table —
     the retrieval-grade sibling of :func:`tf_idf` (tf saturation via
-    ``k1``, doc-length normalization via ``b``), for corpus quality
-    scoring and dedup-aware retrieval indexes.
+    ``k1`` = 1.2, doc-length normalization via ``b`` = 0.75, the standard
+    Okapi constants), for corpus quality scoring and dedup-aware
+    retrieval indexes.
 
     Same plan shape as :func:`tf_idf` and the same laziness argument: two
     aggregations (doc totals, document frequencies), the corpus constants
@@ -558,9 +558,9 @@ def bm25(
         F.count(F.lit(1)).alias("df")
     ).join(F.broadcast(corpus))  # 1-row cross join: df + N + avgdl
     tc = F.col("tc").cast("double")
-    norm = F.lit(float(k1)) * (
-        F.lit(1.0 - float(b))
-        + F.lit(float(b)) * F.col("doc_total") / F.col("__avgdl")
+    norm = F.lit(_BM25_K1) * (
+        F.lit(1.0 - _BM25_B)
+        + F.lit(_BM25_B) * F.col("doc_total") / F.col("__avgdl")
     )
     idf = F.log(
         1.0
@@ -572,7 +572,7 @@ def bm25(
         .withColumn("idf", idf)
         .withColumn(
             "bm25",
-            F.col("idf") * tc * F.lit(float(k1) + 1.0) / (tc + norm),
+            F.col("idf") * tc * F.lit(_BM25_K1 + 1.0) / (tc + norm),
         )
     )
     return out.select(doc_col, token_col, "tc", "doc_total", "df", "idf", "bm25")

@@ -18,7 +18,7 @@ ingest round is:
    id), and a collision whose signature agreement >= ``threshold`` drops
    the BATCH doc when the other row is
    - a smaller batch id — the larger id of each verified within-batch
-     pair goes (the batch ``'pairs'`` survivorship rule of
+     pair goes (the keep-min-per-pair survivorship rule of
      :func:`..operators.pipeline.clean_corpus`), or
    - a store row — history always has precedence (first arrival wins).
    The drop ids feed one anti join, which ignores duplicate keys, so no
@@ -79,28 +79,24 @@ from .store_common import (
 )
 
 _SIG_SCHEMA = "id long, sig array<long>"
+# signature length of word_minhash_signatures
+SIG_HASHES = 8
 
 
 def word_minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    n_hashes: int = 8,
-    seed: int = 42,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, sig) for the common text case: word n-gram rolling-hash
-    shingles -> MinHash. Deterministic in content alone (no corpus
+    """(id, sig) for the common text case: word 3-gram rolling-hash
+    shingles -> MinHash with ``SIG_HASHES`` hashes at seed 42 (the
+    one-shot miner's defaults). Deterministic in content alone (no corpus
     statistics), so signatures computed in different batches / jobs /
     years agree — the property the store's history depends on.
 
-    Documents with fewer than ``n`` words produce NO signature row: they
+    Documents with fewer than 3 words produce NO signature row: they
     have no shingles, are never candidates, and are always admitted
     (same as the one-shot miner's behavior for them)."""
     return minhash_signatures(
-        word_shingle_ids(docs, text_col, id_col, n=n),
-        n_hashes=n_hashes,
-        seed=seed,
+        word_shingle_ids(docs, text_col, id_col, n=3), n_hashes=SIG_HASHES
     )
 
 

@@ -58,16 +58,15 @@ def stream_exact_dedup(
     )
 
 
-def _start_foreach_batch(docs, each_batch, checkpoint_dir, trigger_available_now):
+def _start_foreach_batch(docs, each_batch, checkpoint_dir):
     """The shared writer tail of every store-backed ingest stream in this
     module (one definition — writer options cannot drift between the
     exact, near-dup, and full-funnel faces)."""
-    writer = docs.writeStream.foreachBatch(each_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        docs.writeStream.foreachBatch(each_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_ingest_against_store(
@@ -78,7 +77,6 @@ def stream_ingest_against_store(
     text_col: str = "text",
     id_col: str = "doc_id",
     normalize: bool = False,
-    trigger_available_now: bool = False,
 ):
     """Streaming face of the incremental digest store
     (:mod:`..sources.digest_store`): each micro-batch is one
@@ -116,8 +114,7 @@ def stream_ingest_against_store(
             batch_df, store_path, text_col, id_col, normalize, out_path=out_path
         )
 
-    return _start_foreach_batch(docs, each_batch, checkpoint_dir,
-                                trigger_available_now)
+    return _start_foreach_batch(docs, each_batch, checkpoint_dir)
 
 
 def stream_ingest_near_dup(
@@ -125,13 +122,11 @@ def stream_ingest_near_dup(
     store_path: str,
     out_path: str,
     checkpoint_dir: str,
-    sig_fn=None,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_bands: int = 4,
     rows_per_band: int = 2,
     threshold: float = 0.5,
-    trigger_available_now: bool = False,
 ):
     """Streaming face of the incremental NEAR-dup signature store
     (:mod:`..sources.signature_store`): each micro-batch is one
@@ -141,11 +136,13 @@ def stream_ingest_near_dup(
     boundaries), append survivors to ``out_path`` and ALL batch
     signatures to the store.
 
-    ``sig_fn(batch_df) -> (id, sig)`` builds the batch's MinHash
-    signatures; it MUST be deterministic in content alone (same shingle
-    family and seed every batch) or history collisions are meaningless.
-    Default: :func:`~..sources.signature_store.word_minhash_signatures`
-    over ``text_col``/``id_col``. State is the store's parquet shards
+    Each batch's MinHash signatures are
+    :func:`~..sources.signature_store.word_minhash_signatures` over
+    ``text_col``/``id_col``: deterministic in content alone, so history
+    collisions mean the same thing in every batch. Those signatures hold
+    ``SIG_HASHES`` (8) positions, so a band layout needing more —
+    ``n_bands * rows_per_band > 8`` — raises ``ValueError`` here, before
+    any stream starts. State is the store's parquet shards
     (~72 bytes/doc), not the query's state store — it survives checkpoint
     deletion and is shared with batch ingests. Crash story: at-least-once
     (data lands before signatures; see the store module docstring).
@@ -153,6 +150,7 @@ def stream_ingest_near_dup(
     Returns the started :class:`~pyspark.sql.streaming.StreamingQuery`.
     """
     from ..sources.signature_store import (
+        SIG_HASHES,
         ingest_batch_near_dup,
         word_minhash_signatures,
     )
@@ -161,16 +159,19 @@ def stream_ingest_near_dup(
     # eager (see stream_ingest_against_store): raise at the call site,
     # not inside the first micro-batch
     require_integral_id(docs, id_col, "stream_ingest_near_dup")
-
-    if sig_fn is None:
-        def sig_fn(batch_df):
-            return word_minhash_signatures(batch_df, text_col, id_col)
+    if n_bands * rows_per_band > SIG_HASHES:
+        # same check as CleanConfig: a band past the signature's end
+        # would pair every document
+        raise ValueError(
+            f"n_bands * rows_per_band ({n_bands} * {rows_per_band}) exceeds "
+            f"the {SIG_HASHES} MinHash positions of word_minhash_signatures"
+        )
 
     def each_batch(batch_df: DataFrame, epoch_id: int) -> None:
         ingest_batch_near_dup(
             batch_df,
             store_path,
-            sig_fn(batch_df),
+            word_minhash_signatures(batch_df, text_col, id_col),
             id_col=id_col,
             n_bands=n_bands,
             rows_per_band=rows_per_band,
@@ -178,8 +179,7 @@ def stream_ingest_near_dup(
             out_path=out_path,
         )
 
-    return _start_foreach_batch(docs, each_batch, checkpoint_dir,
-                                trigger_available_now)
+    return _start_foreach_batch(docs, each_batch, checkpoint_dir)
 
 
 def stream_ingest_clean(
@@ -193,7 +193,6 @@ def stream_ingest_clean(
     id_col: str = "doc_id",
     eval_df: DataFrame | None = None,
     stop_shingles: DataFrame | None = None,
-    trigger_available_now: bool = False,
 ):
     """Streaming face of the FULL incremental cleaning funnel
     (:func:`..operators.pipeline.ingest_clean_batch`): each micro-batch is
@@ -205,8 +204,8 @@ def stream_ingest_clean(
     with batch ingests, surviving checkpoint deletion).
 
     ``config`` is a :class:`~..operators.pipeline.CleanConfig`; the same
-    incremental constraints apply ('pairs' survivorship only, fixed
-    ``stop_shingles`` instead of the corpus-frequency cap) and the same
+    incremental constraint applies (fixed ``stop_shingles`` instead of
+    the corpus-frequency cap) and the same
     crash ordering (data -> signatures -> digests; at-least-once).
 
     Returns the started :class:`~pyspark.sql.streaming.StreamingQuery`.
@@ -217,10 +216,9 @@ def stream_ingest_clean(
         ingest_clean_batch,
     )
 
-    # validate EAGERLY: a bad config must raise (and the ignored-field
-    # warning must surface) here at the call site, not asynchronously
-    # inside the first micro-batch on the stream thread (a
-    # fire-and-forget caller would never see it)
+    # check EAGERLY: the ignored-field warning must surface here at the
+    # call site, not asynchronously inside the first micro-batch on the
+    # stream thread (a fire-and-forget caller would never see it)
     check_incremental_config(
         config or CleanConfig(),
         stop_shingles_provided=stop_shingles is not None,
@@ -242,5 +240,4 @@ def stream_ingest_clean(
             stop_shingles=stop_shingles,
         )
 
-    return _start_foreach_batch(docs, each_batch, checkpoint_dir,
-                                trigger_available_now)
+    return _start_foreach_batch(docs, each_batch, checkpoint_dir)

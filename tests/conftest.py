@@ -14,6 +14,33 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def job_labels(spark):
+    """``job_labels(fn)`` runs ``fn()`` and returns the description of
+    every Spark job it started, read from the application status store
+    the way the benchmark's tracer reads finished jobs."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty(10_000)
+        return sc.statusStore().jobsList(None)  # newest first
+
+    def run(fn):
+        before = jobs()
+        floor = before.apply(0).jobId() if before.size() else -1
+        fn()
+        after, descs = jobs(), []
+        for i in range(after.size()):
+            j = after.apply(i)
+            if j.jobId() <= floor:
+                break
+            descs.append(j.description().get() if j.description().isDefined()
+                         else None)
+        return descs
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def tokenlist_df(spark):
     from htrc_feature_reader_spark.synth import generate_tokenlist

@@ -3,7 +3,6 @@ near-dup survivorship."""
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from htrc_feature_reader_spark.operators.components import connected_components
@@ -49,6 +48,15 @@ def test_multiple_components_and_self_loops(spark):
 def test_empty_pairs(spark):
     df = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(df).count() == 0
+
+
+def test_every_round_job_is_labelled(spark, job_labels):
+    """The edge pin, every star round and every convergence check run
+    under a ``connected_components:`` description."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "id_a long, id_b long")
+    descs = job_labels(lambda: connected_components(df))
+    assert descs
+    assert all(d and d.startswith("connected_components: ") for d in descs), descs
 
 
 def test_random_graphs_match_union_find(spark):
@@ -99,37 +107,6 @@ def test_signature_agreement_exact_fractions(spark):
         [(1, 2), (1, 3), (1, 4)], "id_a long, id_b long"
     )
     assert _agreement(sigs, pairs) == {(1, 2): 0.75, (1, 3): 0.25, (1, 4): 0.0}
-
-
-def test_clean_corpus_cluster_survivorship(spark):
-    """survivorship='clusters' keeps exactly one representative (min id)
-    per near-dup cluster; unrelated docs are untouched; an unknown mode
-    raises."""
-    from htrc_feature_reader_spark.operators.pipeline import (
-        CleanConfig, clean_corpus,
-    )
-
-    base = " ".join(f"tok{i % 37}x{i % 11}" for i in range(120))
-    # enough unrelated docs that the dup cluster's shared shingles stay
-    # under the 50% stop-shingle document-frequency cap
-    others = [
-        (10 + k, " ".join(f"u{k}w{i % 29}q{i % 13}" for i in range(140)))
-        for k in range(5)
-    ]
-    docs = spark.createDataFrame(
-        [(1, base + " alpha"), (2, base + " beta"), (3, base + " gamma")]
-        + others,
-        "doc_id long, text string",
-    )
-    cfg = CleanConfig(min_distinct_ratio=0.05, survivorship="clusters")
-    kept = sorted(
-        r["doc_id"] for r in clean_corpus(docs, cfg).select("doc_id").collect()
-    )
-    assert kept == [1, 10, 11, 12, 13, 14]
-
-    with pytest.raises(ValueError, match="survivorship"):
-        clean_corpus(docs, CleanConfig(min_distinct_ratio=0.05,
-                                       survivorship="wat")).collect()
 
 
 # A pair whose only overlap is its first 7 words (5 of 18 word 3-shingles

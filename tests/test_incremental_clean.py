@@ -71,44 +71,22 @@ def test_cross_batch_exact_and_near_suppression(spark, tmp_path):
     assert [r["doc_id"] for r in out2.collect()] == [12]
 
 
-def _job_descriptions_since(spark, floor):
-    """(newest job id, [description of every job newer than ``floor``])
-    read from the application status store, the way the benchmark's
-    tracer reads finished jobs."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(10_000)
-    jobs = sc.statusStore().jobsList(None)  # newest first
-    descs = []
-    for i in range(jobs.size()):
-        j = jobs.apply(i)
-        if j.jobId() <= floor:
-            break
-        descs.append(j.description().get() if j.description().isDefined()
-                     else None)
-    return (jobs.apply(0).jobId() if jobs.size() else floor), descs
-
-
-def test_every_batch_job_is_labelled(spark, tmp_path):
+def test_every_batch_job_is_labelled(spark, tmp_path, job_labels):
     """Each job an ingest batch launches (pins, out write, store appends;
     first batch against empty stores, second against recorded ones)
     carries an ``ingest_clean_batch:`` description."""
     docs = _corpus(spark)
     dp, sp = str(tmp_path / "dig"), str(tmp_path / "sig")
-    floor, _ = _job_descriptions_since(spark, -1)
-    for lo in (0, 12):
-        b = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 12))
-        ingest_clean_batch(b, dp, sp, _CFG, out_path=str(tmp_path / "out"))
-    _, descs = _job_descriptions_since(spark, floor)
+
+    def two_batches():
+        for lo in (0, 12):
+            b = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 12))
+            ingest_clean_batch(b, dp, sp, _CFG, out_path=str(tmp_path / "out"))
+
+    descs = job_labels(two_batches)
     assert descs
     assert all(d and d.startswith("ingest_clean_batch: ") for d in descs), descs
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
-
-
-def test_clusters_survivorship_rejected(spark, tmp_path):
-    docs = spark.createDataFrame([(1, "x " * 30)], _SCHEMA)
-    cfg = CleanConfig(survivorship="clusters")
-    with pytest.raises(ValueError, match="pairs"):
-        ingest_clean_batch(docs, str(tmp_path / "d"), str(tmp_path / "s"), cfg)
 
 
 def test_quality_failures_never_recorded(spark, tmp_path):
@@ -229,19 +207,20 @@ def test_stream_ingest_clean_full_funnel(spark, tmp_path):
     assert read_digest_store(spark, dp).count() == 3  # 1, 11, 12
 
 
-def test_stream_ingest_clean_rejects_bad_config_eagerly(spark, tmp_path):
-    """An invalid CleanConfig must raise AT THE CALL SITE, not
-    asynchronously inside the first micro-batch on the stream thread."""
+def test_stream_ingest_clean_checks_config_eagerly(spark, tmp_path):
+    """The ignored-field warning of a non-neutralized CleanConfig must
+    surface AT THE CALL SITE, not asynchronously inside the first
+    micro-batch on the stream thread."""
     from htrc_feature_reader_spark.streaming.dedup import stream_ingest_clean
 
     src = str(tmp_path / "src")
     spark.createDataFrame([(1, "x " * 30)], _SCHEMA).write.parquet(src)
-    with pytest.raises(ValueError, match="pairs"):
-        stream_ingest_clean(
+    with pytest.warns(UserWarning, match="stop_shingle_frac"):
+        q = stream_ingest_clean(
             spark.readStream.schema("doc_id long, text string").parquet(src),
             str(tmp_path / "d"), str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "ck"),
-            config=CleanConfig(survivorship="clusters"))
+            str(tmp_path / "ck"), config=CleanConfig())
+    q.stop()
 
 
 def test_non_neutralized_stop_shingle_frac_warns(spark, tmp_path):

@@ -95,6 +95,19 @@ def test_pack_deterministic_under_partitioning(spark):
     assert a == b and len(a) > 0
 
 
+def test_pack_build_jobs_are_labelled(spark, tmp_path, job_labels):
+    """Every job a pack_sequences call launches (the barrier, reliable or
+    local, and the offsets collect) carries a ``pack_sequences:``
+    description."""
+    rows = [(f"d{i:02d}", [i] * (i % 5 + 1)) for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    for kw in ({}, {"checkpoint_dir": str(tmp_path / "ck")}):
+        descs = job_labels(lambda: pack_sequences(df, 8, **kw))
+        assert descs
+        assert all(d and d.startswith("pack_sequences: ") for d in descs), descs
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
 def test_pack_token_stream_byte_equality(spark):
     """The concatenation of packed sequences is byte-equal to the
     concatenation of the source arrays (payloads sliced, never
@@ -453,12 +466,10 @@ def test_pack_documents_padded_shapes_and_parity(spark):
         assert toks == [t for t in
                         ([*range(10)] if d == 1 else [*range(4)] if d == 2 else [7])][:n]
 
-    # ragged mode leaves the tail short; min_tokens drops it
+    # ragged mode leaves the tail short
     ragged = pack_documents_padded(df, 4, pad_token=None).collect()
     tail = [r for r in ragged if r["doc_id"] == 1 and r["chunk_id"] == 2][0]
     assert tail["tokens"] == [8, 9] and tail["n_pad"] == 0
-    kept = pack_documents_padded(df, 4, pad_token=None, min_tokens=3).collect()
-    assert (1, 2) not in {(r["doc_id"], r["chunk_id"]) for r in kept}
 
     # eos appended before chunking
     eos = pack_documents_padded(df.filter("doc_id = 2"), 4, pad_token=-1,

@@ -213,16 +213,6 @@ class TestDecontaminate:
         out = decontaminate(docs, ev, n=13, return_flags=True)
         assert not any(r["contaminated"] for r in out.collect())
 
-    def test_unbroadcast_matches(self, spark):
-        from htrc_feature_reader_spark.operators import decontaminate
-        docs = self._docs(spark)
-        ev = spark.createDataFrame(
-            [("alpha beta gamma delta epsilon",)], "text string")
-        a = sorted(r["doc_id"] for r in decontaminate(docs, ev, n=5).collect())
-        b = sorted(r["doc_id"] for r in
-                   decontaminate(docs, ev, n=5, broadcast_eval=False).collect())
-        assert a == b
-
     def test_validation_and_flag_col(self, spark):
         from htrc_feature_reader_spark.operators import decontaminate
         docs = self._docs(spark)

@@ -127,8 +127,6 @@ def test_boilerplate_fraction_validates(spark):
     docs = spark.createDataFrame([Row(doc_id=1, text="a b c")])
     with pytest.raises(ValueError, match="min_df"):
         boilerplate_fraction(docs, min_df=1)
-    with pytest.raises(ValueError, match="n must"):
-        boilerplate_fraction(docs, n=0)
 
 
 # ------------------------------------------------------------ top_terms
@@ -140,6 +138,9 @@ def test_top_terms_per_group_rank_and_df(spark):
             Row(doc_id=1, source="a", text="x x x y z"),
             Row(doc_id=2, source="a", text="y y x"),
             Row(doc_id=3, source="b", text="q q q"),
+            # a tab and a run of spaces split like one space; the tf=2
+            # tie of "a" and "b" breaks term asc
+            Row(doc_id=4, source="c", text="b a\t b  a"),
         ]
     )
     out = top_terms(docs, k=2)
@@ -149,26 +150,10 @@ def test_top_terms_per_group_rank_and_df(spark):
     assert rows[("a", 2)].term == "y" and rows[("a", 2)].tf == 3
     assert rows[("b", 1)].term == "q"
     assert ("b", 2) not in rows  # only one distinct term in b
-
-
-def test_top_terms_corpus_wide_and_ties(spark):
-    docs = spark.createDataFrame(
-        [Row(doc_id=1, source="a", text="b a b a c")]
-    )
-    out = top_terms(docs, k=2, group_col=None).collect()
-    # tie on tf=2: term asc breaks it deterministically
-    assert [(r.term, r.rank) for r in sorted(out, key=lambda r: r.rank)] == [
-        ("a", 1),
+    assert [(rows[("c", k)].term, rows[("c", k)].tf) for k in (1, 2)] == [
+        ("a", 2),
         ("b", 2),
     ]
-
-
-def test_top_terms_lowercase_and_whitespace(spark):
-    docs = spark.createDataFrame(
-        [Row(doc_id=1, source="a", text="Foo foo\t FOO  bar")]
-    )
-    out = top_terms(docs, k=1, lowercase=True).collect()
-    assert out[0].term == "foo" and out[0].tf == 3
 
 
 def test_top_terms_validates(spark):

@@ -380,37 +380,3 @@ def test_simhash_wide_fingerprint_pairs(spark):
              for r in simhash_candidate_pairs(sigs, bits=48, n_bands=4).collect()}
     assert pairs.get((1, 2)) == 2
     assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_banded_miners_bucket_cap(spark):
-    """max_bucket drops only oversized (degenerate) buckets: pairs from
-    small buckets survive, members of a viral bucket stop pairing."""
-    from htrc_feature_reader_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        simhash_candidate_pairs,
-    )
-
-    # LSH: ids 1-2 share a unique 8-hash signature; ids 10..19 share a
-    # degenerate one (a 10-doc bucket -> 45 pairs without the cap)
-    sig_a = [7, 7, 7, 7, 7, 7, 7, 7]
-    sig_v = [0, 0, 0, 0, 0, 0, 0, 0]
-    sigs = spark.createDataFrame(
-        [(1, sig_a), (2, sig_a)] + [(10 + i, sig_v) for i in range(10)],
-        "id long, sig array<long>",
-    )
-    uncapped = lsh_candidate_pairs(sigs).count()
-    capped = {(r["id_a"], r["id_b"])
-              for r in lsh_candidate_pairs(sigs, max_bucket=5).collect()}
-    assert uncapped == 1 + 45
-    assert capped == {(1, 2)}
-
-    # SimHash: same shape on band slices
-    fps = spark.createDataFrame(
-        [(1, 0x2E5F13A9C4D7), (2, 0x2E5F13A9C4D7 ^ (1 << 3))]
-        + [(10 + i, 0) for i in range(10)],
-        "id long, simhash long",
-    )
-    got = {(r["id_a"], r["id_b"])
-           for r in simhash_candidate_pairs(fps, bits=48, n_bands=4,
-                                            max_bucket=5).collect()}
-    assert got == {(1, 2)}

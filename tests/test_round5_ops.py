@@ -93,8 +93,6 @@ def test_ngram_novelty_all_novel_and_validation(spark):
     r = ngram_novelty(docs).collect()[0]
     assert r["n_novel"] == r["n_shingles"] == 2
     assert r["novelty_frac"] == pytest.approx(1.0)
-    with pytest.raises(ValueError):
-        ngram_novelty(docs, n=0)
 
 
 def test_ngram_novelty_no_hints_no_cartesian(spark):

@@ -1,5 +1,8 @@
-"""semantic_dedup: hand-checked drop sets, dominated-vs-components
-contracts, a union-find reference over randomized clustered vectors,
+"""semantic_dedup: hand-checked drop sets, the dominated contract on a
+chain, a brute-force reference over randomized clustered vectors (also
+with the hash aggregate forced onto its sort-based fallback) for both
+survivorship contracts — dominated (semantic_dedup itself) and components
+(connected_components over the same-cluster cosine edges),
 IVF-assignment composition, degenerate vectors, and the plan shape
 (cluster equi-join, no cartesian)."""
 
@@ -10,7 +13,11 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from htrc_feature_reader_spark.operators.similarity import semantic_dedup
+from htrc_feature_reader_spark.operators.components import connected_components
+from htrc_feature_reader_spark.operators.similarity import (
+    near_dup_pairs,
+    semantic_dedup,
+)
 
 
 def _df(spark, rows):
@@ -21,6 +28,29 @@ def _df(spark, rows):
 
 def _result(df):
     return {r.vec_id: (r.is_dup, r.dup_of) for r in df.collect()}
+
+
+def _run(spark, rows, threshold, contract):
+    """(is_dup, dup_of) per id. 'dominated' is semantic_dedup; 'components'
+    (keep the min id of each connected component of the threshold graph)
+    is the composition semantic_dedup's docstring names: connected
+    components over the same-cluster cosine pairs."""
+    df = _df(spark, rows)
+    if contract == "dominated":
+        return _result(semantic_dedup(df, "label", threshold=threshold))
+    lab = df.select("vec_id", "label")
+    pairs = (
+        near_dup_pairs(df, threshold=threshold, exact=True)
+        .join(lab.toDF("id_a", "la"), "id_a")
+        .join(lab.toDF("id_b", "lb"), "id_b")
+        .filter("la = lb")
+    )
+    root = {r.id: r.component for r in connected_components(pairs).collect()}
+    out = {}
+    for i, _, _ in rows:
+        r = root.get(i, i)
+        out[i] = (r != i, r if r != i else None)
+    return out
 
 
 def test_hand_checked_dominated(spark):
@@ -35,7 +65,7 @@ def test_hand_checked_dominated(spark):
     assert got == {0: (False, None), 1: (True, 0), 2: (False, None), 3: (False, None)}
 
 
-def test_dominated_vs_components_chain(spark):
+def test_dominated_chain(spark):
     # chain a~b, b~c, a!~c (angles 0, 35, 70 degrees; threshold cos(40deg))
     def v(deg):
         r = math.radians(deg)
@@ -47,14 +77,9 @@ def test_dominated_vs_components_chain(spark):
     # dominated: 1 loses to 0; 2 loses to 1 (cos 35deg >= thr) even though
     # 1 is itself dropped — the conservative contract
     assert dom == {0: (False, None), 1: (True, 0), 2: (True, 1)}
-    comp = _result(
-        semantic_dedup(_df(spark, rows), "label", threshold=thr, mode="components")
-    )
-    # components: {0,1,2} is one component (via the 1-2 edge), keep min
-    assert comp == {0: (False, None), 1: (True, 0), 2: (True, 0)}
 
 
-def _brute(rows, threshold, mode):
+def _brute(rows, threshold, contract):
     import itertools
 
     def cos(a, b):
@@ -67,7 +92,7 @@ def _brute(rows, threshold, mode):
     for (ia, ca, va), (ib, cb, vb) in itertools.combinations(rows, 2):
         if ca == cb and cos(va, vb) >= threshold:
             edges.append((min(ia, ib), max(ia, ib)))
-    if mode == "dominated":
+    if contract == "dominated":
         out = {}
         for i, _, _ in rows:
             smaller = [a for a, b in edges if b == i]
@@ -93,8 +118,7 @@ def _brute(rows, threshold, mode):
     return out
 
 
-@pytest.mark.parametrize("mode", ["dominated", "components"])
-def test_matches_brute_force(spark, mode):
+def _clustered_rows():
     rng = random.Random(11)
     rows = []
     # 4 clusters x ~15 vectors near 3 seed directions -> plenty of dups
@@ -103,9 +127,56 @@ def test_matches_brute_force(spark, mode):
         seed_dir = rng.choice([(1.0, 0.0, 0.0), (0.0, 1.0, 0.0), (0.6, 0.6, 0.2)])
         vec = [s + rng.gauss(0, 0.12) for s in seed_dir]
         rows.append((i, c, vec))
-    thr = 0.97
-    got = _result(semantic_dedup(_df(spark, rows), "label", threshold=thr, mode=mode))
-    assert got == _brute(rows, thr, mode)
+    return rows
+
+
+@pytest.mark.parametrize("contract", ["dominated", "components"])
+def test_matches_brute_force(spark, contract):
+    rows, thr = _clustered_rows(), 0.97
+    assert _run(spark, rows, thr, contract) == _brute(rows, thr, contract)
+
+
+def _fallback_tasks(df):
+    """Tasks whose hash aggregate fell back to sort-based aggregation,
+    summed over every HashAggregate of ``df``'s executed final plan."""
+    total = 0
+
+    def walk(n):
+        nonlocal total
+        name = n.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(n.executedPlan())
+        if "QueryStage" in name:
+            return walk(n.plan())
+        if name == "HashAggregate":
+            total += n.metrics().apply("numTasksFallBacked").value()
+        ch = n.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return total
+
+
+def test_hash_agg_fallback_keeps_bits(spark):
+    """The per-pair dot is a codegen hash-aggregate sum. Forcing every
+    aggregate onto its sort-based fallback from the first row (the path
+    a hash map that runs out of memory takes) must not move a float bit
+    of any cosine: is_dup/dup_of equal the unforced run and the
+    reference."""
+    rows, thr = _clustered_rows(), 0.97
+    plain = semantic_dedup(_df(spark, rows), "label", threshold=thr)
+    want = _result(plain)
+    assert _fallback_tasks(plain) == 0
+    conf = "spark.sql.TungstenAggregate.testFallbackStartsAt"
+    spark.conf.set(conf, "1, 1")
+    try:
+        forced = semantic_dedup(_df(spark, rows), "label", threshold=thr)
+        got = _result(forced)
+    finally:
+        spark.conf.unset(conf)
+    assert _fallback_tasks(forced) > 0
+    assert got == want == _brute(rows, thr, "dominated")
 
 
 def test_composes_with_ivf_assignment(spark):
@@ -143,8 +214,8 @@ def test_plan_cluster_equijoin_no_cartesian(spark):
     assert not any("__va" in x + y or "__vb" in x + y for x, y in folds)
 
 
-@pytest.mark.parametrize("mode", ["dominated", "components"])
-def test_degenerate_vectors_are_never_duplicates(spark, mode):
+@pytest.mark.parametrize("contract", ["dominated", "components"])
+def test_degenerate_vectors_are_never_duplicates(spark, contract):
     # zero-norm, empty and NULL-holding vectors have no direction: they
     # neither lose to nor absorb any row (a 0/0 cosine must not abort the
     # job under ANSI)
@@ -157,15 +228,10 @@ def test_degenerate_vectors_are_never_duplicates(spark, mode):
         (5, 0, []),
         (6, 0, [1.0, None]),
     ]
-    got = _result(semantic_dedup(_df(spark, rows), "label", threshold=0.9, mode=mode))
+    got = _run(spark, rows, 0.9, contract)
     assert got == {0: (False, None), 1: (True, 0), 2: (False, None),
                    3: (False, None), 4: (False, None), 5: (False, None),
                    6: (False, None)}
-
-
-def test_mode_validation(spark):
-    with pytest.raises(ValueError, match="mode"):
-        semantic_dedup(_df(spark, [(0, 0, [1.0])]), "label", mode="greedy")
 
 
 def test_output_column_collision_raises(spark):

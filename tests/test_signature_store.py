@@ -200,6 +200,24 @@ def test_stream_ingest_near_dup_cross_restart(spark, tmp_path):
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 5, 7}
 
 
+def test_stream_ingest_near_dup_rejects_long_band_layout(spark, tmp_path):
+    """word_minhash_signatures always makes 8 hashes, so a layout needing
+    more positions (5 bands x 2 rows) raises at the call site, before any
+    stream starts, instead of failing inside the first micro-batch."""
+    from htrc_feature_reader_spark.streaming.dedup import stream_ingest_near_dup
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "one two three four")], _SCHEMA).write.parquet(src)
+    before = len(spark.streams.active)
+    with pytest.raises(ValueError, match="exceeds the 8 MinHash positions"):
+        stream_ingest_near_dup(
+            spark.readStream.schema(_SCHEMA).parquet(src),
+            str(tmp_path / "store"), str(tmp_path / "out"),
+            str(tmp_path / "ck"), n_bands=5, rows_per_band=2)
+    assert len(spark.streams.active) == before
+    assert not (tmp_path / "ck").exists()
+
+
 def test_verification_discriminates_vs_store(spark):
     """At 4 bands x 2 rows and threshold 0.25, any band collision already
     implies 2/8 agreement — verification is vacuous there. This pins the

@@ -90,9 +90,18 @@ def test_split_validation(docs):
         split_by_hash(docs, {"a": 0.0})
 
 
-def test_shuffle_sequences_total_order_and_determinism(docs):
-    out = shuffle_sequences(docs, key_col="doc_id", num_partitions=5)
-    rows = out.select("shuffle_key", "doc_id").collect()  # collect preserves
+def test_shuffle_sequences_total_order_and_determinism(spark, docs):
+    # AQE would coalesce 2000 rows into one partition; keep the range
+    # layout's partitions so the order is checked across their boundaries
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        out = shuffle_sequences(docs, key_col="doc_id")
+        rows = out.select("shuffle_key", "doc_id").collect()  # collect keeps
+        assert out.select(F.spark_partition_id()).distinct().count() > 1
+    finally:
+        spark.conf.set(conf, prev)
     keys = [(r["shuffle_key"], r["doc_id"]) for r in rows]  # partition order
     assert keys == sorted(keys)  # globally sorted across partition boundaries
     assert len(keys) == 2000
@@ -100,10 +109,10 @@ def test_shuffle_sequences_total_order_and_determinism(docs):
     ids = [k for _, k in keys]
     assert ids != sorted(ids)
     # deterministic run-over-run
-    again = shuffle_sequences(docs, key_col="doc_id", num_partitions=5)
+    again = shuffle_sequences(docs, key_col="doc_id")
     assert [(r[0], r[1]) for r in again.select("shuffle_key", "doc_id").collect()] == keys
     # a different seed is a different permutation
-    other = shuffle_sequences(docs, key_col="doc_id", seed=30, num_partitions=5)
+    other = shuffle_sequences(docs, key_col="doc_id", seed=30)
     assert [r["doc_id"] for r in other.select("doc_id").collect()] != ids
     # no affine lattice: consecutive output ids must not walk a handful of
     # fixed strides (the bare affine hash yields ~2 distinct differences)

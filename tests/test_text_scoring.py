@@ -21,7 +21,7 @@ def test_bm25_hand_computed(spark):
         [("d1", "a", 2), ("d1", "b", 1), ("d2", "a", 1), (None, "a", 4)],
         "htid string, token string, count long",
     )
-    rows = {(r["htid"], r["token"]): r for r in bm25(tc, k1=1.2, b=0.75).collect()}
+    rows = {(r["htid"], r["token"]): r for r in bm25(tc).collect()}
     assert set(rows) == {("d1", "a"), ("d1", "b"), ("d2", "a")}
 
     def ref(tf, dl, df, n=2, avgdl=2.0, k1=1.2, b=0.75):
