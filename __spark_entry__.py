@@ -59,9 +59,34 @@ from htrc_feature_reader_spark.operators.text import BPE_ISH_PATTERN, quality_fe
 
 PAGE_SIZE = 40  # tokens per synthetic "page" of a document
 
+# Read schema of every driver table, exactly as Spark infers it from the
+# parquet footers (pandas-written timestamps read as timestamp_ntz; every
+# field nullable). Declaring it spares each read a footer-inference job.
+_SCHEMAS = {
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+              "value double, props string",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+                "c_mktsegment string",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+              "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+                "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+                "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int, "
+            "p_retailprice double",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+}
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Driver table ``name`` under ``sf_dir``, read with its declared schema."""
+    if name not in _SCHEMAS:
+        raise ValueError(f"undeclared driver table {name!r}: add its schema to _SCHEMAS")
+    return spark.read.schema(_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,8 +133,8 @@ _SH_BITS = 16
 _SH_PAIR_BANDS = 4
 _SH_A, _SH_B = simhash_coeffs(_MH_SEED)
 
-# one oracle for all three as-of physical variants (union-window, merge
-# strategy, salted) — they must agree cell-for-cell by construction
+# one oracle for all three as-of variants (asof_purchase_view, asof_salted,
+# asof_auto_salt) — they must agree cell-for-cell by construction
 _ASOF_PURCHASE_SQL = """
   SELECT p.event_id, p.user_id, p.ts, v.view_value
   FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
@@ -3148,17 +3173,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the formal CORRECTNESS artifact (which records the
-    first 50 entries) accumulates green rows per query across rounds
-    (documented rotation policy, VERDICT r3/r4). Round-5 ordering: this
-    round's 15 NEW operators (no formal row yet) first, then the 25
-    queries whose only formal row is r4, then the first 10 of the
-    queries that sat out the r4 artifact (formal green in BOTH r2 and
-    r3). Below the cap: everything already holds >= 2 formal rows, and
-    the FULL 101-query surface is live-checked every round by
-    scripts/check_oracle.py."""
+    """The 100 declared queries, each checked against its ``oracle_sql()``
+    entry by scripts/check_oracle.py. The CORRECTNESS artifact records
+    the first 50 entries, so the key order is part of the contract: the
+    comments below group the keys by the artifact rows each one held when
+    the order was fixed."""
     return {
-        # --- new this round (round 5) ---
+        # --- added in round 5 ---
         "asof_nearest": q_asof_nearest,
         "distinct_sampled": q_distinct_sampled,
         "temporal_split": q_temporal_split,

@@ -139,7 +139,7 @@ def _bench_incremental(spark, sf_dir: str) -> tuple[float, dict]:
 
     tmp = tempfile.mkdtemp(prefix="bench_inc_")
     dp, sp, outd = (os.path.join(tmp, k) for k in ("dig", "sig", "out"))
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = entrymod._t(spark, sf_dir, "documents")
     # same config as the oracle-checked incremental_clean query: stop cap
     # neutralized (forbidden incrementally), 0.25 verification threshold
     cfg = CleanConfig(stop_shingle_frac=1.0, near_dup_threshold=0.25)

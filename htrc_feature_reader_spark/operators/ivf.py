@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import _job
 from .similarity import cosine, norm
 
 
@@ -68,10 +69,11 @@ def ivf_index(
     """
     if n_centroids < 1:
         raise ValueError(f"ivf_index needs n_centroids >= 1, got {n_centroids}")
-    seeds = (
-        emb.orderBy(id_col).limit(n_centroids)
-        .select(id_col, vec_col).collect()
-    )
+    with _job("ivf_index: seed collect"):
+        seeds = (
+            emb.orderBy(id_col).limit(n_centroids)
+            .select(id_col, vec_col).collect()
+        )
     if not seeds:
         raise ValueError("ivf_index got an empty corpus: no vector to seed the codebook")
     centroids = [
@@ -82,13 +84,14 @@ def ivf_index(
             "__bucket", _nearest_centroid(F.col(vec_col), centroids)
         )
         dims = len(centroids[0][1])
-        sums = assigned.groupBy("__bucket").agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(F.element_at(vec_col, d + 1).cast("double")).alias(f"__s{d}")
-                for d in range(dims)
-            ],
-        ).collect()
+        with _job("ivf_index: Lloyd iteration"):
+            sums = assigned.groupBy("__bucket").agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[
+                    F.sum(F.element_at(vec_col, d + 1).cast("double")).alias(f"__s{d}")
+                    for d in range(dims)
+                ],
+            ).collect()
         new = {
             r["__bucket"]: [r[f"__s{d}"] / r["__n"] for d in range(dims)]
             for r in sums

@@ -11,6 +11,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import _job
+
 
 def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
     """An empty DataFrame of the DDL ``schema``, planned on the JVM alone.
@@ -90,7 +92,9 @@ def compact_shard_store(
     deduped relation is pinned (localCheckpoint) so it is fully read
     BEFORE the overwrite starts — an overwrite whose source still lazily
     scans the target would read its own partially-deleted input."""
-    compacted = dedup(read_shard_store(spark, path, schema)).localCheckpoint(
-        eager=True
-    )
-    compacted.write.mode("overwrite").parquet(path)
+    with _job("compact_shard_store: pin"):
+        compacted = dedup(read_shard_store(spark, path, schema)).localCheckpoint(
+            eager=True
+        )
+    with _job("compact_shard_store: overwrite"):
+        compacted.write.mode("overwrite").parquet(path)

@@ -70,6 +70,19 @@ def test_compact_store(spark, tmp_path):
     assert ingest_batch(_docs(spark, [(9, "same"), (10, "new")]), p).count() == 1
 
 
+def test_compaction_jobs_are_labelled(spark, tmp_path, job_labels):
+    """The pin that reads the store whole and the overwrite that replaces
+    it run under ``compact_shard_store:`` descriptions."""
+    p = str(tmp_path / "store")
+    for i in range(2):
+        append_digests(
+            _docs(spark, [(i, "same")]).withColumn(
+                "digest", F.md5(F.col("text").cast("binary"))), p)
+    descs = job_labels(lambda: compact_digest_store(spark, p))
+    assert set(descs) == {"compact_shard_store: pin", "compact_shard_store: overwrite"}, descs
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
 def test_string_id_rejected_eagerly(spark, tmp_path):
     """A string doc_id must raise BEFORE any write: with ANSI off it
     would silently store keep_id NULL and the next compact would collapse

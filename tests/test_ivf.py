@@ -5,13 +5,14 @@ exact."""
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import _t
 from htrc_feature_reader_spark.operators.ivf import ivf_index, ivf_topk
 from htrc_feature_reader_spark.operators.similarity import cosine_topk
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    return _t(spark, "/root/testdata/sf0.001", "embeddings")
 
 
 @pytest.fixture(scope="module")
@@ -59,6 +60,12 @@ def test_ivf_buckets_partition_corpus(emb, index):
     assert sum(per_bucket.values()) == n  # every vector in exactly one bucket
     assert len(per_bucket) > 1  # the quantizer actually splits the space
 
+
+def test_index_jobs_are_labelled(emb, job_labels):
+    """The seed collect and every Lloyd iteration's collect run under an
+    ``ivf_index:`` description."""
+    descs = job_labels(lambda: ivf_index(emb, n_centroids=4, n_iters=2))
+    assert set(descs) == {"ivf_index: seed collect", "ivf_index: Lloyd iteration"}, descs
 
 
 @pytest.mark.parametrize(
